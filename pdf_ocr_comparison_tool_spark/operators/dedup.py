@@ -296,53 +296,36 @@ def _release_local_checkpoint(df: DataFrame) -> None:
             )
 
 
-_OBS_TIMEOUT_SEC = 30.0  # decays to a short probe after a miss, resets on success
+_OBS_TIMEOUT_SEC = 30.0  # full convergence-poll budget per round
+_OBS_PROBE_SEC = 2.0  # the budget after a round whose metric never came
 
 
-def _changed_from_observation(obs, fallback_df: DataFrame, timeout_sec: float | None = None) -> int:
+def _changed_from_observation(obs, fallback_df: DataFrame, timeout_sec: float) -> tuple[int, bool]:
     """Read the per-round changed-label count from the Observation
-    attached to the label-update job. The metric is produced by the
-    SAME action that materializes the round's localCheckpoint, so the
-    convergence check costs zero extra jobs. Bounded poll + fallback:
-    if the listener ever stops firing for RDD-materialize actions (a
-    Spark-internal behavior we verified on 4.1 but don't control), scan
-    the already-checkpointed frame instead of hanging in ``obs.get`` —
-    and DECAY on failure instead of disabling outright: one missed
-    round (e.g. a listener hiccup under tenant load) drops the poll
-    budget to a 2 s probe — bounded cost per later round — while a
-    successful round restores the full budget, so a transient never
-    permanently disables the zero-extra-job path."""
-    global _OBS_TIMEOUT_SEC
+    attached to the label-update job: ``(changed, observed)``. The
+    metric is produced by the SAME action that materializes the round's
+    localCheckpoint, so the convergence check costs zero extra jobs.
+    Bounded poll + fallback: if the listener ever stops firing for
+    RDD-materialize actions (a Spark-internal behavior we verified on
+    4.1 but don't control), scan the already-checkpointed frame instead
+    of hanging in ``obs.get``, and report ``observed=False`` so the
+    caller can shrink its next poll budget. Stateless: the budget is
+    the caller's, never module state."""
     import time
 
-    budget = _OBS_TIMEOUT_SEC if timeout_sec is None else timeout_sec
-    deadline = time.monotonic() + budget
+    deadline = time.monotonic() + timeout_sec
     try:
         jo = obs._jo
         while time.monotonic() < deadline:
             if jo.getRowOrEmpty().isDefined():
-                _OBS_TIMEOUT_SEC = 30.0  # recovered
-                return int(obs.get["changed"] or 0)
+                return int(obs.get["changed"] or 0), True
             time.sleep(0.02)
     except Exception:  # pragma: no cover - py4j accessor drift
         pass
-    if _OBS_TIMEOUT_SEC > 2.0:
-        _OBS_TIMEOUT_SEC = 2.0
-        import warnings
-
-        warnings.warn(
-            "Observation metrics did not arrive for a localCheckpoint "
-            "materialize; dropping the convergence poll to a 2 s probe "
-            "and falling back to aggregate scans of the checkpointed "
-            "labels (recovers automatically on the next observed round)",
-            RuntimeWarning,
-        )
-    return int(
-        fallback_df.agg(
-            F.sum(F.col("chg").cast("long")).alias("changed")
-        ).first()["changed"]
-        or 0
-    )
+    changed = fallback_df.agg(
+        F.sum(F.col("chg").cast("long")).alias("changed")
+    ).first()["changed"]
+    return int(changed or 0), False
 
 
 def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
@@ -395,6 +378,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     )
     labels = labels_ckpt
     converged = False
+    budget = _OBS_TIMEOUT_SEC
     for _ in range(max_iters):
         msgs = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
@@ -424,7 +408,23 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             .observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
             .localCheckpoint()  # eager: this job also emits the metric
         )
-        changed = _changed_from_observation(obs, new_labels)
+        changed, observed = _changed_from_observation(obs, new_labels, budget)
+        # DECAY on a miss instead of disabling outright: one missed round
+        # (e.g. a listener hiccup under tenant load) drops the poll to a
+        # short probe — bounded cost per later round — while an observed
+        # round restores the full budget, so a transient never disables
+        # the zero-extra-job path. The budget lives in this call only.
+        if not observed and budget > _OBS_PROBE_SEC:
+            import warnings
+
+            warnings.warn(
+                "Observation metrics did not arrive for a localCheckpoint "
+                "materialize; dropping the convergence poll to a 2 s probe "
+                "and falling back to aggregate scans of the checkpointed "
+                "labels (recovers on the next observed round)",
+                RuntimeWarning,
+            )
+        budget = _OBS_TIMEOUT_SEC if observed else _OBS_PROBE_SEC
         # release the RDD blocks of the superseded round's checkpoint
         # (the checkpoint frame itself, not a projection over it — the
         # release accessor needs the LogicalRDD at the plan root)

@@ -336,13 +336,23 @@ def match_pages(
     # pair set). The tags make cross-type equality (a voucher date
     # string equal to a ref amount string) impossible, exactly like the
     # separate joins; per-key cap groups are unchanged because the tags
-    # partition the key space into the same per-type groups.
+    # partition the key space into the same per-type groups. Each side
+    # is coalesced to an empty array: concat is NULL if either input is,
+    # and a NULL dates array must not drop the page's amount keys (the
+    # oracle explodes the two arrays separately).
     def _bks(dates_col: str, amounts_col: str):
+        empty = F.array().cast("array<string>")
         return F.concat(
-            F.transform(dates_col, lambda d: F.concat(F.lit("d:"), d)),
-            F.transform(
-                amounts_col,
-                lambda a: F.concat(F.lit("a:"), normalize_amount(a)),
+            F.coalesce(
+                F.transform(dates_col, lambda d: F.concat(F.lit("d:"), d)),
+                empty,
+            ),
+            F.coalesce(
+                F.transform(
+                    amounts_col,
+                    lambda a: F.concat(F.lit("a:"), normalize_amount(a)),
+                ),
+                empty,
             ),
         )
 

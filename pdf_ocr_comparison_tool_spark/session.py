@@ -3,7 +3,8 @@
 Local-mode defaults mirror what we would set per-executor on a real
 cluster: shuffle partitions sized to cores (not the 200 default), AQE
 on for runtime coalescing + skew-join splitting, Arrow on for every
-pandas interchange, UTC so DuckDB-oracle comparisons are stable.
+pandas interchange, UTC so DuckDB-oracle comparisons are stable, and a
+codegen cache large enough to hold a whole query's generated classes.
 """
 
 from __future__ import annotations
@@ -47,6 +48,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # one match pass generates ~154 distinct classes; the default
+        # 100-entry LRU cache never hits on that cyclic pattern, so every
+        # warm run would recompile them all
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

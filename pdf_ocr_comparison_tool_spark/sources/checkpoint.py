@@ -10,9 +10,13 @@ Python anti-join). The Spark-native equivalent:
   (``part = md5(doc_id) % n``) — partition membership is a pure function
   of the data, never of cluster topology, so a re-run assigns every doc
   to the same part;
-* each completed part commits its data file together with a **lineage
-  row** (part, doc/span counts, wall ms, run id) — the lineage table is
-  the checkpoint manifest;
+* each completed part commits **one data file** (the batch is
+  hash-partitioned on ``part`` before the partitioned write, so exactly
+  one task writes each part) together with a **lineage row** (part,
+  doc/span counts, wall ms, run id) — the lineage table is the
+  checkpoint manifest, one file per commit, built in the JVM as a join
+  of the batch's part ids onto stats read back from the committed
+  files (no Python rows, so a commit starts no Python worker);
 * resume = ``left_anti`` join of the input's parts against committed
   lineage parts, then process only the remainder. Parts are atomic:
   a killed run leaves either (data+lineage) or nothing for each part,
@@ -54,10 +58,14 @@ def committed_parts(spark: SparkSession, out_dir: str) -> DataFrame:
     part with deterministic precedence (lowest run_id wins; wall_ms
     breaks a same-run tie). Every manifest consumer (resume anti-join,
     stats, n_parts adoption) goes through here, so a duplicated append
-    can never double-count."""
+    can never double-count. The empty manifest is a typed zero-row
+    range, so it too stays in the JVM."""
     path = os.path.join(out_dir, "_lineage")
     if not os.path.isdir(path) or not os.listdir(path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        cols = (c.split() for c in LINEAGE_SCHEMA.split(","))
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(n) for n, t in cols]
+        )
     from pyspark.sql import Window
 
     w = Window.partitionBy("part").orderBy("run_id", "wall_ms")
@@ -94,9 +102,14 @@ def write_parts_batch(
     recomputes those parts and dynamic-overwrite replaces them
     atomically per partition directory.
 
-    Per-part stats are aggregated from the files just committed (no
-    second execution of the extraction DAG); ``wall_ms`` records the
-    batch job wall for each of its parts.
+    Layout: the batch is hash-partitioned on ``part`` before the write,
+    so each ``data/part=*`` directory holds exactly ONE parquet file
+    (not one per task × part), and the commit appends exactly one
+    lineage file. The lineage rows are built in the JVM — the batch's
+    part ids left-joined onto per-part stats aggregated from the files
+    just committed (no second execution of the extraction DAG, no
+    Python rows) — and ``wall_ms`` records the batch job wall for each
+    of its parts.
     """
     from ..operators.extraction import extract_ordered_spans
 
@@ -123,6 +136,7 @@ def commit_transformed_parts(
     data_path = os.path.join(out_dir, "data")
     (
         transformed.filter(F.col("part").isin(parts))
+        .repartition("part")  # one writer task, so one file, per part
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part")
@@ -131,9 +145,7 @@ def commit_transformed_parts(
     wall_ms = int((time.perf_counter() - t0) * 1000)
     written = spark.read.parquet(data_path).filter(F.col("part").isin(parts))
     n_spans = (
-        F.coalesce(F.sum(F.size("spans")), F.lit(0))
-        if "spans" in written.columns
-        else F.lit(0).cast("long")
+        F.sum(F.size("spans")) if "spans" in written.columns else F.lit(0)
     )
     stats = written.groupBy("part").agg(
         F.count("*").alias("n_docs"),
@@ -142,13 +154,22 @@ def commit_transformed_parts(
     # one lineage row for EVERY part in the batch — a part whose data
     # yields zero output rows still counts as committed (stats default
     # to 0/0), or it would be re-selected on every resume forever
-    stat_map = {r["part"]: (r["n_docs"], r["n_spans"]) for r in stats.collect()}
-    rows = [
-        (p, n_parts, *stat_map.get(p, (0, 0)), wall_ms, run_id)
-        for p in parts
-    ]
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
-        os.path.join(out_dir, "_lineage")
+    (
+        spark.range(n_parts)
+        .select(F.col("id").cast("int").alias("part"))
+        .filter(F.col("part").isin(parts))
+        .join(stats, "part", "left")
+        .select(
+            "part",
+            F.lit(n_parts).cast("int").alias("n_parts"),
+            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
+            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
+            F.lit(run_id).alias("run_id"),
+        )
+        .coalesce(1)  # one lineage file per commit
+        .write.mode("append")
+        .parquet(os.path.join(out_dir, "_lineage"))
     )
 
 
@@ -177,9 +198,7 @@ def run_extraction_job(
     with_part = docs.withColumn("part", part_col(F.col("doc_id"), n_parts))
     todo = [
         r["part"]
-        for r in remaining_parts(
-            with_part.select("part").distinct(), committed_parts(spark, out_dir)
-        )
+        for r in remaining_parts(with_part.select("part").distinct(), existing)
         .orderBy("part")
         .collect()
     ]
@@ -247,10 +266,7 @@ def run_corpus_job(
         )
         todo = [
             r["part"]
-            for r in remaining_parts(
-                admitted.select("part").distinct(),
-                committed_parts(spark, out_dir),
-            )
+            for r in remaining_parts(admitted.select("part").distinct(), existing)
             .orderBy("part")
             .collect()
         ]
@@ -290,7 +306,7 @@ def publish_training_shards(
 # per (sf_dir, spec) so the manifest queries are repeatable.
 CKPT_FIXTURE_N_PARTS = 8
 CKPT_FIXTURE_COMMIT = 6  # parts committed before the simulated kill
-_CKPT_FIXTURE_VERSION = 1
+_CKPT_FIXTURE_VERSION = 2  # 2: one data file per part
 
 
 def ensure_partial_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -4,6 +4,7 @@ planner."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -50,6 +51,65 @@ def test_kill_and_resume_exactly_once(spark):
 
         # idempotence: a third run has nothing to do
         assert cp.run_extraction_job(spark, docs, out, run_id="r3") == 0
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_commit_writes_one_file_per_part(spark):
+    """Every committed data/part=* directory holds exactly one parquet
+    file, however many input partitions feed the commit."""
+    docs = synth.spans_df(spark, SF_DIR).repartition(7)
+    with tempfile.TemporaryDirectory() as out:
+        assert cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=8) == 8
+        data = os.path.join(out, "data")
+        dirs = [d for d in os.listdir(data) if d.startswith("part=")]
+        assert len(dirs) == 8
+        for d in dirs:
+            assert len(_parquet_files(os.path.join(data, d))) == 1, d
+
+
+def test_empty_part_gets_zero_lineage_row(spark):
+    """A batch part with zero output rows still gets a 0/0 lineage row
+    (or resume would re-select it forever); the other rows carry the
+    stats of the committed files."""
+    out_df = extraction.extract_ordered_spans(synth.spans_df(spark, SF_DIR))
+    with_part = out_df.withColumn("part", cp.part_col(F.col("doc_id"), 4))
+    with tempfile.TemporaryDirectory() as out:
+        cp.commit_transformed_parts(
+            spark, with_part.filter(F.col("part") != 2), [0, 1, 2, 3], out, "r1", 4
+        )
+        lin = {
+            r["part"]: (r["n_docs"], r["n_spans"])
+            for r in cp.committed_parts(spark, out).collect()
+        }
+        data = {
+            r["part"]: (r["n"], r["s"])
+            for r in cp.read_output(spark, out)
+            .groupBy("part")
+            .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
+            .collect()
+        }
+    assert lin == {**data, 2: (0, 0)}
+    assert set(lin) == {0, 1, 2, 3}
+
+
+def test_commit_appends_one_lineage_file(spark):
+    """Each commit appends exactly one lineage file, whatever its batch
+    size."""
+    docs = synth.spans_df(spark, SF_DIR)
+    with tempfile.TemporaryDirectory() as out:
+        lineage = os.path.join(out, "_lineage")
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            cp.run_extraction_job(
+                spark, docs, out, run_id="r1", n_parts=8, fail_after_parts=3
+            )
+        assert len(_parquet_files(lineage)) == 1
+        assert cp.run_extraction_job(spark, docs, out, run_id="r2", n_parts=8) == 5
+        assert len(_parquet_files(lineage)) == 2
+        assert cp.run_extraction_job(spark, docs, out, run_id="r3", n_parts=8) == 0
+        assert len(_parquet_files(lineage)) == 2
 
 
 def test_part_assignment_stable(spark):
@@ -160,6 +220,15 @@ def test_corpus_job_kill_rerun_exactly_once(spark):
         assert n2 == 4
         spark.catalog.clearCache()
         assert rows(clean) == rows(resumed)
+        # the resumed layout: one file per part, one lineage file per
+        # commit, lineage totals equal to the committed rows
+        parts = [d for d in os.listdir(f"{resumed}/data") if d.startswith("part=")]
+        assert len(parts) == 6
+        for d in parts:
+            assert len(_parquet_files(f"{resumed}/data/{d}")) == 1, d
+        assert len(_parquet_files(f"{resumed}/_lineage")) == 2
+        lin = cp.committed_parts(spark, resumed)
+        assert lin.agg({"n_docs": "sum"}).collect()[0][0] == len(rows(clean))
         man = cp.publish_training_shards(spark, resumed, f"{tdir}/final")
         got = man.agg({"n_docs": "sum"}).collect()[0][0]
         assert got == len(rows(clean))

@@ -210,6 +210,20 @@ def test_connected_components_empty_pairs(spark):
     assert out.columns == ["doc_id", "cluster_id", "keep"]
 
 
+def test_cc_poll_fallback_leaves_module_state(spark):
+    """When the convergence metric never arrives, the poll falls back
+    to scanning the checkpointed labels and reports the miss to its
+    caller; the decaying budget is the caller's, not module state."""
+    from types import SimpleNamespace
+
+    missing = SimpleNamespace(isDefined=lambda: False)
+    obs = SimpleNamespace(_jo=SimpleNamespace(getRowOrEmpty=lambda: missing))
+    labels = spark.createDataFrame([(True,), (False,), (True,)], "chg boolean")
+    budget = dedup._OBS_TIMEOUT_SEC
+    assert dedup._changed_from_observation(obs, labels, 0.05) == (2, False)
+    assert dedup._OBS_TIMEOUT_SEC == budget
+
+
 def test_containment_relations(spark):
     """All four relation branches on crafted pairs (fed directly — the
     operator is a pair scorer; subset pairs are exactly what banded

@@ -45,3 +45,49 @@ def test_exact_dup_probe_gets_sim_one(spark):
     assert exact_probes, "fixture must contain exact duplicates"
     for k in exact_probes:
         assert got[k] == 1.0, k
+
+
+def test_null_key_array_keeps_other_blocking_keys(spark):
+    """A NULL dates array must not drop a page's amount keys (concat of
+    a NULL array is NULL): the probe still blocks onto the reference
+    page that shares only its amount, which the one-row fallback
+    (first reference page in order, a non-match) would never reach."""
+    schema = (
+        "doc_id long, page_num int, text string, text_hash string, "
+        "dates array<string>, amounts array<string>"
+    )
+    v = spark.createDataFrame(
+        [(1, 1, "invoice acme corp total due 1,250.00", "v1", None, ["1,250.00"])],
+        schema,
+    )
+    r = spark.createDataFrame(
+        [
+            (10, 1, "unrelated filler page", "r10", ["2020-01-01"], ["9.99"]),
+            (11, 1, "invoice acme corp total due 1250.00", "r11", None, ["1250.00"]),
+        ],
+        schema,
+    )
+    got = matching.match_pages(v, r, fallback_cap=1).collect()
+    assert {(x["t_doc"], x["t_page"]) for x in got} == {(11, 1)}
+
+
+def test_warm_match_query_compiles_nothing(spark):
+    """The codegen cache holds a whole match query's generated classes:
+    once warm, a run of the query compiles no class (with Spark's
+    default 100-entry cache every warm run recompiled ~50). AQE's
+    runtime join choice is timing-dependent, so the first run that
+    meets a new plan variant compiles its 2-3 stages; the query gets
+    up to four warm runs to reach zero."""
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    q = Q.queries()["match_best"]
+    counts: list[int] = []
+    while len(counts) < 5 and (len(counts) < 2 or counts[-1]):
+        before = compiled.getCount()
+        q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+        counts.append(compiled.getCount() - before)
+    assert counts[-1] == 0, counts
+    assert max(counts[1:]) <= 5, counts
