@@ -1235,7 +1235,8 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("checkpoint_parts", oracle=O.checkpoint_parts_sql(G.DUCK))
 def q_checkpoint_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8-S10 manifest surface over a REAL partially-committed
-    checkpoint dir (extraction job killed after 6 of 8 part commits):
+    checkpoint dir (extraction job killed after appending lineage for 6
+    of the 8 parts it wrote):
     committed_parts (run-fenced manifest read) + remaining_parts
     (anti-join resume set) as one per-part view, oracled against a
     relational recount of the extraction output."""
@@ -2290,12 +2291,8 @@ _QUERY_ORDER = [
     "media_phash",
     "length_quantiles",
     # rotated back in (r3-green tail of round 4)
-    "page_keywords",
-    "timeline",
     "engine_cascade_stats",
-    "page_quality",
     "events_session_window",
-    "keyword_top",
     "engine_cascade",
     "type_islands",
     "match_best_jaccard",
@@ -2316,6 +2313,15 @@ _QUERY_ORDER = [
     # unchanged, rotated to the tail for them
     "compaction_plan",
     "match_best",
+    # changed in round 6 and not driver-verified since: cosine_scorer's
+    # only consumer, the page classifier and its per-document majority,
+    # and the project-detection cascade (page_keywords, timeline,
+    # page_quality and keyword_top, untouched since round 5, rotated
+    # to the tail for them)
+    "match_best_cosine",
+    "classify_pages",
+    "project_detect",
+    "doc_majority_type",
     # ---- displaced from the head for the twelve never-driver-verified
     # queries above (six governance rows + media_captions,
     # filter_funnel, epochs_per_source, shard_assign, funnel_by_source,
@@ -2338,7 +2344,6 @@ _QUERY_ORDER = [
     "ann_lsh_search",
     "ann_ivf_search",
     "lineitem_rollup",
-    "doc_majority_type",
     "match_cosine_pairs",
     "match_summary_wide",
     "dedup_exact",
@@ -2371,7 +2376,6 @@ _QUERY_ORDER = [
     "line_dedup",
     "span_stats",
     "media_manifest",
-    "match_best_cosine",
     "match_merged",
     "doc_processing_stats",
     "pack_manifest",
@@ -2397,11 +2401,9 @@ _QUERY_ORDER = [
     "source_rollup",
     "name_conflict_seq",
     "page_features",
-    "classify_pages",
     "match_topk",
     "match_summary",
     "dedup_exact_pages",
-    "project_detect",
     "dedup_minhash_lsh",
     "dedup_winnow_pairs",
     "dedup_simhash_pairs",
@@ -2483,6 +2485,11 @@ _QUERY_ORDER = [
     # rotated out of the head for compaction_plan and match_best
     "events_topk",
     "events_pivot",
+    # rotated out of the head for the four round-6 rows above
+    "page_keywords",
+    "timeline",
+    "page_quality",
+    "keyword_top",
 ]
 
 

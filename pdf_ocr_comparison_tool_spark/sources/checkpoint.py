@@ -10,17 +10,24 @@ Python anti-join). The Spark-native equivalent:
   (``part = md5(doc_id) % n``) — partition membership is a pure function
   of the data, never of cluster topology, so a re-run assigns every doc
   to the same part;
-* each completed part commits **one data file** (the batch is
-  hash-partitioned on ``part`` before the partitioned write, so exactly
-  one task writes each part) together with a **lineage row** (part,
-  doc/span counts, wall ms, run id) — the lineage table is the
-  checkpoint manifest, one file per commit, built in the JVM as a join
-  of the batch's part ids onto stats read back from the committed
-  files (no Python rows, so a commit starts no Python worker);
-* resume = ``left_anti`` join of the input's parts against committed
-  lineage parts, then process only the remainder. Parts are atomic:
-  a killed run leaves either (data+lineage) or nothing for each part,
-  so re-running yields exactly-once output.
+* the lineage table is the checkpoint **manifest**: one row per
+  committed part (part, doc/span counts, wall ms, run id), appended as
+  one file per commit after the part's data;
+* a run reads the manifest ONCE (at most ``n_parts`` rows) and the
+  manifest alone decides what it writes: if every part id is committed
+  it stops before building or reading its input; otherwise it commits
+  the transformed frame filtered to the parts NOT in the manifest in
+  one write — one data file per part, the batch being whatever parts
+  the data holds — and then appends the lineage rows, built in the JVM
+  from stats read back from the files just written (no Python rows, so
+  a commit starts no Python worker). A part whose docs all transform
+  away writes nothing and is never committed, so it is never selected
+  either.
+
+Parts are atomic: the lineage append is the commit point, and a run
+killed between the data write and the append leaves data without
+lineage, which the next run recomputes and dynamic overwrite replaces
+per part directory — re-running yields exactly-once output.
 
 On Iceberg this maps 1:1 to snapshot commits; the parquet-directory
 implementation below keeps the same contract for the sandbox.
@@ -50,18 +57,21 @@ def part_col(doc_id_col, n_parts: int) -> "F.Column":
 def committed_parts(spark: SparkSession, out_dir: str) -> DataFrame:
     """The checkpoint manifest: ONE authoritative lineage row per part.
 
-    Run fencing: two racing (or zombie) writers can both pass the
-    anti-join before either commits and double-append lineage rows for
+    Run fencing: two racing (or zombie) writers can both read the
+    manifest before either commits and double-append lineage rows for
     the same part. The DATA stays byte-identical — every transform is
     deterministic and the dynamic partition overwrite replaces the same
     directory — so the race is resolved at read-back: deduplicate by
     part with deterministic precedence (lowest run_id wins; wall_ms
-    breaks a same-run tie). Every manifest consumer (resume anti-join,
-    stats, n_parts adoption) goes through here, so a duplicated append
-    can never double-count. The empty manifest is a typed zero-row
-    range, so it too stays in the JVM."""
+    breaks a same-run tie). Every manifest consumer (resume, stats,
+    n_parts adoption) goes through here, so a duplicated append can
+    never double-count. The lineage is read with its fixed schema: no
+    inference job, and a directory holding no committed file yet (a run
+    killed inside its first append leaves only ``_temporary/``) reads
+    as empty. A missing manifest is a typed zero-row range, so it too
+    stays in the JVM."""
     path = os.path.join(out_dir, "_lineage")
-    if not os.path.isdir(path) or not os.listdir(path):
+    if not os.path.isdir(path):
         cols = (c.split() for c in LINEAGE_SCHEMA.split(","))
         return spark.range(0).select(
             *[F.lit(None).cast(t).alias(n) for n, t in cols]
@@ -70,7 +80,8 @@ def committed_parts(spark: SparkSession, out_dir: str) -> DataFrame:
 
     w = Window.partitionBy("part").orderBy("run_id", "wall_ms")
     return (
-        spark.read.parquet(path)
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(path)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -84,58 +95,59 @@ def remaining_parts(
     return all_parts.join(lineage.select("part"), "part", "left_anti")
 
 
-def write_parts_batch(
-    spark: SparkSession,
-    with_part: DataFrame,
-    parts: list[int],
-    out_dir: str,
-    run_id: str,
-    n_parts: int,
-) -> None:
-    """Commit a BATCH of parts in ONE Spark job (dynamic partition
-    overwrite), then append their lineage rows as the commit point.
-
-    One job for all remaining parts instead of one job per part — at
-    n_parts ≈ 10⁴ the per-job driver serialization dominates wall time
-    (round-1 verdict); batching keeps exactly-once semantics because a
-    killed run leaves data files WITHOUT lineage rows, and the next run
-    recomputes those parts and dynamic-overwrite replaces them
-    atomically per partition directory.
-
-    Layout: the batch is hash-partitioned on ``part`` before the write,
-    so each ``data/part=*`` directory holds exactly ONE parquet file
-    (not one per task × part), and the commit appends exactly one
-    lineage file. The lineage rows are built in the JVM — the batch's
-    part ids left-joined onto per-part stats aggregated from the files
-    just committed (no second execution of the extraction DAG, no
-    Python rows) — and ``wall_ms`` records the batch job wall for each
-    of its parts.
-    """
-    from ..operators.extraction import extract_ordered_spans
-
-    out = extract_ordered_spans(with_part.filter(F.col("part").isin(parts)))
-    commit_transformed_parts(spark, out, parts, out_dir, run_id, n_parts)
+def read_manifest(
+    spark: SparkSession, out_dir: str, n_parts: int
+) -> tuple[int, list[int]]:
+    """``(n_parts, committed part ids)`` from ONE collect of the
+    manifest. Resume safety: the partition count is part of the
+    checkpoint identity — a different n_parts would re-key every doc
+    and double-write — so the committed run's n_parts is adopted."""
+    rows = committed_parts(spark, out_dir).select("part", "n_parts").collect()
+    return (rows[0]["n_parts"] if rows else n_parts), [r["part"] for r in rows]
 
 
 def commit_transformed_parts(
     spark: SparkSession,
     transformed: DataFrame,
-    parts: list[int],
+    committed: list[int],
     out_dir: str,
     run_id: str,
     n_parts: int,
-) -> None:
-    """Commit an already-transformed, part-keyed frame for the given
-    parts (dynamic partition overwrite + lineage append). Shared by the
-    extraction job (whose narrow transform commutes with the part
-    filter, so it pre-filters) and the corpus job (whose dedup verdict
-    is GLOBAL — it must transform the full corpus and only then filter
-    to the batch, or a resumed run would compute cluster keeps against
-    a partial corpus and disagree with the original run)."""
+    fail_after_parts: int | None = None,
+) -> int:
+    """Commit an already-transformed, part-keyed frame: every part NOT
+    in ``committed`` (the manifest the caller read) is written in ONE
+    write (dynamic partition overwrite), then its lineage rows are
+    appended as the commit point. Returns the number of parts
+    committed, counted by an Observation on the lineage write.
+
+    The batch is the data itself — the parts the filtered frame holds —
+    so no part is ever selected and yet empty. Layout: the frame is
+    hash-partitioned on ``part`` before the write, so each
+    ``data/part=*`` directory holds exactly ONE parquet file, and the
+    commit appends exactly one lineage file, or none when the write
+    produced no rows. The lineage rows are per-part stats read back
+    from the files just written (no second execution of the transform,
+    no Python rows); ``wall_ms`` is the data write's wall for each of
+    its parts.
+
+    ``fail_after_parts=k`` simulates a kill between the data write and
+    the lineage append: every remaining part's data is written, lineage
+    is appended for the lowest ``k`` parts written, and it raises.
+
+    Shared by the extraction job (whose narrow transform commutes with
+    the part filter) and the corpus job (whose dedup verdict is GLOBAL —
+    it transforms the full corpus and only then filters, or a resumed
+    run would compute cluster keeps against a partial corpus and
+    disagree with the original run)."""
+    from pyspark.sql import Observation
+
+    todo = transformed.filter(~F.col("part").isin(committed))
+    wrote, counted = Observation(), Observation()
     t0 = time.perf_counter()
     data_path = os.path.join(out_dir, "data")
     (
-        transformed.filter(F.col("part").isin(parts))
+        todo.observe(wrote, F.count(F.lit(1)).alias("rows"))
         .repartition("part")  # one writer task, so one file, per part
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -143,34 +155,35 @@ def commit_transformed_parts(
         .parquet(data_path)
     )
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    written = spark.read.parquet(data_path).filter(F.col("part").isin(parts))
-    n_spans = (
-        F.sum(F.size("spans")) if "spans" in written.columns else F.lit(0)
-    )
-    stats = written.groupBy("part").agg(
-        F.count("*").alias("n_docs"),
-        n_spans.alias("n_spans"),
-    )
-    # one lineage row for EVERY part in the batch — a part whose data
-    # yields zero output rows still counts as committed (stats default
-    # to 0/0), or it would be re-selected on every resume forever
-    (
-        spark.range(n_parts)
-        .select(F.col("id").cast("int").alias("part"))
-        .filter(F.col("part").isin(parts))
-        .join(stats, "part", "left")
-        .select(
-            "part",
+    n = 0
+    if wrote.get["rows"]:
+        written = (
+            spark.read.schema(todo.schema)
+            .parquet(data_path)
+            .filter(~F.col("part").isin(committed))
+        )
+        n_spans = (
+            F.sum(F.size("spans")) if "spans" in written.columns else F.lit(0)
+        )
+        lineage = written.groupBy("part").agg(
             F.lit(n_parts).cast("int").alias("n_parts"),
-            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+            F.count("*").cast("long").alias("n_docs"),
+            n_spans.cast("long").alias("n_spans"),
             F.lit(wall_ms).cast("long").alias("wall_ms"),
             F.lit(run_id).alias("run_id"),
         )
-        .coalesce(1)  # one lineage file per commit
-        .write.mode("append")
-        .parquet(os.path.join(out_dir, "_lineage"))
-    )
+        if fail_after_parts is not None:
+            lineage = lineage.orderBy("part").limit(fail_after_parts)
+        (
+            lineage.observe(counted, F.count(F.lit(1)).alias("parts"))
+            .coalesce(1)  # one lineage file per commit
+            .write.mode("append")
+            .parquet(os.path.join(out_dir, "_lineage"))
+        )
+        n = counted.get["parts"]
+    if fail_after_parts is not None:
+        raise RuntimeError(f"simulated failure after {n} parts")
+    return n
 
 
 def run_extraction_job(
@@ -181,33 +194,24 @@ def run_extraction_job(
     n_parts: int = 8,
     fail_after_parts: int | None = None,
 ) -> int:
-    """Resumable extraction job: batched part commit + anti-join resume.
-
-    ``fail_after_parts`` simulates a mid-job kill for the resume test
-    (commits only that many parts, then raises). Returns the number of
-    parts processed in this run.
+    """Resumable extraction job, driven by its manifest: a fully
+    committed directory returns 0 without reading ``docs``; otherwise
+    the parts the manifest lacks are extracted and committed in one
+    write (``commit_transformed_parts``, whose ``fail_after_parts``
+    simulates a kill between data write and lineage append). Returns
+    the number of parts committed in this run.
     """
-    # resume safety: partition count is part of the checkpoint identity —
-    # a different n_parts would re-key every doc and double-write. Adopt
-    # the committed run's n_parts if one exists.
-    existing = committed_parts(spark, out_dir)
-    first = existing.select("n_parts").limit(1).collect()
-    if first:
-        n_parts = first[0]["n_parts"]
+    from ..operators.extraction import extract_ordered_spans
 
-    with_part = docs.withColumn("part", part_col(F.col("doc_id"), n_parts))
-    todo = [
-        r["part"]
-        for r in remaining_parts(with_part.select("part").distinct(), existing)
-        .orderBy("part")
-        .collect()
-    ]
-    batch = todo if fail_after_parts is None else todo[:fail_after_parts]
-    if batch:
-        write_parts_batch(spark, with_part, batch, out_dir, run_id, n_parts)
-    if fail_after_parts is not None:
-        raise RuntimeError(f"simulated failure after {len(batch)} parts")
-    return len(batch)
+    n_parts, committed = read_manifest(spark, out_dir, n_parts)
+    if set(range(n_parts)) <= set(committed):
+        return 0
+    out = extract_ordered_spans(
+        docs.withColumn("part", part_col(F.col("doc_id"), n_parts))
+    )
+    return commit_transformed_parts(
+        spark, out, committed, out_dir, run_id, n_parts, fail_after_parts
+    )
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -226,13 +230,14 @@ def run_corpus_job(
 ) -> int:
     """Resumable corpus-build job: admission verdict (exact dedup →
     near-dup cluster keep → length/quality/repetition) + deterministic
-    split over the FULL corpus, committed in content-keyed part batches
-    with anti-join resume — the LLM-ingest twin of run_extraction_job.
+    split over the FULL corpus, committed per content-keyed part and
+    driven by the manifest — the LLM-ingest twin of run_extraction_job.
+    A fully committed directory returns 0 before the verdict is built.
 
-    The verdict is recomputed over the whole input on every run (never
-    just the remaining parts): a doc's near-dup keep depends on OTHER
-    docs, so a partial-corpus verdict would disagree with the original
-    run after a crash. Recomputation is safe because every stage is
+    Otherwise the verdict runs ONCE, over the whole input (never just
+    the remaining parts): a doc's near-dup keep depends on OTHER docs,
+    so a partial-corpus verdict would disagree with the original run
+    after a crash. Recomputation is safe because every stage is
     deterministic; only the WRITES are incremental. Output rows:
     (doc_id, source, text, split, part) for admitted docs only.
     ``quality_model`` (opt-in) adds the trained linear-scorer stage to
@@ -243,11 +248,9 @@ def run_corpus_job(
     """
     from ..operators.pipeline import corpus_filter, data_split
 
-    existing = committed_parts(spark, out_dir)
-    first = existing.select("n_parts").limit(1).collect()
-    if first:
-        n_parts = first[0]["n_parts"]
-
+    n_parts, committed = read_manifest(spark, out_dir, n_parts)
+    if set(range(n_parts)) <= set(committed):
+        return 0
     cached: list[DataFrame] = []
     try:
         verdict = (
@@ -264,20 +267,10 @@ def run_corpus_job(
             .join(data_split(docs).select("doc_id", "split"), "doc_id")
             .withColumn("part", part_col(F.col("doc_id"), n_parts))
         )
-        todo = [
-            r["part"]
-            for r in remaining_parts(admitted.select("part").distinct(), existing)
-            .orderBy("part")
-            .collect()
-        ]
-        batch = todo if fail_after_parts is None else todo[:fail_after_parts]
-        if batch:
-            commit_transformed_parts(
-                spark, admitted, batch, out_dir, run_id, n_parts
-            )
-        if fail_after_parts is not None:
-            raise RuntimeError(f"simulated failure after {len(batch)} parts")
-        return len(batch)
+        return commit_transformed_parts(
+            spark, admitted, committed, out_dir, run_id, n_parts,
+            fail_after_parts,
+        )
     finally:
         # release the verdict's cached frames even on the simulated-kill
         # path — a resume loop in one long-lived session must not
@@ -306,17 +299,16 @@ def publish_training_shards(
 # per (sf_dir, spec) so the manifest queries are repeatable.
 CKPT_FIXTURE_N_PARTS = 8
 CKPT_FIXTURE_COMMIT = 6  # parts committed before the simulated kill
-_CKPT_FIXTURE_VERSION = 2  # 2: one data file per part
+_CKPT_FIXTURE_VERSION = 3  # 3: kill between data write and lineage append
 
 
 def ensure_partial_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return a checkpoint output dir where the REAL
-    extraction job committed the first CKPT_FIXTURE_COMMIT of
-    CKPT_FIXTURE_N_PARTS content-keyed parts and was then killed
-    (``fail_after_parts``) — the state the resume / manifest surface
-    exists for. Deterministic: parts are hash_bucket(doc_id) keyed and
-    the batch takes the lowest remaining part ids, so the committed set
-    is a pure function of the input table. Built atomically (tmp dir +
+    extraction job wrote all CKPT_FIXTURE_N_PARTS content-keyed parts,
+    appended lineage for the lowest CKPT_FIXTURE_COMMIT of them and was
+    then killed (``fail_after_parts``) — the state the resume / manifest
+    surface exists for. Deterministic: parts are hash_bucket(doc_id)
+    keyed, so the committed set is a pure function of the input table. Built atomically (tmp dir +
     rename) so concurrent builders can't interleave."""
     import hashlib
     import shutil

@@ -70,16 +70,16 @@ def test_commit_writes_one_file_per_part(spark):
             assert len(_parquet_files(os.path.join(data, d))) == 1, d
 
 
-def test_empty_part_gets_zero_lineage_row(spark):
-    """A batch part with zero output rows still gets a 0/0 lineage row
-    (or resume would re-select it forever); the other rows carry the
-    stats of the committed files."""
+def test_empty_part_never_reselected(spark):
+    """A part whose docs all transform away writes nothing and is never
+    committed, so it is never selected either: the next resume over the
+    manifest returns 0 and appends no lineage file. The committed rows
+    carry the stats of the committed files."""
     out_df = extraction.extract_ordered_spans(synth.spans_df(spark, SF_DIR))
     with_part = out_df.withColumn("part", cp.part_col(F.col("doc_id"), 4))
+    transformed = with_part.filter(F.col("part") != 2)
     with tempfile.TemporaryDirectory() as out:
-        cp.commit_transformed_parts(
-            spark, with_part.filter(F.col("part") != 2), [0, 1, 2, 3], out, "r1", 4
-        )
+        assert cp.commit_transformed_parts(spark, transformed, [], out, "r1", 4) == 3
         lin = {
             r["part"]: (r["n_docs"], r["n_spans"])
             for r in cp.committed_parts(spark, out).collect()
@@ -91,8 +91,80 @@ def test_empty_part_gets_zero_lineage_row(spark):
             .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
             .collect()
         }
-    assert lin == {**data, 2: (0, 0)}
-    assert set(lin) == {0, 1, 2, 3}
+        assert lin == data
+        assert set(lin) == {0, 1, 3}
+        n_parts, committed = cp.read_manifest(spark, out, 4)
+        assert (n_parts, sorted(committed)) == (4, [0, 1, 3])
+        assert cp.commit_transformed_parts(
+            spark, transformed, committed, out, "r2", n_parts
+        ) == 0
+        assert len(_parquet_files(os.path.join(out, "_lineage"))) == 1
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn's result, number of Spark jobs it ran under ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_noop_resume_never_reads_input(spark):
+    """A resume of a fully committed directory reads only the manifest:
+    given a poisoned input (evaluating it raises) it returns 0 and runs
+    at most 3 jobs."""
+    docs = synth.spans_df(spark, SF_DIR)
+    poisoned = docs.filter(F.raise_error(F.lit("input was read")).isNull())
+    with pytest.raises(Exception, match="input was read"):
+        poisoned.collect()
+    with tempfile.TemporaryDirectory() as out:
+        assert cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=8) == 8
+        done, jobs = _jobs_in_group(
+            spark, "ckpt-noop-resume",
+            lambda: cp.run_extraction_job(spark, poisoned, out, run_id="r2"),
+        )
+        assert done == 0
+        assert jobs <= 3, jobs
+        assert len(_parquet_files(os.path.join(out, "_lineage"))) == 1
+
+
+def test_fresh_run_reads_input_once(spark):
+    """A fresh run commits every part from ONE pass over its input: no
+    separate pre-scan to find the parts to do."""
+    docs = synth.spans_df(spark, SF_DIR)
+    n_docs = docs.count()
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(b.num_rows)
+            yield b
+
+    counted = docs.mapInArrow(count_rows, docs.schema)
+    with tempfile.TemporaryDirectory() as out:
+        assert cp.run_extraction_job(spark, counted, out, run_id="r1", n_parts=8) == 8
+        assert seen.value == n_docs
+        assert cp.committed_parts(spark, out).agg(F.sum("n_docs")).first()[0] == n_docs
+
+
+def test_resume_after_kill_in_first_lineage_append(spark):
+    """A run killed inside its first lineage append leaves only
+    ``_lineage/_temporary/``; the manifest reads as empty and the
+    resume commits every part."""
+    docs = synth.spans_df(spark, SF_DIR)
+    with tempfile.TemporaryDirectory() as out:
+        attempt = os.path.join(out, "_lineage", "_temporary", "0", "_temporary")
+        os.makedirs(attempt)
+        open(os.path.join(attempt, "part-00000.snappy.parquet"), "wb").close()
+        assert cp.committed_parts(spark, out).count() == 0
+        assert cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=8) == 8
+        lin = cp.committed_parts(spark, out)
+        assert lin.count() == 8
+        assert lin.agg(F.sum("n_docs")).first()[0] == docs.count()
 
 
 def test_commit_appends_one_lineage_file(spark):
@@ -235,7 +307,7 @@ def test_corpus_job_kill_rerun_exactly_once(spark):
 
 
 def test_corpus_job_racing_writers_fenced(spark):
-    """Run fencing: a zombie writer that passed the anti-join before
+    """Run fencing: a zombie writer that read an empty manifest before
     the live run committed double-appends lineage rows for the same
     parts. The manifest must resolve to ONE authoritative row per part
     (lowest run_id precedence), the data must stay byte-identical to a
@@ -268,8 +340,8 @@ def test_corpus_job_racing_writers_fenced(spark):
         cp.run_corpus_job(spark, docs, raced, run_id="runA", n_parts=n_parts)
         spark.catalog.clearCache()
         # the zombie: replays the job's commit for ALL parts under a
-        # later run id — exactly a second writer whose anti-join ran
-        # before runA's lineage append
+        # later run id — exactly a second writer whose manifest read
+        # (empty) ran before runA's lineage append
         admitted = (
             docs.select("doc_id", "source", "text")
             .join(corpus_filter(docs).filter(F.col("keep")).select("doc_id"), "doc_id")
@@ -277,7 +349,7 @@ def test_corpus_job_racing_writers_fenced(spark):
             .withColumn("part", cp.part_col(F.col("doc_id"), n_parts))
         )
         cp.commit_transformed_parts(
-            spark, admitted, list(range(n_parts)), raced, "runB", n_parts
+            spark, admitted, [], raced, "runB", n_parts
         )
         spark.catalog.clearCache()
         # raw lineage really does hold the double append …
