@@ -16,7 +16,7 @@ DataFrame dataflow:
   (the reference algorithm's exact while-loop semantics, including the
   odd-run behaviour on self-overlapping pairs).
 
-Each iteration localCheckpoints its (tiny) state and argmax frames —
+Each iteration materializes its (tiny) state and argmax frames —
 the CC pattern: without the cut, every iteration's plan TREE embeds ~4
 copies of the previous one (Catalyst sees trees, not DAGs) and 6
 merges compile 4^6 subtrees. Values are unaffected, so the DuckDB
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from .dedup import tokens_col
 
 BPE_MERGES = 6
@@ -120,24 +121,21 @@ def _run_merges(
     docs: DataFrame, n_merges: int, wf: DataFrame | None = None
 ) -> tuple[list[DataFrame], DataFrame]:
     """The shared fit loop: returns (per-iteration merge frames, FINAL
-    (word, freq, syms) state). The final state is a live
-    localCheckpoint — bpe_fit releases it (unused there); bpe_encode's
-    result depends on it, so there it stays alive for the session
-    (same lifetime contract as the kmeans-fitted centroid tables).
-    Pass a precomputed ``wf`` (word_freqs frame) to skip the corpus
-    tokenization pass (``--job tokenize`` shares one across fit +
-    vocab)."""
-    from .dedup import _release_local_checkpoint
-
+    (word, freq, syms) state). The final state is a live checkpoint —
+    bpe_fit releases it (unused there); bpe_encode's result depends on
+    it, so there it lives until the caller's scope closes (the
+    materialize.py contract). Pass a precomputed ``wf`` (word_freqs
+    frame) to skip the corpus tokenization pass (``--job tokenize``
+    shares one across fit + vocab)."""
     if wf is None:
         wf = word_freqs(docs)
-    state = wf.select(
-        "word", "freq", F.split(F.col("word"), "").alias("syms")
-    ).localCheckpoint()
+    state = materialize(
+        wf.select("word", "freq", F.split(F.col("word"), "").alias("syms"))
+    )
     merges = []
     for i in range(1, n_merges + 1):
         cnt = _pair_counts(state)
-        best = (
+        best = materialize(
             cnt.orderBy(F.desc("pf"), F.asc("sym"), F.asc("nxt"))
             .limit(1)
             .select(
@@ -145,7 +143,6 @@ def _run_merges(
                 F.col("nxt").alias("br"),
                 F.col("pf").alias("pair_freq"),
             )
-            .localCheckpoint()
         )
         merges.append(
             best.select(
@@ -156,8 +153,8 @@ def _run_merges(
                 F.col("pair_freq").cast("long").alias("pair_freq"),
             )
         )
-        new_state = _apply_merge(state, best).localCheckpoint()
-        _release_local_checkpoint(state)
+        new_state = materialize(_apply_merge(state, best))
+        release(state)
         state = new_state
     return merges, state
 
@@ -167,8 +164,6 @@ def bpe_fit(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     table (merge_rank, lhs, rhs, merged, pair_freq) — the artifact a
     subword tokenizer loads. Deterministic: ties on pair frequency
     break lexicographically."""
-    from .dedup import _release_local_checkpoint
-
     if n_merges <= 0:
         # degenerate case, same as the Python reference bpe_fit_py:
         # an empty merge table with the standard schema
@@ -179,7 +174,7 @@ def bpe_fit(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
         )
 
     merges, state = _run_merges(docs, n_merges)
-    _release_local_checkpoint(state)
+    release(state)
     return _union_merges(merges)
 
 

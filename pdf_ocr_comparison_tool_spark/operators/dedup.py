@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
+
 NUM_HASHES = 16
 BAND_SIZE = 4  # 4 bands x 4 rows
 SHINGLE_K = 3
@@ -268,34 +270,6 @@ def verified_near_dups(
 CC_MAX_ITERS = 25
 
 
-_RELEASE_WARNED = False
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the executor storage blocks of a superseded localCheckpoint
-    frame. ``DataFrame.unpersist()`` only covers cache-manager entries;
-    a localCheckpoint persists its internal RDD directly, which stays
-    in executor storage until driver GC collects the frame — across
-    CC rounds those superseded blocks accumulate. Best-effort: if the
-    internal accessor moves in a future Spark, GC-based cleanup still
-    applies — but warn once so a silently-broken release is visible."""
-    global _RELEASE_WARNED
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as exc:  # pragma: no cover - Spark-internal accessor
-        if not _RELEASE_WARNED:
-            _RELEASE_WARNED = True
-            import warnings
-
-            warnings.warn(
-                "localCheckpoint block release failed (Spark internal "
-                f"accessor moved?): {exc!r}; falling back to GC-based "
-                "cleanup — executor storage may accumulate across "
-                "iterative rounds",
-                RuntimeWarning,
-            )
-
-
 _OBS_TIMEOUT_SEC = 30.0  # full convergence-poll budget per round
 _OBS_PROBE_SEC = 2.0  # the budget after a round whose metric never came
 
@@ -354,14 +328,14 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     paid a full new×old label join + count per round, which doubled
     round latency and amplified ambient host load across ~50 small
     jobs). ``localCheckpoint`` truncates the lineage each round so the
-    plan doesn't grow with iterations.
+    plan doesn't grow with iterations; the superseded round's
+    checkpoint is released as soon as the next one exists.
     """
     from pyspark.sql import Observation
-    sym = (
+    sym = materialize(
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     # init fused with round 1: starting from lbl=node, the first
     # propagation round computes least(node, min neighbor id) — exactly
@@ -370,13 +344,11 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     # (one fewer driver-synchronized iteration; final labels unchanged
     # because CC converges to the component min from any initial
     # assignment along the same propagation lattice)
-    labels_ckpt = (
+    labels = materialize(
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("_mn"))
         .select("node", F.least(F.col("node"), F.col("_mn")).alias("lbl"))
-        .localCheckpoint()
     )
-    labels = labels_ckpt
     converged = False
     budget = _OBS_TIMEOUT_SEC
     for _ in range(max_iters):
@@ -396,7 +368,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             F.coalesce("lbl2", F.col("lbl")),
         )
         obs = Observation()
-        new_labels = (
+        new_labels = materialize(  # eager: this job also emits the metric
             labels.join(msgs, "node", "left")
             .join(hop, "lbl", "left")
             .select(
@@ -406,7 +378,6 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             )
             .withColumnRenamed("new_lbl", "lbl")
             .observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
-            .localCheckpoint()  # eager: this job also emits the metric
         )
         changed, observed = _changed_from_observation(obs, new_labels, budget)
         # DECAY on a miss instead of disabling outright: one missed round
@@ -425,18 +396,14 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
                 RuntimeWarning,
             )
         budget = _OBS_TIMEOUT_SEC if observed else _OBS_PROBE_SEC
-        # release the RDD blocks of the superseded round's checkpoint
-        # (the checkpoint frame itself, not a projection over it — the
-        # release accessor needs the LogicalRDD at the plan root)
-        _release_local_checkpoint(labels_ckpt)
-        labels_ckpt = new_labels
+        release(labels)  # the superseded round's checkpoint
         labels = new_labels.drop("chg")
         if changed == 0:
             converged = True
             break
     # the result frame derives only from the final (already
     # materialized) labels checkpoint; the edge table is done
-    _release_local_checkpoint(sym)
+    release(sym)
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
@@ -822,7 +789,6 @@ def incremental_dedup(
     new: DataFrame,
     threshold: float = 0.5,
     max_bucket: int = MAX_BUCKET,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Incremental-ingest dedup — the production shape of 'a new crawl
     lands against a 10¹²-doc existing corpus': verdict for every NEW
@@ -839,10 +805,9 @@ def incremental_dedup(
     come from a band-bucket equi-join of new×old signatures with the
     hot-bucket guard applied to the OLD (unbounded) side; the best
     match per new doc is groupBy-max + arg-min join, never a window.
-    Each side's tokenize+shingle+minhash build is cached because two
-    branches read it (banding, and its side of the Jaccard verify);
-    pass ``cache_registry`` to own the unpersist (the corpus_filter
-    contract), else the frames stay cached for the session."""
+    Each side's tokenize+shingle+minhash build is materialized because
+    two branches read it (banding, and its side of the Jaccard
+    verify)."""
     from .features import text_hash
 
     oldh = old_corpus_hashes(old)
@@ -850,16 +815,8 @@ def incremental_dedup(
         "doc_id", text_hash(F.col("text")).alias("h")
     ).join(oldh, "h", "left").select("doc_id", "exact_dup_of")
 
-    # registry callers own the unpersist → cache; one-shot callers get
-    # the plan-truncating eager localCheckpoint (corpus_filter pattern)
-    if cache_registry is not None:
-        osig = with_minhash(old).cache()
-        nsig = with_minhash(new).cache()
-        cache_registry.append(osig)
-        cache_registry.append(nsig)
-    else:
-        osig = with_minhash(old).localCheckpoint()
-        nsig = with_minhash(new).localCheckpoint()
+    osig = materialize(with_minhash(old))
+    nsig = materialize(with_minhash(new))
     ob = _band_rows(osig).select(
         F.col("doc_id").alias("o_id"), "band", "bucket"
     )

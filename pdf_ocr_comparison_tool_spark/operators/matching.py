@@ -210,7 +210,6 @@ def match_pages(
     fallback_cap: int = C.FALLBACK_CAP,
     ref_per_key_cap: int | None = None,
     sim_fn=None,
-    feature_cols: tuple[str, ...] | None = None,
     pair_scorer=None,
     broadcast_refs: bool = False,
     best_only: bool = False,
@@ -222,10 +221,8 @@ def match_pages(
 
     Scoring contract: either ``pair_scorer(pairs, vouchers', refs')`` —
     a relational scorer mapping the pair set to (probe, t_doc, t_page,
-    sim) rows (the cosine path; ``feature_cols`` names precomputed
-    per-page columns to carry into both sides, reference side
-    t_-prefixed) — or ``sim_fn`` over the (text, t_text) column pair
-    (default: levenshtein with its exact length prefilter).
+    sim) rows (the cosine path) — or ``sim_fn`` over the (text, t_text)
+    column pair (default: levenshtein with its exact length prefilter).
 
     ``ref_per_key_cap``: None (default) = the reference's EXACT
     semantics — every index page sharing a blocking key is scored
@@ -252,9 +249,8 @@ def match_pages(
     windowed path needs. Use for every best-match consumer; keep False
     when downstream reads rn > 1 (match_topk, rn≤2 pair probes).
     """
-    extra = list(feature_cols or ())
     v = vouchers.select(
-        "doc_id", "page_num", "text", "text_hash", "dates", "amounts", *extra
+        "doc_id", "page_num", "text", "text_hash", "dates", "amounts"
     )
     r = refs.select(
         F.col("doc_id").alias("t_doc"),
@@ -263,7 +259,6 @@ def match_pages(
         F.col("text_hash").alias("t_hash"),
         F.col("dates").alias("t_dates"),
         F.col("amounts").alias("t_amounts"),
-        *[F.col(c).alias(f"t_{c}") for c in extra],
     )
 
     # J1 — exact hash short-circuit (broadcast only on explicit opt-in;
@@ -277,11 +272,12 @@ def match_pages(
     # rest/cand feed multiple downstream branches (blocking, anti-join,
     # scoring); cache them so the branches don't recompute the upstream
     # DAG — the dataflow analogue of the reference's materialized
-    # candidate lists (content_matcher.py:291-306). Cache LIFETIME is
-    # owned by the caller: a long-lived session should
-    # spark.catalog.clearCache() after materializing the result (bench
-    # and the test suite do), since library code cannot know when the
-    # returned lazy DataFrame is done being consumed.
+    # candidate lists (content_matcher.py:291-306). These two lazy
+    # caches are the package's one exception to materialize.py: they
+    # sit on the timed match path, so swapping them needs its own
+    # interleaved benchmark. A long-lived session frees them with
+    # spark.catalog.clearCache() after its last action on the result
+    # (bench and the test suite do).
     rest = v.join(exact_probes, _PROBE, "left_anti").cache()
 
     # J2/J3 — blocking joins on exploded date / normalized-amount keys.

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from . import dedup, textstats
 from .features import hash_bucket, text_hash
 
@@ -819,7 +820,6 @@ def pack_manifest(docs: DataFrame, ctx: int = CTX_TOKENS) -> DataFrame:
 
 def corpus_filter(
     docs: DataFrame,
-    cache_registry: list | None = None,
     quality_model: DataFrame | None = None,
     decontaminate: bool = False,
 ) -> DataFrame:
@@ -836,17 +836,7 @@ def corpus_filter(
     (dedup.decontaminate, GPT-3 appendix-C) and give contaminated docs
     the ``contaminated`` drop reason, ranked after
     ``model_low_quality``. Default (False) leaves the verdict — and
-    its oracle — unchanged.
-
-    Cache LIFETIME is owned by the caller (same contract as
-    matching.match_pages): the MinHash signature frame below is cached
-    because three branches read it (banding, and both sides of the
-    Jaccard verify); library code cannot know when the returned lazy
-    frame is done. Callers that materialize the result inside a
-    long-lived session (e.g. checkpoint.run_corpus_job) pass a
-    ``cache_registry`` list — every frame this function caches is
-    appended to it so the caller can ``unpersist()`` after its action,
-    instead of nuking the whole session cache with clearCache()."""
+    its oracle — unchanged."""
     quality = textstats.text_quality(docs).select("doc_id", "quality")
     rep = textstats.text_repetition(docs).select(
         "doc_id", "n_tokens", "top_2gram_char_frac", "dup_3gram_frac"
@@ -860,18 +850,12 @@ def corpus_filter(
     exact = hashed.join(keepers, "h").select(
         "doc_id", (F.col("doc_id") == F.col("keep_doc")).alias("exact_keep")
     )
-    # signature frame feeds band generation + both verify sides. With a
-    # caller-owned registry (long-lived sessions) it is CACHED so the
-    # caller's unpersist() frees it; one-shot callers get an eager
-    # localCheckpoint instead — same one materialization, but the plan
-    # truncates to a LogicalRDD leaf, so the ~15 downstream DataFrame
-    # ops stop re-analyzing the signature subtree (the featured-pages
-    # lesson: analyzer time was a third of the dedup-chain wall)
-    if cache_registry is not None:
-        withsig = dedup.with_minhash(docs).cache()
-        cache_registry.append(withsig)
-    else:
-        withsig = dedup.with_minhash(docs).localCheckpoint()
+    # signature frame feeds band generation + both verify sides: one
+    # materialization, and the plan truncates to a LogicalRDD leaf, so
+    # the ~15 downstream DataFrame ops stop re-analyzing the signature
+    # subtree (the featured-pages lesson: analyzer time was a third of
+    # the dedup-chain wall)
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     verified = dedup.verified_near_dups(withsig, pairs).select("a", "b")
     clusters = dedup.connected_components(verified).select(
@@ -934,9 +918,7 @@ FUNNEL_STAGES: tuple[str, ...] = (
 )
 
 
-def filter_funnel(
-    docs: DataFrame, cache_registry: list | None = None
-) -> DataFrame:
+def filter_funnel(docs: DataFrame) -> DataFrame:
     """Admission waterfall over :func:`corpus_filter`'s verdict — the
     governance table every curation report leads with: per stage (in
     the verdict's fixed precedence) how many documents that stage
@@ -949,15 +931,13 @@ def filter_funnel(
     window is ordered but bounded by ``len(FUNNEL_STAGES)`` rows BY
     CONSTRUCTION (the stage dim is a literal), never by corpus size.
     Integer-only output — no float crosses the oracle boundary."""
-    verdict = corpus_filter(docs, cache_registry=cache_registry)
+    verdict = corpus_filter(docs)
     # the ≤7-row stage-count frame feeds BOTH the stage join and the
-    # corpus total; localCheckpoint it so the full verdict DAG (quality
+    # corpus total; materialize it so the full verdict DAG (quality
     # + repetition + exact + LSH + CC) runs ONCE instead of once per
     # consumer
-    counts = (
-        verdict.groupBy("drop_reason")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint()
+    counts = materialize(
+        verdict.groupBy("drop_reason").agg(F.count("*").cast("long").alias("n"))
     )
     total = counts.agg(F.sum("n").cast("long").alias("n_corpus"))
     stages = docs.sparkSession.createDataFrame(
@@ -983,9 +963,7 @@ def filter_funnel(
     )
 
 
-def funnel_by_source(
-    docs: DataFrame, cache_registry: list | None = None
-) -> DataFrame:
+def funnel_by_source(docs: DataFrame) -> DataFrame:
     """Drop attribution by source — the question after
     :func:`filter_funnel`'s corpus-level waterfall: WHICH domains lose
     their mass to WHICH admission stage (a boilerplate-heavy host dies
@@ -999,7 +977,7 @@ def funnel_by_source(
     groupBy(source, stage) (≤ 7 stages × sources rows); the
     per-source total rides a self-keyed window over ≤ 7 rows per
     source. The only float is one int/int division."""
-    verdict = corpus_filter(docs, cache_registry=cache_registry)
+    verdict = corpus_filter(docs)
     joined = verdict.select("doc_id", "drop_reason").join(
         docs.select("doc_id", "source"), "doc_id"
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 EMB_DIM = 64
 LSH_BITS = 16
 
@@ -448,8 +450,7 @@ def knn_join(
     k neighbors emit fewer rows (approximate by design, like
     lsh_search). Emits (vec_id, rank, nbr_id, sim). ``pairs=`` lets a
     multi-consumer caller (the ``--job embed`` CLI) inject an
-    already-cached _knn_pairs frame — the caller-owned cache
-    contract."""
+    already-materialized _knn_pairs frame."""
     if pairs is None:
         pairs = _knn_pairs(embeddings, bits, max_bucket)
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
@@ -482,7 +483,7 @@ def hard_negatives(
     (vec_id, label) projection; the ranking window is keyed by the
     anchor itself, fan-in ≤ bucket size. Emits
     (vec_id, label, neg_rank, neg_id, neg_label, sim). ``pairs=`` is
-    the caller-owned cache hook (shared _knn_pairs build)."""
+    the shared-build hook (a materialized _knn_pairs frame)."""
     if pairs is None:
         pairs = _knn_pairs(embeddings, bits, max_bucket)
     own = embeddings.select("vec_id", "label")
@@ -536,31 +537,30 @@ def pagerank_centrality(
     the oracle boundary bit-equal.
 
     Scale shape: edges ride knn_join's LSH bucket equi-join
-    (hot-bucket guarded, localCheckpoint'ed ONCE so the LSH subtree
+    (hot-bucket guarded, materialized ONCE so the LSH subtree
     isn't recomputed per round — the CC pattern); in-degree (fold
     fan-in) is bounded by the bucket cap; each round is two equi-joins
     + one map-side-groupable aggregate. No window, no global
     aggregate, no driver round-trips beyond the fixed loop. ``knn=``
-    injects an already-cached knn_join frame (caller-owned cache —
-    the ``--job embed`` CLI); the localCheckpoint is then skipped
-    since the caller's cache already cuts the LSH subtree."""
+    injects an already-materialized knn_join frame (the ``--job
+    embed`` CLI); the edge checkpoint is then skipped since the
+    caller's already cuts the LSH subtree."""
     base = knn if knn is not None else knn_join(embeddings, k, bits, max_bucket)
     edges = base.select(
         F.col("vec_id").alias("src"), F.col("nbr_id").alias("dst")
     )
     if knn is None:
-        edges = edges.localCheckpoint()
+        edges = materialize(edges)
     # out-degree and node dims are referenced by EVERY round's nested
-    # plan — eager localCheckpoints materialize each once (tiny frames)
+    # plan — eager checkpoints materialize each once (tiny frames)
     # instead of once per iteration (A/B 3.37 → 2.87 s at sf0.1)
-    out = edges.groupBy("src").agg(
-        F.count("*").cast("long").alias("out_cnt")
-    ).localCheckpoint()
-    nodes = (
+    out = materialize(
+        edges.groupBy("src").agg(F.count("*").cast("long").alias("out_cnt"))
+    )
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     ranks = nodes.select("node", F.lit(1.0).alias("r"))
     for _ in range(iters):
@@ -617,7 +617,7 @@ def dedup_signal_agreement(
 
     # cache-before-branch: the shingle + 16-minhash fold feeds band
     # generation AND both verification sides (the calibration pattern)
-    withsig = with_minhash(docs).localCheckpoint()
+    withsig = materialize(with_minhash(docs))
     tp = (
         verified_near_dups(withsig, lsh_candidate_pairs(withsig))
         .select("a", "b")
@@ -631,13 +631,12 @@ def dedup_signal_agreement(
         .otherwise("emb_only")
     )
     # ≤3-row class-count frame feeds BOTH the union total and the output
-    # join — localCheckpoint so the two pair pipelines run once, not
+    # join — materialize so the two pair pipelines run once, not
     # once per consumer (the filter_funnel pattern)
-    cnt = (
+    cnt = materialize(
         j.select(sig.alias("signal"))
         .groupBy("signal")
         .agg(F.count("*").cast("long").alias("n_pairs"))
-        .localCheckpoint()
     )
     tot = cnt.agg(F.sum("n_pairs").cast("long").alias("n_union"))
     return cnt.crossJoin(F.broadcast(tot)).select(
@@ -665,20 +664,18 @@ def triangle_count(
     one int/int double division, NULL below degree 2.
 
     Scale shape: the undirected edge list (distinct least/greatest
-    pairs, ≤ N·k rows) is localCheckpoint'ed once and every join is an
+    pairs, ≤ N·k rows) is materialized once and every join is an
     equi-join on a vertex; per-vertex join fan-out is bounded by the
     kNN degree (≤ bucket cap). No window, no global aggregate.
-    ``knn=`` injects a cached knn_join frame (caller-owned cache);
+    ``knn=`` injects a materialized knn_join frame (the embed CLI);
     the edge list is still checkpointed — it is re-referenced five
     times inside this one plan."""
     e = knn if knn is not None else knn_join(embeddings, k, bits, max_bucket)
-    und = (
+    und = materialize(
         e.select(
             F.least("vec_id", "nbr_id").alias("a"),
             F.greatest("vec_id", "nbr_id").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -1061,7 +1058,6 @@ def semdedup(
     n_centroids: int = IVF_N_CENTROIDS,
     centroids: DataFrame | None = None,
     max_cell: int = SEMDEDUP_MAX_CELL,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): the
     corpus is coarse-clustered by the k-means quantizer, candidate
@@ -1077,20 +1073,13 @@ def semdedup(
     Scale shape: at 10^12 vectors the quantizer is trained with k large
     enough that cells stay bounded (k ~ n/10k); ``max_cell`` drops
     oversized cells from PAIR GEN only, so a degenerate centroid can't
-    detonate the in-cell self-join. The assignment frame is cached
-    because four branches read it (cell sizes, both pair sides, the
-    keep-policy join-back); pass ``cache_registry`` to own the
-    unpersist (the corpus_filter contract)."""
+    detonate the in-cell self-join. The assignment frame is
+    materialized because four branches read it (cell sizes, both pair
+    sides, the keep-policy join-back) and the CC loop sits above it
+    (A/B 5.0 → 4.0 s)."""
     from .dedup import connected_components
 
-    # registry callers own the unpersist → cache; one-shot callers get
-    # the plan-truncating eager localCheckpoint (four consumers + the
-    # CC loop sit above the assignment; A/B 5.0 → 4.0 s)
-    if cache_registry is not None:
-        assign = ivf_assign(embeddings, n_centroids, centroids).cache()
-        cache_registry.append(assign)
-    else:
-        assign = ivf_assign(embeddings, n_centroids, centroids).localCheckpoint()
+    assign = materialize(ivf_assign(embeddings, n_centroids, centroids))
     ok = (
         assign.groupBy("centroid_id")
         .agg(F.count("*").alias("_n"))

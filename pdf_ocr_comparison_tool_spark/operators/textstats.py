@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from .dedup import TOKEN_RE, tokens_col
 
 # (lang, stopword) heuristic dim — deliberately tiny; argmax with 'und'
@@ -808,7 +809,7 @@ def lm_bigram_rows(docs: DataFrame) -> DataFrame:
     return _bigram_rows_from_toks(_tokenized(docs))
 
 
-def lm_score(docs: DataFrame, cache_registry: list | None = None) -> DataFrame:
+def lm_score(docs: DataFrame) -> DataFrame:
     """Per-document LM fluency score: the mean add-one-smoothed bigram
     transition probability p(cur|prev) = (C(prev,cur)+1) / (C(prev)+V),
     trained on the scored corpus (the self-trained analogue of CCNet's
@@ -816,10 +817,10 @@ def lm_score(docs: DataFrame, cache_registry: list | None = None) -> DataFrame:
     lower = gibberish or OCR noise).
 
     The tokenized corpus feeds THREE consumers (bigram count table,
-    scoring probe, unigram table) — pass ``cache_registry``
-    (caller-owned cache contract, as corpus_filter) to cache the
-    (doc_id, toks) frame once instead of re-running the regex split
-    per consumer; the caller unpersists.
+    scoring probe, unigram table), so the (doc_id, toks) frame is
+    materialized once instead of re-running the regex split per
+    consumer; the checkpoint also truncates the plan under the scoring
+    joins.
 
     Scale shape: bigram/unigram count tables are map-side-combinable
     groupBys; scoring is two equi-joins of the transition rows against
@@ -831,15 +832,7 @@ def lm_score(docs: DataFrame, cache_registry: list | None = None) -> DataFrame:
     state is bounded by document length. Docs with <2 tokens keep a
     row with n_bigrams=0 and a NULL score (a filter stage must see
     every document)."""
-    tokenized = _tokenized(docs)
-    if cache_registry is not None:
-        tokenized = tokenized.cache()
-        cache_registry.append(tokenized)
-    else:
-        # one-shot callers: eager localCheckpoint — one tokenization
-        # pass for the three consumers AND plan truncation for the
-        # scoring joins above (the corpus_filter withsig pattern)
-        tokenized = tokenized.localCheckpoint()
+    tokenized = materialize(_tokenized(docs))
     rows = _bigram_rows_from_toks(tokenized)
     uni = (
         tokenized.select(F.explode("toks").alias("tok"))
@@ -882,7 +875,7 @@ def lm_score(docs: DataFrame, cache_registry: list | None = None) -> DataFrame:
     )
 
 
-def lm_buckets(docs: DataFrame, cache_registry: list | None = None) -> DataFrame:
+def lm_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style head/middle/tail corpus split by LM fluency,
     per source (CCNet buckets per LANGUAGE by wiki-LM perplexity
     percentiles; here the grouping dim is ``source`` and the score is
@@ -901,21 +894,13 @@ def lm_buckets(docs: DataFrame, cache_registry: list | None = None) -> DataFrame
     bucket='unscored' — a filter stage must see every document.
 
     The pruned scored frame feeds TWO consumers (the bin-count frame
-    and the final label join-back); it is eagerly localCheckpoint'ed
-    so the lm_score DAG runs ONCE — uncached, Catalyst would replay
-    the full scoring joins (and the corpus scan) per branch. The
-    checkpoint stays alive for the result's lifetime (same contract as
-    the fitted k-means / BPE vocab states). With no caller-owned
-    ``cache_registry``, an internal one covers the checkpoint
-    materialization (lm_score's tokenized frame feeds three consumers
-    — uncached, the regex tokenization would run 3× inside the
-    materialize) and unpersists immediately after, since the eager
-    checkpoint is the only consumer."""
-    # with no caller-owned registry, lm_score's tokenized frame is an
-    # eager localCheckpoint (no unpersist needed — GC-released), so no
-    # internal registry is created anymore
-    scored = lm_score(docs, cache_registry)
-    s = (
+    and the final label join-back); it is materialized so the lm_score
+    DAG runs ONCE — otherwise Catalyst would replay the full scoring
+    joins (and the corpus scan) per branch. That checkpoint lives until
+    the caller's scope closes (the materialize.py contract); lm_score's
+    tokenized checkpoint is released as soon as it exists."""
+    scored = lm_score(docs)
+    s = materialize(
         scored.join(docs.select("doc_id", "source"), "doc_id")
         .select(
             "doc_id",
@@ -928,8 +913,8 @@ def lm_buckets(docs: DataFrame, cache_registry: list | None = None) -> DataFrame
             .cast("long")
             .alias("bin"),
         )
-        .localCheckpoint()
     )
+    release(scored)  # lm_score's tokenized checkpoint: s was its only reader
     binc = (
         s.filter(F.col("bin").isNotNull())
         .groupBy("source", "bin")

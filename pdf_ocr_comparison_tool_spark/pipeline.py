@@ -19,6 +19,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from . import synth
+from .materialize import materialize, scope
 from .plans.skew import salted_repartition
 from .session import get_spark
 from .sources import checkpoint as cp
@@ -48,7 +49,7 @@ def main(argv: list[str] | None = None) -> None:
         "cluster profile + sketch calibration); embed = embedding-"
         "curation suite over embeddings.parquet (kNN graph + hard "
         "negatives + label-noise screen + PageRank centrality + "
-        "triangle cohesion) off one cached candidate-pair build; "
+        "triangle cohesion) off one shared candidate-pair build; "
         "govern = the release governance bundle (dataset card + PII "
         "rollup + contamination report + mixture weights + quality "
         "agreement) as one parquet directory per table; html = DOM "
@@ -78,7 +79,15 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_spark(app_name=f"{args.job}-job", cores=args.cores)
     run_id = args.run_id or uuid.uuid4().hex[:12]
+    # every intermediate a job materializes is released when it ends
+    with scope():
+        result = _run_job(spark, args, run_id)
+    print(json.dumps(result))
+    spark.stop()
 
+
+def _run_job(spark, args, run_id: str) -> dict:
+    """Run ``args.job`` and return its one-line JSON summary."""
     if args.job == "match":
         # the reference's end-user workflow (main.py batch mode):
         # match every voucher page against the reference index, merge
@@ -88,49 +97,46 @@ def main(argv: list[str] | None = None) -> None:
         from .queries import _featured_roles, match_summary_from_best
 
         v, r = _featured_roles(spark, args.input)
-        # ONE execution of the match DAG feeds both writes (cache per
-        # matching.match_pages' caller-owned cache contract); the
-        # summary then derives from the already-written match_best
-        # parquet — previously the full multi-join pipeline recomputed
-        # ~3x across the two writes + summary
-        best = matching.with_matched_keywords(
-            matching.best_matches(
-                v,
-                matching.match_pages(
-                    v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP
+        # ONE execution of the match DAG feeds both writes; the summary
+        # then derives from the already-written match_best parquet —
+        # previously the full multi-join pipeline recomputed ~3x across
+        # the two writes + summary
+        best = materialize(
+            matching.with_matched_keywords(
+                matching.best_matches(
+                    v,
+                    matching.match_pages(
+                        v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP
+                    ),
                 ),
-            ),
-            v,
-            r,
-        ).cache()
+                v,
+                r,
+            )
+        )
         best.drop("matched_kw_arr").write.mode("overwrite").parquet(
             f"{args.output}/match_best"
         )
         merged = merge.merge_page_matches(best, keywords=True)
         merged.write.mode("overwrite").parquet(f"{args.output}/match_merged")
-        best.unpersist()
         written_best = spark.read.parquet(f"{args.output}/match_best")
         summary = match_summary_from_best(written_best)
         summary.write.mode("overwrite").parquet(f"{args.output}/match_summary")
         n_best = written_best.count()
         n_merged = spark.read.parquet(f"{args.output}/match_merged").count()
         rows = spark.read.parquet(f"{args.output}/match_summary").collect()
-        print(json.dumps({
+        return {
             "job": "match",
             "run_id": run_id,
             "pages_matched": n_best,
             "islands": n_merged,
             "status_counts": {x["status"]: x["n"] for x in rows},
-        }))
-        spark.stop()
-        return
+        }
 
     if args.job == "tokenize":
         # the tokenizer-training workflow: ONE fit run feeds all three
         # artifacts (merge table, vocab, encoded corpus) — bpe_fit /
         # bpe_encode / bpe_vocab each refit when called standalone
         from .operators import bpe
-        from .operators.dedup import _release_local_checkpoint
 
         docs = synth.load_table(spark, args.input, "documents").repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -138,7 +144,7 @@ def main(argv: list[str] | None = None) -> None:
         # ONE corpus tokenization pass feeds fit + vocab (eager
         # checkpoint; encode's positional explode is inherently a
         # second pass — it needs per-occurrence order, not counts)
-        wf = bpe.word_freqs(docs).localCheckpoint()
+        wf = materialize(bpe.word_freqs(docs))
         merge_frames, state = bpe._run_merges(docs, bpe.BPE_MERGES, wf=wf)
         merge_df = bpe._union_merges(merge_frames)
         merge_df.write.mode("overwrite").parquet(f"{args.output}/bpe_merges")
@@ -148,31 +154,27 @@ def main(argv: list[str] | None = None) -> None:
         ).parquet(f"{args.output}/bpe_vocab")
         tokens = bpe.encode_with_state(docs, state)
         tokens.write.mode("overwrite").parquet(f"{args.output}/tokens")
-        _release_local_checkpoint(state)
-        _release_local_checkpoint(wf)
         n_tokens = spark.read.parquet(f"{args.output}/tokens").count()
         n_vocab = spark.read.parquet(f"{args.output}/bpe_vocab").count()
-        print(json.dumps({
+        return {
             "job": "tokenize",
             "run_id": run_id,
             "n_merges": bpe.BPE_MERGES,
             "vocab_size": n_vocab,
             "tokens_emitted": n_tokens,
-        }))
-        spark.stop()
-        return
+        }
 
     if args.job == "dedup":
         # the dedup workflow end to end: candidates → exact-Jaccard
         # verify → CC clusters → quality-aware keeper, plus the two
         # run reports (cluster-size profile, sketch calibration) —
-        # ONE cached signature build feeds every stage
+        # ONE materialized signature build feeds every stage
         from .operators import dedup, textstats
 
         docs = synth.load_table(spark, args.input, "documents").repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
-        withsig = dedup.with_minhash(docs).cache()
+        withsig = materialize(dedup.with_minhash(docs))
         pairs = dedup.lsh_candidate_pairs(withsig)
         verified = dedup.verified_near_dups(withsig, pairs)
         clusters = dedup.connected_components(verified.select("a", "b"))
@@ -187,19 +189,16 @@ def main(argv: list[str] | None = None) -> None:
         dedup.minhash_calibration(docs, withsig=withsig).write.mode(
             "overwrite"
         ).parquet(f"{args.output}/calibration")
-        withsig.unpersist()
         written = spark.read.parquet(f"{args.output}/dedup_keep")
         n_clustered = written.count()
         n_keep = written.filter(F.col("keep_best")).count()
-        print(json.dumps({
+        return {
             "job": "dedup",
             "run_id": run_id,
             "clustered_docs": n_clustered,
             "keepers": n_keep,
             "dropped": n_clustered - n_keep,
-        }))
-        spark.stop()
-        return
+        }
 
     if args.job == "govern":
         # the release governance bundle: every dataset-card table a
@@ -232,24 +231,24 @@ def main(argv: list[str] | None = None) -> None:
             name: spark.read.parquet(f"{args.output}/{name}").count()
             for name in outputs
         }
-        print(json.dumps({"job": "govern", "run_id": run_id, "rows": card}))
-        spark.stop()
-        return
+        return {"job": "govern", "run_id": run_id, "rows": card}
 
     if args.job == "html":
         # HTML boilerplate strip end to end: one classified-block frame
-        # (cached — pruned to the columns both consumers read) feeds the
-        # per-block classification report AND the per-doc main-content
-        # strip, so the parse + window run once.
+        # (materialized — pruned to the columns both consumers read)
+        # feeds the per-block classification report AND the per-doc
+        # main-content strip, so the parse + window run once.
         from .operators import boilerplate as bp
 
-        classified = bp.classify_blocks(
-            bp.parse_blocks(synth.html_df(spark, args.input))
-        ).select(
-            "doc_id", "b", "tag", "media_ref", "text", "text_chars",
-            "n_links", "link_density", "stop_density", "cf_class",
-            "final_class",
-        ).cache()
+        classified = materialize(
+            bp.classify_blocks(
+                bp.parse_blocks(synth.html_df(spark, args.input))
+            ).select(
+                "doc_id", "b", "tag", "media_ref", "text", "text_chars",
+                "n_links", "link_density", "stop_density", "cf_class",
+                "final_class",
+            )
+        )
         blocks_report = classified.drop("text")
         content = bp.main_content(classified)
         blocks_report.write.mode("overwrite").parquet(f"{args.output}/blocks")
@@ -261,29 +260,26 @@ def main(argv: list[str] | None = None) -> None:
             F.sum("content_chars").alias("content_chars"),
             F.sum("boiler_chars").alias("boiler_chars"),
         ).collect()[0]
-        classified.unpersist()
-        print(json.dumps({
+        return {
             "job": "html", "run_id": run_id, "docs": agg["docs"],
             "blocks": agg["blocks"], "content_blocks": agg["content_blocks"],
             "content_chars": agg["content_chars"],
             "boiler_chars": agg["boiler_chars"],
-        }))
-        spark.stop()
-        return
+        }
 
     if args.job == "embed":
-        # the embedding-curation suite end to end: ONE cached
+        # the embedding-curation suite end to end: ONE materialized
         # candidate-pair build (the LSH bucket self-join — the only
-        # expensive stage) feeds the kNN graph; the cached kNN graph
-        # then feeds label noise / PageRank / triangles, so the graph
+        # expensive stage) feeds the kNN graph; the materialized kNN
+        # graph then feeds label noise / PageRank / triangles, so the graph
         # is built exactly once across the five outputs
         from .operators import similarity_search as ss
 
         emb = synth.load_table(spark, args.input, "embeddings").repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
-        pairs = ss._knn_pairs(emb, ss.LSH_SEARCH_BITS, 256).cache()
-        knn = ss.knn_join(emb, pairs=pairs).cache()
+        pairs = materialize(ss._knn_pairs(emb, ss.LSH_SEARCH_BITS, 256))
+        knn = materialize(ss.knn_join(emb, pairs=pairs))
         knn.write.mode("overwrite").parquet(f"{args.output}/knn")
         ss.hard_negatives(emb, pairs=pairs).write.mode("overwrite").parquet(
             f"{args.output}/hard_negatives"
@@ -297,11 +293,9 @@ def main(argv: list[str] | None = None) -> None:
         ss.triangle_count(emb, knn=knn).write.mode("overwrite").parquet(
             f"{args.output}/triangles"
         )
-        pairs.unpersist()
-        knn.unpersist()
         nn = spark.read.parquet(f"{args.output}/knn")
         sus = spark.read.parquet(f"{args.output}/label_noise")
-        print(json.dumps({
+        return {
             "job": "embed",
             "run_id": run_id,
             "knn_edges": nn.count(),
@@ -309,9 +303,7 @@ def main(argv: list[str] | None = None) -> None:
             "hard_negatives": spark.read.parquet(
                 f"{args.output}/hard_negatives"
             ).count(),
-        }))
-        spark.stop()
-        return
+        }
 
     if args.job == "extract":
         docs = salted_repartition(
@@ -348,8 +340,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.job == "corpus" and args.publish:
         man = cp.publish_training_shards(spark, args.output, args.publish)
         result["published_partitions"] = man.count()
-    print(json.dumps(result))
-    spark.stop()
+    return result
 
 
 if __name__ == "__main__":

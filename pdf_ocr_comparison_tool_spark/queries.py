@@ -22,6 +22,7 @@ from . import oracles as O
 from . import pagesgen as PG
 from . import sqlgen as G
 from . import synth
+from .materialize import materialize
 from .operators import (
     boilerplate,
     bpe,
@@ -223,10 +224,12 @@ def _featured_roles(spark: SparkSession, sf_dir: str):
 
 
 def _featured_from_pages(spark: SparkSession, pages: DataFrame):
-    """Feature + fold + cache the pages IR and split it into the
+    """Feature + fold + materialize the pages IR and split it into the
     (voucher, reference) roles — factored from _featured_roles so the
     scaling harness can feed a REPLICATED pages frame through the same
-    match path (bench.py SPARK_GRAFT_SCALE_JOB=match_best)."""
+    match path (bench.py SPARK_GRAFT_SCALE_JOB=match_best). Both roles
+    read one checkpoint, which lives until the caller's ``scope()``
+    closes (or is garbage-collected, unscoped): see materialize.py."""
     # the driver parquet is a single file → one input partition; the
     # per-page feature projections below (regex features, keyword
     # top-N, TF maps for cosine) are the heavy narrow work, so spread
@@ -250,24 +253,25 @@ def _featured_from_pages(spark: SparkSession, pages: DataFrame):
     f = f.withColumn(
         "text", F.translate("text", G.CJK_FOLD_SRC, G.CJK_FOLD_DST)
     )
-    # localCheckpoint (was .cache()): the staged match DAG branches over
-    # both sides many times (exact / anti / blocking / fallback /
-    # scoring), and BUILDING it costs ~45 DataFrame ops, each of which
-    # re-runs the analyzer over the accumulated logical plan — with the
+    # materialize: the staged match DAG branches over both sides many
+    # times (exact / anti / blocking / fallback / scoring), and BUILDING
+    # it costs ~45 DataFrame ops, each of which re-runs the analyzer
+    # over the accumulated logical plan — with the
     # full featured-pages tree under every branch that analysis was
     # ~4.5 s of py4j/JVM time per match query (cProfile: 3.1k py4j
     # round trips at ~1.4 ms). The eager checkpoint truncates the plan
     # to a LogicalRDD leaf, so every downstream op analyzes a toy tree
     # (match_best 10.7 → 7.0 s measured); compute/storage behaviour is
     # the cache's (one materialization serving both role filters).
-    # Fault-tolerance tradeoff is the CC/BPE localCheckpoint one,
-    # documented there. Prune to what the match path consumes before
-    # materializing — `numbers` alone is 4 regex passes over every page
-    # and no match stage reads it.
-    f = f.select(
-        "doc_id", "role", "page_num", "text", "text_hash",
-        "dates", "amounts", "kw",
-    ).localCheckpoint()
+    # Prune to what the match path consumes before materializing —
+    # `numbers` alone is 4 regex passes over every page and no match
+    # stage reads it.
+    f = materialize(
+        f.select(
+            "doc_id", "role", "page_num", "text", "text_hash",
+            "dates", "amounts", "kw",
+        )
+    )
     v = f.filter(F.col("role") == "voucher").drop("role")
     r = f.filter(F.col("role") == "reference").drop("role")
     return v, r
@@ -316,22 +320,24 @@ def q_match_best_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (page, token), aggregate — fully codegen'd, no per-pair lambda
     and no interpreted map build."""
     v, r = _featured_roles(spark, sf_dir)
-    # localCheckpoint (was cache): each TF table is read twice (norms +
+    # materialize: each TF table is read twice (norms +
     # dot) AND ~25 scorer/match ops sit above them — the eager
     # checkpoint truncates analysis like the featured-pages one
     # (A/B 10.1 -> 9.3 s)
-    vt = matching.cosine_token_rows(
-        v, ["doc_id", "page_num"], cnt_alias="cnt_v"
-    ).localCheckpoint()
-    rt = matching.cosine_token_rows(
-        r.select(
-            F.col("doc_id").alias("t_doc"),
-            F.col("page_num").alias("t_page"),
-            "text",
-        ),
-        ["t_doc", "t_page"],
-        cnt_alias="cnt_r",
-    ).localCheckpoint()
+    vt = materialize(
+        matching.cosine_token_rows(v, ["doc_id", "page_num"], cnt_alias="cnt_v")
+    )
+    rt = materialize(
+        matching.cosine_token_rows(
+            r.select(
+                F.col("doc_id").alias("t_doc"),
+                F.col("page_num").alias("t_page"),
+                "text",
+            ),
+            ["t_doc", "t_page"],
+            cnt_alias="cnt_r",
+        )
+    )
     ranked = matching.match_pages(
         v,
         r,
@@ -1036,7 +1042,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache-before-branch: the shingle + 16-minhash fold feeds the band
     # generation AND both scored sides (same pattern as the sibling
     # LSH queries)
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     return dedup.containment_pairs(withsig, pairs)
 
@@ -1335,7 +1341,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     # cache: the signature table feeds both sides of the bucket
     # self-join and both sides of the verification join
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     return dedup.verified_near_dups(withsig, pairs)
 
@@ -1349,7 +1355,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys its drop decisions on."""
     docs = synth.load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     verified = dedup.verified_near_dups(withsig, pairs).select("a", "b")
     return dedup.connected_components(verified)
@@ -1363,7 +1369,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep policy production dedup jobs actually apply."""
     docs = synth.load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     verified = dedup.verified_near_dups(withsig, pairs).select("a", "b")
     clusters = dedup.connected_components(verified)
@@ -1398,7 +1404,7 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache-before-branch: the shingle + 16-minhash fold feeds the band
     # generation AND both scored pair sides — uncached it re-ran ~4×
     # inside one plan (measured 7.1 s vs 2.8 s at sf0.1)
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     return dedup.minhash_calibration(docs, withsig=withsig)
 
 
@@ -1409,7 +1415,7 @@ def q_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBys."""
     docs = synth.load_table(spark, sf_dir, "documents")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    withsig = dedup.with_minhash(docs).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(docs))
     pairs = dedup.lsh_candidate_pairs(withsig)
     verified = dedup.verified_near_dups(withsig, pairs).select("a", "b")
     return dedup.cluster_size_stats(dedup.connected_components(verified))
@@ -1428,9 +1434,9 @@ def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing candidate near-dup pairs: equi-join on shared
     fingerprints with a hot-fingerprint guard."""
-    fps = dedup.winnow_fingerprints(
-        synth.load_table(spark, sf_dir, "documents")
-    ).cache()
+    fps = materialize(
+        dedup.winnow_fingerprints(synth.load_table(spark, sf_dir, "documents"))
+    )
     return dedup.winnow_candidate_pairs(fps)
 
 
@@ -1439,9 +1445,9 @@ def q_dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster formation on the winnowing modality: pairs sharing ≥ 2
     fingerprints become edges, connected components emit the keep
     policy — the same last-stage as the MinHash and embedding paths."""
-    fps = dedup.winnow_fingerprints(
-        synth.load_table(spark, sf_dir, "documents")
-    ).cache()
+    fps = materialize(
+        dedup.winnow_fingerprints(synth.load_table(spark, sf_dir, "documents"))
+    )
     edges = (
         dedup.winnow_candidate_pairs(fps)
         .filter(F.col("n_shared") >= dedup.WINNOW_MIN_SHARED)
@@ -1454,7 +1460,7 @@ def q_dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster formation on the SimHash modality: every hamming-verified
     banded pair is an edge; connected components emit the keep policy."""
-    fps = dedup.simhash(synth.load_table(spark, sf_dir, "documents")).cache()
+    fps = materialize(dedup.simhash(synth.load_table(spark, sf_dir, "documents")))
     return dedup.connected_components(
         dedup.simhash_candidate_pairs(fps).select("a", "b")
     )
@@ -1493,7 +1499,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     within hamming distance 3 of the 16-bit fingerprint shares at least
     one of the 4 bands exactly (pigeonhole), so a banded equi-join +
     hamming verify finds all of them with no all-pairs join."""
-    fps = dedup.simhash(synth.load_table(spark, sf_dir, "documents")).cache()
+    fps = materialize(dedup.simhash(synth.load_table(spark, sf_dir, "documents")))
     return dedup.simhash_candidate_pairs(fps)
 
 
@@ -2012,7 +2018,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") * 100 + F.col("page_num")).alias("doc_id"), "text"
     )
     # cache-before-branch: signature fold feeds bands + both pair sides
-    withsig = dedup.with_minhash(pages).localCheckpoint()
+    withsig = materialize(dedup.with_minhash(pages))
     return dedup.dedup_threshold_sweep(pages, withsig=withsig)
 
 

@@ -41,6 +41,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import scope
+
 LINEAGE_SCHEMA = (
     "part int, n_parts int, n_docs long, n_spans long, wall_ms long, run_id string"
 )
@@ -251,12 +253,13 @@ def run_corpus_job(
     n_parts, committed = read_manifest(spark, out_dir, n_parts)
     if set(range(n_parts)) <= set(committed):
         return 0
-    cached: list[DataFrame] = []
-    try:
+    # the scope releases the verdict's checkpoints even on the
+    # simulated-kill path — a resume loop in one long-lived session
+    # must not accumulate blocks across invocations
+    with scope():
         verdict = (
             corpus_filter(
-                docs, cache_registry=cached, quality_model=quality_model,
-                decontaminate=decontaminate,
+                docs, quality_model=quality_model, decontaminate=decontaminate
             )
             .filter(F.col("keep"))
             .select("doc_id")
@@ -271,12 +274,6 @@ def run_corpus_job(
             spark, admitted, committed, out_dir, run_id, n_parts,
             fail_after_parts,
         )
-    finally:
-        # release the verdict's cached frames even on the simulated-kill
-        # path — a resume loop in one long-lived session must not
-        # accumulate cached blocks across invocations
-        for c in cached:
-            c.unpersist()
 
 
 def publish_training_shards(

@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pdf_ocr_comparison_tool_spark import materialize
 from pdf_ocr_comparison_tool_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -25,10 +26,13 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _release_plan_caches(request):
-    """Operators cache build-once tables (featured pages, minhash sigs)
-    and never unpersist — callers own the lifetime. Clear after each
-    test so a 40-query session doesn't accumulate cached plans."""
-    yield
+    """Operators materialize build-once tables (featured pages, minhash
+    sigs) and never release what they return — callers own the
+    lifetime. Each test is the caller: its checkpoints are released in
+    a scope, and match_pages' lazy caches cleared, after it, so a
+    173-query session doesn't accumulate storage."""
+    with materialize.scope():
+        yield
     if "spark" in request.fixturenames:
         request.getfixturevalue("spark").catalog.clearCache()
 

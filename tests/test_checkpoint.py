@@ -277,7 +277,6 @@ def test_corpus_job_kill_rerun_exactly_once(spark):
         clean, resumed = f"{tdir}/clean", f"{tdir}/resumed"
         n = cp.run_corpus_job(spark, docs, clean, run_id="one", n_parts=6)
         assert n == 6
-        spark.catalog.clearCache()  # corpus_filter cache contract
         try:
             cp.run_corpus_job(
                 spark, docs, resumed, run_id="killed", n_parts=6,
@@ -286,11 +285,9 @@ def test_corpus_job_kill_rerun_exactly_once(spark):
             raise AssertionError("simulated kill did not raise")
         except RuntimeError:
             pass
-        spark.catalog.clearCache()
         assert cp.committed_parts(spark, resumed).count() == 2
         n2 = cp.run_corpus_job(spark, docs, resumed, run_id="two", n_parts=6)
         assert n2 == 4
-        spark.catalog.clearCache()
         assert rows(clean) == rows(resumed)
         # the resumed layout: one file per part, one lineage file per
         # commit, lineage totals equal to the committed rows
@@ -304,6 +301,30 @@ def test_corpus_job_kill_rerun_exactly_once(spark):
         man = cp.publish_training_shards(spark, resumed, f"{tdir}/final")
         got = man.agg({"n_docs": "sum"}).collect()[0][0]
         assert got == len(rows(clean))
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_corpus_job_leaves_no_persisted_rdd(spark):
+    """Deterministic storage lifetime: a corpus job — fresh, or killed
+    by ``fail_after_parts`` between its data write and its lineage
+    append — releases every intermediate it materialized (the MinHash
+    signatures, the connected-components labels) before it returns or
+    raises, so no persisted RDD outlives the call."""
+    from tests.conftest import SF_DIR_001
+
+    docs = synth.load_table(spark, SF_DIR_001, "documents")
+    with tempfile.TemporaryDirectory() as tdir:
+        before = _persisted_ids(spark)
+        assert cp.run_corpus_job(spark, docs, f"{tdir}/fresh", "r", n_parts=4) == 4
+        assert _persisted_ids(spark) <= before
+        with pytest.raises(RuntimeError):
+            cp.run_corpus_job(
+                spark, docs, f"{tdir}/killed", "r", n_parts=4, fail_after_parts=1
+            )
+        assert _persisted_ids(spark) <= before
 
 
 def test_corpus_job_racing_writers_fenced(spark):
