@@ -100,14 +100,17 @@ def _run_job(spark, args, run_id: str) -> dict:
         # ONE execution of the match DAG feeds both writes; the summary
         # then derives from the already-written match_best parquet —
         # previously the full multi-join pipeline recomputed ~3x across
-        # the two writes + summary
+        # the two writes + summary. Only rank 1 is kept, so the match
+        # takes the best-only path of the oracled match_merged query
         best = materialize(
             matching.with_matched_keywords(
                 matching.best_matches(
                     v,
                     matching.match_pages(
-                        v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP
+                        v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP,
+                        best_only=True,
                     ),
+                    carry_kw=True,
                 ),
                 v,
                 r,

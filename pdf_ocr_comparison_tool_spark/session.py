@@ -5,6 +5,41 @@ cluster: shuffle partitions sized to cores (not the 200 default), AQE
 on for runtime coalescing + skew-join splitting, Arrow on for every
 pandas interchange, UTC so DuckDB-oracle comparisons are stable, and a
 codegen cache large enough to hold a whole query's generated classes.
+
+The driver JVM runs one JIT policy, ``JIT_POLICY``
+(``-XX:CompileThresholdScaling=8``): it raises the invocation and
+back-edge counts at which a method moves up the compilation tiers.
+Without it a short session's CPU goes mostly to compiling Spark itself:
+in perfbench's timed ``match`` iteration (the one after warm-up, 4
+cores), 14-16 of 24-25 CPU-s were JIT compilation by
+``CompilationMXBean``, C2 compiled ~980 methods, 410 of them Catalyst
+analysis, expression and tree code that runs warm but not hot, and the
+tasks themselves took ~6 s. Under the policy that long tail stays in C1
+code, while truly hot loops still reach C2.
+
+The price: code C2 would have compiled runs longer in C1. A long, warm
+session's iterations can cost more CPU (perfbench ``extract``, the
+median of iterations 7-9 over 5 sessions: 8.24 CPU-s without the
+policy, 8.66 with it; whether 9 iterations of ``extract`` cost less in
+total is unresolved, the gap being inside the spread between sessions),
+and on 4 cores a fresh process can take longer in wall time, because
+C2 used to run on cores the mostly single-threaded driver left idle.
+The callers run warm-up-dominated sessions (one-shot CLI jobs, suites
+that run each query once), where the policy saves CPU.
+
+Only the driver gets the policy. In local mode the tasks run inside
+the driver JVM, which is where it was measured; the executors of a
+``local-cluster`` master (``bench.py --scaling``) run long, hot task
+code, the case where staying in C1 costs more, and keep the JVM's own
+tiers. The flag travels in ``spark.driver.defaultJavaOptions``, not
+``extraJavaOptions``, so a caller that sets its own
+``spark.driver.extraJavaOptions`` (as ``perfbench`` does) adds to it
+instead of replacing it.
+
+The default driver heap is half the memory the process may use: the
+host's physical memory, or the container's cgroup limit when that is
+lower (``SPARK_DRIVER_MEM`` overrides it). A local-mode heap capped
+far above that lets the JVM grow until the kernel kills it.
 """
 
 from __future__ import annotations
@@ -12,6 +47,39 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# 8 over 2 and 4: perfbench ``match`` median cpu_s 17.2 s against 20.1 s
+# (2) and 19.5 s (4), seeds 1-5, 4 cores; see the module docstring
+JIT_POLICY = "-XX:CompileThresholdScaling=8"
+
+
+# cgroup v2, then v1; "max" or a value above physical memory means no limit
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _memory_limit() -> int:
+    """Bytes this process may use: physical memory, or the cgroup
+    memory limit when one is set and lower."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            limit = min(limit, int(value))
+        break
+    return limit
+
+
+def _default_driver_memory() -> str:
+    """Half of ``_memory_limit()``, in MiB (``spark.driver.memory``
+    syntax)."""
+    return f"{_memory_limit() // 2 // 2**20}m"
 
 
 def get_spark(
@@ -45,8 +113,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # one match pass generates ~154 distinct classes; the default
         # 100-entry LRU cache never hits on that cyclic pattern, so every
