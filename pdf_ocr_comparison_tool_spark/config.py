@@ -9,8 +9,6 @@ reference's configured keyword sets as data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 # (doc_type, keyword, priority) — flattened from reference config.yaml:92-122
 DOC_TYPE_KEYWORDS: list[tuple[str, str, int]] = [
     ("凭证", "记账凭证", 1), ("凭证", "收款凭证", 1), ("凭证", "付款凭证", 1),
@@ -71,17 +69,3 @@ def doc_type_patterns() -> list[tuple[str, int, str]]:
         assert not set(k) & set(r"\.[]{}()*+?^$|"), k
         grouped.setdefault(t, (p, []))[1].append(k)
     return [(t, p, "|".join(ks)) for t, (p, ks) in grouped.items()]
-
-
-def doc_type_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        DOC_TYPE_KEYWORDS, schema="doc_type string, keyword string, priority int"
-    )
-
-
-def doc_type_values_sql(alias: str = "k") -> str:
-    """Inline VALUES relation for SQL oracles (both dialects)."""
-    rows = ", ".join(
-        f"('{t}', '{k}', {p})" for t, k, p in DOC_TYPE_KEYWORDS
-    )
-    return f"(VALUES {rows}) AS {alias}(doc_type, keyword, priority)"

@@ -136,7 +136,3 @@ hb_block AS (
 html_docs AS (
   SELECT doc_id, {agg} AS html FROM hb_block GROUP BY doc_id
 )"""
-
-
-def html_sql(d: str, docs: str = "documents") -> str:
-    return f"WITH {html_cte(d, docs)} SELECT doc_id, html FROM html_docs"

@@ -35,10 +35,10 @@ from .dedup import tokens_col
 BPE_MERGES = 6
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """Corpus-wide word frequency table (the BPE training input)."""
     return (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -248,7 +248,6 @@ def encode_with_state(docs: DataFrame, state: DataFrame) -> DataFrame:
 
 def bpe_vocab(
     docs: DataFrame,
-    n_merges: int = BPE_MERGES,
     merges: DataFrame | None = None,
     wf: DataFrame | None = None,
 ) -> DataFrame:
@@ -282,7 +281,7 @@ def bpe_vocab(
         "weight",
     )
     c_df = chars.agg(F.count("*").cast("long").alias("c"))
-    merge_df = merges if merges is not None else bpe_fit(docs, n_merges)
+    merge_df = merges if merges is not None else bpe_fit(docs)
     merge_block = (
         merge_df
         .crossJoin(F.broadcast(c_df))
@@ -296,12 +295,12 @@ def bpe_vocab(
     return ranked.unionByName(merge_block)
 
 
-def bpe_fit_py(word_freq: dict[str, int], n_merges: int = BPE_MERGES) -> list:
+def bpe_fit_py(word_freq: dict[str, int]) -> list:
     """Pure-Python reference BPE (test oracle): identical greedy-left
     merge + (freq desc, pair asc) tie-break."""
     state = {w: list(w) for w in word_freq}
     merges = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         counts: dict[tuple, int] = {}
         for w, syms in state.items():
             f = word_freq[w]
@@ -326,7 +325,7 @@ def bpe_fit_py(word_freq: dict[str, int], n_merges: int = BPE_MERGES) -> list:
     return merges
 
 
-def tokenizer_fertility(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     """Per-language tokenizer FERTILITY of the trained BPE — subword
     tokens emitted per word, the standard multilingual tokenizer-equity
     diagnostic (a language with fertility 2.1 pays ~2.1× the compute
@@ -341,12 +340,7 @@ def tokenizer_fertility(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFram
     bpe_encode). Then a combiner-reduced per-doc sum, a narrow word
     count, and a groupBy on the tiny lang dim. Fertility is one
     int/int→double division per lang (bit-exact)."""
-    if n_merges <= 0:
-        state = word_freqs(docs).select(
-            "word", F.split(F.col("word"), "").alias("syms")
-        )
-    else:
-        _, state = _run_merges(docs, n_merges)
+    _, state = _run_merges(docs, BPE_MERGES)
     occ = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("word")
     )

@@ -32,19 +32,19 @@ def engine_b_conf(doc_id, page_num) -> "F.Column":
     ).cast("double")
 
 
-def cascade(pages: DataFrame, threshold: float = CONF_THRESHOLD) -> DataFrame:
+def cascade(pages: DataFrame) -> DataFrame:
     """pages(doc_id, role, page_num, …) → + engine_used, conf.
 
     high-confidence rows keep engine A; the rest are re-scored by
     engine B (J8 split/recompute/union)."""
     a_conf = engine_a_conf(F.col("doc_id"), F.col("page_num"))
     scored = pages.withColumn("conf_a", a_conf)
-    high = scored.filter(F.col("conf_a") >= threshold).select(
+    high = scored.filter(F.col("conf_a") >= CONF_THRESHOLD).select(
         "doc_id", "role", "page_num",
         F.lit("engine_a").alias("engine_used"),
         F.col("conf_a").alias("conf"),
     )
-    low = scored.filter(F.col("conf_a") < threshold).select(
+    low = scored.filter(F.col("conf_a") < CONF_THRESHOLD).select(
         "doc_id", "role", "page_num",
         F.lit("engine_b").alias("engine_used"),
         engine_b_conf(F.col("doc_id"), F.col("page_num")).alias("conf"),

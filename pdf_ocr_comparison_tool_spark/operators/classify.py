@@ -36,12 +36,9 @@ def findall_count(text_col, pattern: str) -> "F.Column":
     ).cast("long")
 
 
-def classify_pages(
-    pages: DataFrame,
-    keys: list[str] = ("doc_id", "role", "page_num"),
-) -> DataFrame:
+def classify_pages(pages: DataFrame) -> DataFrame:
     """pages(keys…, text) → keys + doc_type, score, confidence, n_matched."""
-    keys = list(keys)
+    keys = ["doc_id", "role", "page_num"]
     entries = [
         F.struct(
             F.lit(t).alias("doc_type"),

@@ -96,8 +96,8 @@ def minhash_sig(sh) -> "F.Column":
     )
 
 
-def with_minhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    toks = tokens_col(F.col(text_col))
+def with_minhash(docs: DataFrame) -> DataFrame:
+    toks = tokens_col(F.col("text"))
     return docs.withColumn("shingles", shingles_col(toks)).withColumn(
         "minhash", minhash_sig(F.col("shingles"))
     )
@@ -110,7 +110,7 @@ def _shift(arr, by: int) -> "F.Column":
     return F.slice(arr, by + 1, F.greatest(F.size(arr) - by, F.lit(0)))
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """MOSS-style winnowing document fingerprints: hash the POSITIONAL
     k-shingle sequence, keep the minimum of every sliding window of
     ``WINNOW_W`` hashes, dedupe — a near-dup fingerprint whose density
@@ -121,7 +121,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the next step as the HOF input — the single-evaluation rule), so
     the whole construction is narrow and shuffle-free per document.
     """
-    t = tokens_col(F.col(text_col))
+    t = tokens_col(F.col("text"))
     # positional 3-gram shingles via two shifted copies (NULL-masked at
     # the tail so partial grams never form)
     s1, s2 = _shift(t, 1), _shift(t, 2)
@@ -160,14 +160,13 @@ WINNOW_MAX_FP_DOCS = 64
 WINNOW_MIN_SHARED = 2
 
 
-def winnow_candidate_pairs(
-    fps: DataFrame, max_fp_docs: int = WINNOW_MAX_FP_DOCS
-) -> DataFrame:
+def winnow_candidate_pairs(fps: DataFrame) -> DataFrame:
     """Fingerprint table (doc_id, fp) → candidate near-dup pairs with
     shared-fingerprint counts: equi-join on fp (never all-pairs), with
     the standard hot-bucket guard (a fingerprint shared by more than
-    ``max_fp_docs`` docs is boilerplate — drop it, as in the LSH paths)."""
-    small = fps.groupBy("fp").count().filter(F.col("count") <= max_fp_docs)
+    ``WINNOW_MAX_FP_DOCS`` docs is boilerplate — drop it, as in the LSH
+    paths)."""
+    small = fps.groupBy("fp").count().filter(F.col("count") <= WINNOW_MAX_FP_DOCS)
     f2 = fps.join(small.select("fp"), "fp")
     a = f2.select(F.col("doc_id").alias("a"), "fp")
     b = f2.select(F.col("doc_id").alias("b"), "fp")
@@ -179,16 +178,14 @@ def winnow_candidate_pairs(
     )
 
 
-def exact_dup_groups(
-    docs: DataFrame, text_col: str = "text", count_alias: str = "n_docs"
-) -> DataFrame:
+def exact_dup_groups(docs: DataFrame, count_alias: str = "n_docs") -> DataFrame:
     """Exact dedup: hash-groupBy on normalized content — the SINGLE
     home of the T1 hash spec (features.text_hash); the docs- and
     pages-level queries both go through here."""
     from .features import text_hash
 
     return (
-        docs.select(F.col("doc_id"), text_hash(F.col(text_col)).alias("text_hash"))
+        docs.select(F.col("doc_id"), text_hash(F.col("text")).alias("text_hash"))
         .groupBy("text_hash")
         .agg(F.count("*").alias(count_alias), F.min("doc_id").alias("keep_doc"))
         .filter(F.col(count_alias) > 1)
@@ -196,6 +193,7 @@ def exact_dup_groups(
 
 
 MAX_BUCKET = 64
+NEAR_DUP_JACCARD = 0.5  # shingle-Jaccard floor of a verified near-dup pair
 
 
 def _band_rows(sigs: DataFrame) -> DataFrame:
@@ -221,18 +219,18 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH: docs sharing any band bucket become a candidate pair.
 
     Hot-bucket guard: a bucket of b docs yields b(b−1)/2 pairs — at
     10^12 docs a boilerplate bucket would explode the self-join.
-    Buckets larger than ``max_bucket`` are dropped here; their members
+    Buckets larger than ``MAX_BUCKET`` are dropped here; their members
     are near-exact clusters that the exact-hash dedup path already
     collapses far more cheaply."""
     bands = _band_rows(sigs)
     sizes = bands.groupBy("band", "bucket").agg(F.count("*").alias("_n"))
     small = bands.join(
-        sizes.filter(F.col("_n") <= max_bucket).select("band", "bucket"),
+        sizes.filter(F.col("_n") <= MAX_BUCKET).select("band", "bucket"),
         ["band", "bucket"],
     )
     a = small.select(F.col("doc_id").alias("a"), "band", "bucket")
@@ -245,9 +243,7 @@ def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFr
     )
 
 
-def verified_near_dups(
-    docs_with_shingles: DataFrame, pairs: DataFrame, threshold: float = 0.5
-) -> DataFrame:
+def verified_near_dups(docs_with_shingles: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard verification of LSH candidates."""
     sa = docs_with_shingles.select(
         F.col("doc_id").alias("a"), F.col("shingles").alias("sh_a")
@@ -263,7 +259,7 @@ def verified_near_dups(
         pairs.join(sa, "a")
         .join(sb, "b")
         .select("a", "b", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
 
 
@@ -302,7 +298,7 @@ def _changed_from_observation(obs, fallback_df: DataFrame, timeout_sec: float) -
     return int(changed or 0), False
 
 
-def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Near-dup cluster formation — the stage every candidate-pair
     generator (LSH / winnowing / embedding buckets) feeds at 100 TB:
     connected components over the pair edges, emitting one row per doc
@@ -351,7 +347,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     )
     converged = False
     budget = _OBS_TIMEOUT_SEC
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         msgs = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -406,7 +402,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     release(sym)
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
+            f"connected_components did not converge in {CC_MAX_ITERS} rounds "
             "— refusing to emit truncated cluster labels"
         )
     return labels.select(
@@ -439,18 +435,13 @@ def _ngrams_col(t, n: int) -> "F.Column":
     return F.filter(g, lambda x: x.isNotNull())
 
 
-def decontaminate(
-    docs: DataFrame,
-    n: int = DECON_NGRAM,
-    threshold: float = DECON_FRAC,
-    eval_buckets: int = DECON_EVAL_BUCKETS,
-) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """Benchmark DECONTAMINATION — the eval-overlap scan every serious
     pretraining pipeline runs (GPT-3 appendix C / PaLM: flag corpus
     docs sharing word n-grams with the evaluation set): per corpus doc,
     how many eval docs it collides with and the maximum fraction of any
     eval doc's distinct n-grams it contains; ``contaminated`` when that
-    fraction ≥ ``threshold``.
+    fraction ≥ ``DECON_FRAC``.
 
     The eval slice here is the deterministic md5-bucket-0 subset of the
     corpus itself (self-pairs excluded) — at production scale the eval
@@ -471,14 +462,18 @@ def decontaminate(
     gh = F.md5(F.col("gram"))
     grams = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_ngrams_col(toks, n))).alias("gram"),
+        F.explode(
+            F.array_distinct(_ngrams_col(toks, DECON_NGRAM))
+        ).alias("gram"),
     ).select("doc_id", gh.alias("h"))
-    is_eval = hash_bucket(F.col("doc_id"), eval_buckets) == 0
+    is_eval = hash_bucket(F.col("doc_id"), DECON_EVAL_BUCKETS) == 0
     egrams = (
         docs.filter(is_eval)
         .select(
             F.col("doc_id").alias("eval_id"),
-            F.explode(F.array_distinct(_ngrams_col(toks, n))).alias("gram"),
+            F.explode(
+                F.array_distinct(_ngrams_col(toks, DECON_NGRAM))
+            ).alias("gram"),
         )
         .select("eval_id", gh.alias("h"))
     )
@@ -502,13 +497,13 @@ def decontaminate(
         "doc_id",
         F.coalesce("n_eval_docs_hit", F.lit(0)).cast("long").alias("n_eval_docs_hit"),
         F.coalesce("max_overlap_frac", F.lit(0.0)).alias("max_overlap_frac"),
-        (F.coalesce("max_overlap_frac", F.lit(0.0)) >= threshold).alias(
+        (F.coalesce("max_overlap_frac", F.lit(0.0)) >= DECON_FRAC).alias(
             "contaminated"
         ),
     )
 
 
-def gram_novelty(docs: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
+def gram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram NOVELTY — the memorization/duplication
     signal corpus analyses report (what fraction of a doc's distinct
     word n-grams occurs in NO other document): (doc_id, n_grams,
@@ -520,11 +515,12 @@ def gram_novelty(docs: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
     analysis as decontaminate), gram document-frequencies via ONE
     map-side-combinable groupBy (a 10⁹-doc boilerplate gram reduces to
     one (h, df) row), join back on the hash, per-doc counts; LEFT JOIN
-    keeps short docs (<n tokens) with n_grams=0 and NULL fraction."""
+    keeps short docs (<DECON_NGRAM tokens) with n_grams=0 and NULL
+    fraction."""
     toks = tokens_col(F.col("text"))
     grams = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_ngrams_col(toks, n))).alias("gram"),
+        F.explode(F.array_distinct(_ngrams_col(toks, DECON_NGRAM))).alias("gram"),
     ).select("doc_id", F.md5(F.col("gram")).alias("h"))
     # grams are per-doc distinct already, so plain count == distinct
     # doc count without the distinct-aggregation state
@@ -554,83 +550,76 @@ BLOOM_K = 4           # hash functions = disjoint 32-bit md5 slices
 BLOOM_SCREEN_DEN = 20  # screened when bloom hits ≥ 1/20 of doc grams
 
 
-def _bloom_pos(hcol, j: int, m_bits: int):
-    """Position j of a gram's md5 hex in an m_bits-wide Bloom filter:
+def _bloom_pos(hcol, j: int):
+    """Position j of a gram's md5 hex in the BLOOM_M_BITS-wide Bloom filter:
     disjoint 32-bit slices of the one md5 give k independent hash
     functions (sqlgen.hexint_slice is the oracle twin)."""
     return (
-        F.conv(F.substring(hcol, 1 + 8 * j, 8), 16, 10).cast("long") % m_bits
+        F.conv(F.substring(hcol, 1 + 8 * j, 8), 16, 10).cast("long") % BLOOM_M_BITS
     )
 
 
-def _bloom_grams(docs: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
+def _bloom_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → per-doc DISTINCT word-n-gram md5 rows (doc_id,
     h) — the shared front end of the Bloom screen (batch or stream)."""
     toks = tokens_col(F.col("text"))
     return docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_ngrams_col(toks, n))).alias("gram"),
+        F.explode(F.array_distinct(_ngrams_col(toks, DECON_NGRAM))).alias("gram"),
     ).select("doc_id", F.md5(F.col("gram")).alias("h"))
 
 
-def bloom_bits(eval_h: DataFrame, m_bits: int = BLOOM_M_BITS,
-               k: int = BLOOM_K) -> DataFrame:
+def bloom_bits(eval_h: DataFrame) -> DataFrame:
     """Distinct set-bit table (pos) of the Bloom filter for a distinct
-    eval-gram-hash frame — bounded by ``m_bits`` rows by construction,
+    eval-gram-hash frame — bounded by ``BLOOM_M_BITS`` rows by construction,
     so it is always broadcast-safe (build once, reuse across batch runs
     AND as the STATIC side of a stream-static join)."""
     return (
         eval_h.select(
             F.explode(
-                F.array(*[_bloom_pos(F.col("h"), j, m_bits) for j in range(k)])
+                F.array(*[_bloom_pos(F.col("h"), j) for j in range(BLOOM_K)])
             ).alias("pos")
         )
         .distinct()
     )
 
 
-def bloom_gram_hits(grams: DataFrame, bits: DataFrame,
-                    m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K) -> DataFrame:
-    """Per-gram Bloom membership: k broadcast LEFT joins against the
-    set-bit table (≤ m_bits rows), hit iff ALL k positions are set.
+def bloom_gram_hits(grams: DataFrame, bits: DataFrame) -> DataFrame:
+    """Per-gram Bloom membership: BLOOM_K broadcast LEFT joins against
+    the set-bit table (≤ BLOOM_M_BITS rows), hit iff ALL positions are
+    set.
     STREAM-SAFE: contains no aggregation or window, so the same code
     path runs on a batch frame and as a stream-static join on a
     readStream frame (proven equal in tests). → (doc_id, h, bloom_hit).
     """
     g = grams.select(
         "doc_id", "h",
-        *[_bloom_pos(F.col("h"), j, m_bits).alias(f"pos{j}") for j in range(k)],
+        *[_bloom_pos(F.col("h"), j).alias(f"pos{j}") for j in range(BLOOM_K)],
     )
-    for j in range(k):
+    for j in range(BLOOM_K):
         bj = F.broadcast(
             bits.select(F.col("pos").alias(f"pos{j}"), F.lit(1).alias(f"m{j}"))
         )
         g = g.join(bj, f"pos{j}", "left")
     hit_all = F.lit(True)
-    for j in range(k):
+    for j in range(BLOOM_K):
         hit_all = hit_all & F.col(f"m{j}").isNotNull()
     return g.select("doc_id", "h", hit_all.alias("bloom_hit"))
 
 
-def bloom_decontaminate(
-    docs: DataFrame,
-    n: int = DECON_NGRAM,
-    eval_buckets: int = DECON_EVAL_BUCKETS,
-    m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_decontaminate(docs: DataFrame) -> DataFrame:
     """Bloom-filter decontamination SCREEN + false-positive audit — the
     stage-0 prefilter a 10^12-doc pipeline runs before the exact
-    eval-overlap join of :func:`decontaminate`: build an ``m_bits``-wide
-    Bloom set from the eval slice's n-grams (``k`` positions per gram =
+    eval-overlap join of :func:`decontaminate`: build a ``BLOOM_M_BITS``-wide
+    Bloom set from the eval slice's n-grams (``BLOOM_K`` positions per gram =
     disjoint 32-bit slices of one md5), then test every corpus gram
     against it. Output per doc: gram count, Bloom hits, exact hits
     (ground truth on the same gram sets), false positives and the
     ``screened`` routing verdict (Bloom-hit fraction ≥ 1/BLOOM_SCREEN_DEN).
 
     Scale shape — the whole point of the Bloom form: the set-bit table
-    is bounded by ``m_bits`` rows (hard ``broadcast`` is safe by
-    construction), so the corpus side crosses ``k`` BroadcastHashJoins
+    is bounded by ``BLOOM_M_BITS`` rows (hard ``broadcast`` is safe by
+    construction), so the corpus side crosses ``BLOOM_K`` BroadcastHashJoins
     and ONE map-side-combinable groupBy(doc_id) — the corpus never
     shuffles at gram granularity at all, vs. the exact join's
     gram-level exchange. At 3×10^13 corpus grams that is the difference
@@ -642,14 +631,14 @@ def bloom_decontaminate(
     """
     from .features import hash_bucket
 
-    grams = _bloom_grams(docs, n)
+    grams = _bloom_grams(docs)
     eval_h = (
-        grams.filter(hash_bucket(F.col("doc_id"), eval_buckets) == 0)
+        grams.filter(hash_bucket(F.col("doc_id"), DECON_EVAL_BUCKETS) == 0)
         .select("h")
         .distinct()
     )
-    bits = bloom_bits(eval_h, m_bits=m_bits, k=k)
-    g = bloom_gram_hits(grams, bits, m_bits=m_bits, k=k)
+    bits = bloom_bits(eval_h)
+    g = bloom_gram_hits(grams, bits)
     exact = eval_h.withColumn("ex", F.lit(1))
     g = g.join(exact, "h", "left")
     per_doc = g.groupBy("doc_id").agg(
@@ -699,7 +688,7 @@ def contamination_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def line_segments(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_segments(docs: DataFrame) -> DataFrame:
     """C4-style line/segment rows: split on newlines, normalize each
     line (lowercase, whitespace-collapsed, trimmed, empties dropped),
     then sub-chunk every ``LINE_SEG_TOKENS`` whitespace tokens so
@@ -716,7 +705,7 @@ def line_segments(docs: DataFrame, text_col: str = "text") -> DataFrame:
     lines = (
         docs.select(
             "doc_id",
-            F.posexplode(F.split(F.col(text_col), "\n")).alias(
+            F.posexplode(F.split(F.col("text"), "\n")).alias(
                 "line_no", "line"
             ),
         )
@@ -736,7 +725,7 @@ def line_segments(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """C4-style line-level dedup verdict — the boilerplate killer
     (Raffel et al. 2020 §2.2 deduplicate repeated spans corpus-wide,
     keeping ONE occurrence): per segment row, how often its normalized
@@ -747,7 +736,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     computing count + min occurrence, joined back on the segment —
     the exact-dedup shape, never a window over the hot segment. A
     navigation bar repeated on 10^9 pages is ONE group row."""
-    segs = line_segments(docs, text_col)
+    segs = line_segments(docs)
     occ = F.struct("doc_id", "line_no", "seg_idx")
     firsts = segs.groupBy("seg").agg(
         F.count("*").alias("n_occ"), F.min(occ).alias("first_occ")
@@ -784,12 +773,7 @@ def old_corpus_hashes(old: DataFrame, hash_col: str = "h") -> DataFrame:
     )
 
 
-def incremental_dedup(
-    old: DataFrame,
-    new: DataFrame,
-    threshold: float = 0.5,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def incremental_dedup(old: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental-ingest dedup — the production shape of 'a new crawl
     lands against a 10¹²-doc existing corpus': verdict for every NEW
     doc against the OLD corpus (a cross-corpus join, never a unioned
@@ -797,7 +781,7 @@ def incremental_dedup(
     Emits (doc_id, exact_dup_of, near_dup_of, near_jaccard, status)
     with status ∈ exact_dup / near_dup / new; exact matches name the
     smallest old holder, near matches the highest-Jaccard (tie →
-    smallest old id) verified neighbor ≥ threshold.
+    smallest old id) verified neighbor ≥ NEAR_DUP_JACCARD.
 
     Scale shape: the exact stage pre-reduces the old side to one row
     per distinct content hash (groupBy-min — a boilerplate hash can't
@@ -825,7 +809,7 @@ def incremental_dedup(
     )
     sizes = ob.groupBy("band", "bucket").agg(F.count("*").alias("_n"))
     obs = ob.join(
-        sizes.filter(F.col("_n") <= max_bucket).select("band", "bucket"),
+        sizes.filter(F.col("_n") <= MAX_BUCKET).select("band", "bucket"),
         ["band", "bucket"],
     )
     cands = nb.join(obs, ["band", "bucket"]).select("n_id", "o_id").distinct()
@@ -842,7 +826,7 @@ def incremental_dedup(
         cands.join(sn, "n_id")
         .join(so, "o_id")
         .select("n_id", "o_id", j.alias("jacc"))
-        .filter(F.col("jacc") >= threshold)
+        .filter(F.col("jacc") >= NEAR_DUP_JACCARD)
     )
     best_j = verified.groupBy("n_id").agg(F.max("jacc").alias("near_jaccard"))
     best = (
@@ -871,9 +855,7 @@ SWEEP_THRESHOLDS_10 = (5, 6, 7, 8, 9)  # threshold ladder, tenths
 
 
 def dedup_threshold_sweep(
-    docs: DataFrame,
-    max_bucket: int = MAX_BUCKET,
-    withsig: DataFrame | None = None,
+    docs: DataFrame, withsig: DataFrame | None = None
 ) -> DataFrame:
     """Operating-point SWEEP for the near-dup verifier: at each
     threshold t in the ladder, how many LSH candidate pairs the
@@ -885,7 +867,7 @@ def dedup_threshold_sweep(
     boundary decides a count. Per-pair math is narrow; the ladder is a
     5-row explode; output is 5 rows."""
     withsig = with_minhash(docs) if withsig is None else withsig
-    pairs = lsh_candidate_pairs(withsig, max_bucket=max_bucket)
+    pairs = lsh_candidate_pairs(withsig)
     sa = withsig.select(
         F.col("doc_id").alias("a"),
         F.col("shingles").alias("sh_a"),
@@ -936,9 +918,7 @@ def dedup_threshold_sweep(
 
 
 def minhash_calibration(
-    docs: DataFrame,
-    max_bucket: int = MAX_BUCKET,
-    withsig: DataFrame | None = None,
+    docs: DataFrame, withsig: DataFrame | None = None
 ) -> DataFrame:
     """Sketch-quality calibration over the LSH candidate pairs: the
     MinHash signature-agreement estimate of Jaccard (matching
@@ -953,7 +933,7 @@ def minhash_calibration(
     (a with_minhash frame, e.g. the caller's cached one) to share the
     signature build with other dedup stages."""
     withsig = with_minhash(docs) if withsig is None else withsig
-    pairs = lsh_candidate_pairs(withsig, max_bucket=max_bucket)
+    pairs = lsh_candidate_pairs(withsig)
     sa = withsig.select(
         F.col("doc_id").alias("a"),
         F.col("shingles").alias("sh_a"),
@@ -1010,18 +990,13 @@ def cluster_size_stats(clusters: DataFrame) -> DataFrame:
     )
 
 
-def keep_best_in_cluster(
-    clusters: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "avg_score_milli",
-) -> DataFrame:
+def keep_best_in_cluster(clusters: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware keeper selection per near-dup cluster — the
     refinement real pipelines apply over min-id keep: retain the
     highest-quality member (tie → smallest id) instead of an arbitrary
-    one. ``clusters`` = (id, cluster_id, ...) from
-    :func:`connected_components`; ``scores`` = (id, score) from e.g.
-    textstats.quality_score.
+    one. ``clusters`` = (doc_id, cluster_id, ...) from
+    :func:`connected_components`; ``scores`` = (doc_id,
+    avg_score_milli) from e.g. textstats.quality_score.
 
     Scale shape: ONE map-side-combinable max_by per cluster on the
     (score, −id) ordering struct — identical winner to max-score with
@@ -1029,24 +1004,24 @@ def keep_best_in_cluster(
     combiner-reduced, never a single-reducer window (previously a
     max + join-back + filter + min chain: two aggregations and an
     extra join for the same argmax)."""
-    scored = clusters.select(id_col, "cluster_id").join(
-        scores.select(id_col, score_col), id_col
+    scored = clusters.select("doc_id", "cluster_id").join(
+        scores.select("doc_id", "avg_score_milli"), "doc_id"
     )
     keeper = scored.groupBy("cluster_id").agg(
         F.max_by(
-            F.col(id_col),
-            F.struct(F.col(score_col), (-F.col(id_col)).alias("ni")),
+            F.col("doc_id"),
+            F.struct(F.col("avg_score_milli"), (-F.col("doc_id")).alias("ni")),
         ).alias("_keeper")
     )
     return scored.join(keeper, "cluster_id").select(
-        id_col,
+        "doc_id",
         "cluster_id",
-        score_col,
-        (F.col(id_col) == F.col("_keeper")).alias("keep_best"),
+        "avg_score_milli",
+        (F.col("doc_id") == F.col("_keeper")).alias("keep_best"),
     )
 
 
-def span_dedup(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def span_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup over the ordered INTERLEAVED span sequence — the
     multimodal-aware twin of the text-hash exact dedup (T1): the
     fingerprint covers (kind, media_ref, text) in extraction order, so
@@ -1060,14 +1035,14 @@ def span_dedup(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
     over a hot fingerprint."""
     from .extraction import extract_ordered_spans
 
-    ex = extract_ordered_spans(docs, spans_col)
+    ex = extract_ordered_spans(docs)
     piece = lambda s: F.concat_ws(  # noqa: E731
         "|", s["kind"], s["media_ref"], s["text"]
     )
     tape = F.array_join(
-        F.transform(F.col(spans_col), piece), "\x1f"
+        F.transform(F.col("spans"), piece), "\x1f"
     )
-    fps = ex.filter(F.size(spans_col) > 0).select(
+    fps = ex.filter(F.size("spans") > 0).select(
         "doc_id", F.md5(tape).alias("span_fp")
     )
     groups = fps.groupBy("span_fp").agg(
@@ -1082,7 +1057,7 @@ def span_dedup(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
     )
 
 
-def doc_line_trim(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_line_trim(docs: DataFrame) -> DataFrame:
     """Intra-document repeated-line removal — the WITHIN-doc member of
     the C4/Gopher line-rule family (:func:`line_dedup` is the
     corpus-wide twin): drop every repeat of a normalized segment after
@@ -1095,7 +1070,7 @@ def doc_line_trim(docs: DataFrame, text_col: str = "text") -> DataFrame:
     reducer here), the rebuild is the extraction ordered-concat
     pattern (collect_list bounded by document size), and the final
     left join restores unsegmentable docs."""
-    segs = line_segments(docs, text_col)
+    segs = line_segments(docs)
     occ = F.struct(
         F.col("line_no").cast("long").alias("line_no"),
         F.col("seg_idx").cast("long").alias("seg_idx"),
@@ -1131,11 +1106,11 @@ def doc_line_trim(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """16-bit SimHash over distinct tokens: per bit, sum ±1 weighted by
     the token-hash bit, sign → bit. Token hash = first 8 md5 hex chars
     as int (engine-portable)."""
-    toks = F.array_distinct(tokens_col(F.col(text_col)))
+    toks = F.array_distinct(tokens_col(F.col("text")))
     hs = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
     )
@@ -1163,25 +1138,21 @@ SIMHASH_BAND_BITS = 4
 SIMHASH_HAM_MAX = 3
 
 
-def simhash_candidate_pairs(
-    fps: DataFrame,
-    max_bucket: int = MAX_BUCKET,
-    ham_max: int = SIMHASH_HAM_MAX,
-) -> DataFrame:
+def simhash_candidate_pairs(fps: DataFrame) -> DataFrame:
     """Banded SimHash near-dup pairs — the Manku/Jain/Das Sarma web-dedup
     shape (WWW'07): split the fingerprint into bands, equi-join docs that
     share any band verbatim, verify candidates by full hamming distance.
 
     Completeness by pigeonhole: 16 bits in 4 bands — a pair within
-    hamming distance ham_max ≤ 3 has at most 3 differing bits, which
+    hamming distance SIMHASH_HAM_MAX = 3 has at most 3 differing bits, which
     cannot touch all 4 bands, so at least one band matches exactly and
     the banded equi-join (never an all-pairs join) finds EVERY such
     pair. Hot-band guard as in the MinHash-LSH path: a band value
-    shared by more than ``max_bucket`` docs is boilerplate — dropped
+    shared by more than ``MAX_BUCKET`` docs is boilerplate — dropped
     (those members collapse via the exact-hash path instead).
 
     Emits (a, b, hamming) with a < b, hamming = popcount(fp_a XOR fp_b)
-    ≤ ham_max."""
+    ≤ SIMHASH_HAM_MAX."""
     nb = SIMHASH_BITS // SIMHASH_BAND_BITS
     band_vals = F.array(
         *[
@@ -1197,7 +1168,7 @@ def simhash_candidate_pairs(
     )
     sizes = bands.groupBy("band", "val").agg(F.count("*").alias("_n"))
     small = bands.join(
-        sizes.filter(F.col("_n") <= max_bucket).select("band", "val"),
+        sizes.filter(F.col("_n") <= MAX_BUCKET).select("band", "val"),
         ["band", "val"],
     )
     a = small.select(F.col("doc_id").alias("a"), F.col("simhash").alias("fa"), "band", "val")
@@ -1208,7 +1179,7 @@ def simhash_candidate_pairs(
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "fa", "fb")
         .distinct()
-        .filter(ham <= ham_max)
+        .filter(ham <= SIMHASH_HAM_MAX)
         .select("a", "b", ham.cast("long").alias("hamming"))
     )
 
@@ -1217,11 +1188,12 @@ def simhash_candidate_pairs(
 SUBSTR_GRAM_K = 10  # tokens per verbatim window (Lee et al. use 50)
 
 
-def substring_dup_stats(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
+def substring_dup_stats(docs: DataFrame) -> DataFrame:
     """ExactSubstr-style verbatim-span duplication stats (Lee et al.
     2022, "Deduplicating Training Data Makes Language Models Better"):
-    a token window of length *k* is DUPLICATED if its exact text occurs
-    ≥2 times anywhere in the corpus (any doc, including the same doc).
+    a token window of length *k* = ``SUBSTR_GRAM_K`` is DUPLICATED if
+    its exact text occurs ≥2 times anywhere in the corpus (any doc,
+    including the same doc).
     Emits per doc: n_tokens, n_dup_grams (duplicated window starts),
     dup_tokens (tokens covered by ≥1 duplicated window, exact interval
     union), dup_token_frac.
@@ -1244,7 +1216,7 @@ def substring_dup_stats(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
     but stage 2 reduces it map-side to a single (hash, count) row; the
     join-back fan-out equals the input's own position rows, never more.
     """
-    base, pos_rows = _gram_pos_frames(docs, k)
+    base, pos_rows = _gram_pos_frames(docs, SUBSTR_GRAM_K)
     dup_hashes = (
         pos_rows.groupBy("gh")
         .agg(F.count("*").alias("n_occ"))
@@ -1257,8 +1229,8 @@ def substring_dup_stats(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
         dup_pos.withColumn("nxt", F.lead("pos").over(w))
         .withColumn(
             "cov",
-            F.when(F.col("nxt").isNull(), F.lit(k)).otherwise(
-                F.least(F.lit(k), F.col("nxt") - F.col("pos"))
+            F.when(F.col("nxt").isNull(), F.lit(SUBSTR_GRAM_K)).otherwise(
+                F.least(F.lit(SUBSTR_GRAM_K), F.col("nxt") - F.col("pos"))
             ),
         )
         .groupBy("doc_id")
@@ -1324,9 +1296,9 @@ def _gram_pos_frames(docs: DataFrame, k: int) -> tuple:
     return base, pos_rows
 
 
-def substring_rewrite(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
+def substring_rewrite(docs: DataFrame) -> DataFrame:
     """ExactSubstr REMOVAL (Lee et al. 2022 §4.2 — "remove all but
-    one"): every k-token verbatim window occurring ≥2 times in the
+    one"): every ``SUBSTR_GRAM_K``-token verbatim window occurring ≥2 times in the
     corpus is removed except its FIRST occurrence (min (doc_id, pos)
     corpus-wide); emits the rewritten token stream per document,
     (doc_id, n_tokens, n_removed, kept_text). Operates on the shared
@@ -1345,7 +1317,7 @@ def substring_rewrite(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
     elsewhere can still lose tokens to a different overlapping
     duplicated window — inherent to windowed ExactSubstr, documented
     in Lee et al.'s appendix as well."""
-    base, pos_rows = _gram_pos_frames(docs, k)
+    base, pos_rows = _gram_pos_frames(docs, SUBSTR_GRAM_K)
     occ = pos_rows.groupBy("gh").agg(
         F.count("*").alias("n_occ"),
         F.min(F.struct("doc_id", "pos")).alias("keep"),
@@ -1362,7 +1334,9 @@ def substring_rewrite(docs: DataFrame, k: int = SUBSTR_GRAM_K) -> DataFrame:
     )
     covered = removed.select(
         "doc_id",
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("p"),
+        F.explode(
+            F.sequence(F.col("pos"), F.col("pos") + F.lit(SUBSTR_GRAM_K - 1))
+        ).alias("p"),
     )
     tok_rows = docs.select(
         "doc_id", F.posexplode(tokens_col(F.col("text"))).alias("p", "tok")

@@ -45,7 +45,7 @@ def normalize_text(col: Column) -> Column:
     return F.array_join(F.transform(kept, lambda ln: F.trim(ln)), "\n")
 
 
-def extract_ordered_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def extract_ordered_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, spans<kind,text,media_ref,offset>) →
     (doc_id, spans<kind,text,media_ref,order>) — the byte-equality
     contract of the north rule.
@@ -59,7 +59,7 @@ def extract_ordered_spans(docs: DataFrame, spans_col: str = "spans") -> DataFram
       4. reindex ``order = 0..n-1``.
     """
     normed = F.transform(
-        F.col(spans_col),
+        F.col("spans"),
         lambda s: F.struct(
             s["offset"].alias("offset"),
             s["kind"].alias("kind"),
@@ -80,10 +80,10 @@ def extract_ordered_spans(docs: DataFrame, spans_col: str = "spans") -> DataFram
             i.alias("order"),
         ),
     )
-    return docs.withColumn(spans_col, final)
+    return docs.withColumn("spans", final)
 
 
-def parse_grounded(df: DataFrame, blob_col: str = "grounded") -> DataFrame:
+def parse_grounded(df: DataFrame) -> DataFrame:
     """W2: parse a raw grounded-output blob into ordered (bbox, text)
     spans (reference deepseek_ocr2_engine.py:270-283 regex parse; the
     derived reading order — y-major, then x, then parse position — is
@@ -96,7 +96,7 @@ def parse_grounded(df: DataFrame, blob_col: str = "grounded") -> DataFrame:
     """
     from pyspark.sql import Window
 
-    pieces = F.split(F.col(blob_col), G.GR_REF_SPLIT_RE)
+    pieces = F.split(F.col("grounded"), G.GR_REF_SPLIT_RE)
     exploded = df.select(
         "doc_id", F.posexplode(pieces).alias("k", "piece")
     )
@@ -158,13 +158,13 @@ def column_layout(grounded: DataFrame) -> DataFrame:
     return out.withColumn("moved", F.col("ord_col") != F.col("ord_flat"))
 
 
-def exploded_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def exploded_spans(docs: DataFrame) -> DataFrame:
     """Extraction result in per-row form (doc_id, ord, kind, text,
     media_ref) — the shape the DuckDB oracle compares. posexplode keeps
     the array order authoritative."""
-    extracted = extract_ordered_spans(docs, spans_col)
+    extracted = extract_ordered_spans(docs)
     return extracted.select(
-        "doc_id", F.posexplode(spans_col).alias("_p", "s")
+        "doc_id", F.posexplode("spans").alias("_p", "s")
     ).select(
         "doc_id",
         F.col("s.order").alias("ord"),
@@ -174,21 +174,21 @@ def exploded_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
     )
 
 
-def full_text(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def full_text(docs: DataFrame) -> DataFrame:
     """Per-document ordered concat + content hash.
 
     ``full_text`` = newline-join of ordered text-span texts (reference
     "\\n".join at ocr_engine.py:33-37); ``text_hash`` = md5 of the
     lowercased, whitespace-stripped full text (content_matcher.py:30-35).
     """
-    extracted = extract_ordered_spans(docs, spans_col)
-    texts = F.filter(F.col(spans_col), lambda s: s["kind"] == "text")
+    extracted = extract_ordered_spans(docs)
+    texts = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
     ft = F.array_join(F.transform(texts, lambda s: s["text"]), "\n")
     return extracted.select(
         "doc_id",
         ft.alias("full_text"),
         F.md5(F.lower(F.regexp_replace(ft, r"[ \t\n\x0B\f\r]+", ""))).alias("text_hash"),
-        F.size(spans_col).alias("n_spans"),
+        F.size("spans").alias("n_spans"),
         F.size(texts).alias("n_text_spans"),
     )
 

@@ -93,10 +93,10 @@ def token_count_entries(toks: Column) -> Column:
     return F.when(n == 0, empty).otherwise(entries)
 
 
-def page_keywords_expr(text_col: Column, top_n: int = 10) -> Column:
-    """Per-page top-N keywords by term frequency (reference
+def page_keywords_expr(text_col: Column) -> Column:
+    """Per-page top-10 keywords by term frequency (reference
     ocr_engine.py:392-412: tokens of length ≥ 2, non-digit,
-    Counter.most_common(top_n); jieba's segmentation replaced by the
+    Counter.most_common(10); jieba's segmentation replaced by the
     deterministic alnum-run tokenizer, ties broken count desc → token
     asc instead of insertion order).
 
@@ -115,13 +115,13 @@ def page_keywords_expr(text_col: Column, top_n: int = 10) -> Column:
         ),
     )
     return F.transform(
-        F.slice(F.array_sort(enc), 1, top_n), lambda s: F.substring(s, 9, 1000000)
+        F.slice(F.array_sort(enc), 1, 10), lambda s: F.substring(s, 9, 1000000)
     )
 
 
-def add_features(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def add_features(pages: DataFrame) -> DataFrame:
     """pages(…, text) → + dates, amounts, numbers, text_hash columns."""
-    c = F.col(text_col)
+    c = F.col("text")
     return (
         pages.withColumn("dates", _extract_multi(c, G.DATE_RES))
         .withColumn("amounts", _extract_multi(c, G.AMOUNT_RES))
@@ -164,13 +164,13 @@ def pattern_hits(col: Column, pats: list) -> Column:
     return tot.cast("long")
 
 
-def redact_pages(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pages(pages: DataFrame) -> DataFrame:
     """Per page: pattern-hit counts (occurrences on the ORIGINAL text;
     overlapping patterns may both count, same as the extraction spec's
     pre-dedup concat) + the scrubbed text and its hash."""
     from .. import sqlgen as G
 
-    c = F.col(text_col)
+    c = F.col("text")
     red = redact_text(c)
     return pages.select(
         "doc_id",

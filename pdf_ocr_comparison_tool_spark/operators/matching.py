@@ -120,7 +120,7 @@ def cosine_sim_expr(t1, t2) -> "F.Column":
 
 
 def cosine_token_rows(
-    df: DataFrame, keys: list[str], text_col: str = "text", cnt_alias: str = "cnt"
+    df: DataFrame, keys: list[str], cnt_alias: str = "cnt"
 ) -> DataFrame:
     """(keys…, tok, cnt) term-frequency ROWS of the CJK-folded lowercase
     text — the per-page TF "vector" in relational form, built entirely
@@ -136,7 +136,7 @@ def cosine_token_rows(
     tokens, and that holds at any corpus scale."""
     from .. import sqlgen as G
 
-    folded = F.lower(F.translate(F.col(text_col), G.CJK_FOLD_SRC, G.CJK_FOLD_DST))
+    folded = F.lower(F.translate(F.col("text"), G.CJK_FOLD_SRC, G.CJK_FOLD_DST))
     return (
         df.select(
             *keys, F.explode(F.split(folded, r"[^a-z0-9@#$%&*]+")).alias("tok")
@@ -205,19 +205,17 @@ def cosine_scorer(vt: DataFrame, rt: DataFrame):
 def match_pages(
     vouchers: DataFrame,
     refs: DataFrame,
-    top_k: int = C.TOP_K,
     partial_threshold: float = C.PARTIAL_THRESHOLD,
     fallback_cap: int = C.FALLBACK_CAP,
     ref_per_key_cap: int | None = None,
     sim_fn=None,
     pair_scorer=None,
-    broadcast_refs: bool = False,
     best_only: bool = False,
 ) -> DataFrame:
     """vouchers/refs: (doc_id, page_num, text, text_hash, dates, amounts).
 
     Returns ranked candidate matches: probe keys + t_doc, t_page, sim,
-    rn (1..top_k).
+    rn (1..TOP_K).
 
     Scoring contract: either ``pair_scorer(pairs, vouchers', refs')`` —
     a relational scorer mapping the pair set to (probe, t_doc, t_page,
@@ -229,14 +227,6 @@ def match_pages(
     (content_matcher.py:291-304). Pass :data:`REF_PER_KEY_CAP` (the
     documented scale knob, used by the oracled queries) to bound each
     blocking key's reference bucket and survive web-scale hot keys.
-
-    ``broadcast_refs``: True forces a broadcast hint on the reference
-    side of the exact-hash join — only safe when the caller KNOWS the
-    reference index fits in driver/executor memory. Default False: no
-    hint, AQE picks broadcast at runtime when the build side is small
-    (it does at every test SF) and falls back to a shuffled hash join
-    when it isn't — a hard F.broadcast here would force a driver-side
-    build and OOM at 100× corpus scale.
 
     ``best_only``: True emits ONLY each probe's rn=1 row (same schema,
     rn ≡ 1) via a map-side-combinable max_by argmax instead of the
@@ -261,11 +251,12 @@ def match_pages(
         F.col("amounts").alias("t_amounts"),
     )
 
-    # J1 — exact hash short-circuit (broadcast only on explicit opt-in;
-    # see broadcast_refs in the docstring)
-    r_build = F.broadcast(r) if broadcast_refs else r
+    # J1 — exact hash short-circuit. No broadcast hint: AQE broadcasts
+    # the reference side at runtime when it is small and falls back to
+    # a shuffled hash join when it isn't (a hard F.broadcast would force
+    # a driver-side build and OOM at 100× corpus scale).
     exact = (
-        v.join(r_build, F.col("text_hash") == F.col("t_hash"))
+        v.join(r, F.col("text_hash") == F.col("t_hash"))
         .select(*_PROBE, "t_doc", "t_page", F.lit(1.0).alias("sim"))
     )
     exact_probes = exact.select(*_PROBE)  # left_anti tolerates dupes
@@ -277,7 +268,9 @@ def match_pages(
     # sit on the timed match path, so swapping them needs its own
     # interleaved benchmark. A long-lived session frees them with
     # spark.catalog.clearCache() after its last action on the result
-    # (bench and the test suite do).
+    # (bench and the test suite do). Dropping them fails
+    # test_exact_join_broadcasts_via_aqe_without_hint and
+    # test_warm_match_query_compiles_nothing.
     rest = v.join(exact_probes, _PROBE, "left_anti").cache()
 
     # J2/J3 — blocking joins on exploded date / normalized-amount keys.
@@ -406,7 +399,7 @@ def match_pages(
         scored = pair_scorer(pairs, rest, r).filter(
             F.col("sim") >= partial_threshold
         )
-        return _rank_topk(exact, scored, top_k)
+        return _rank_topk(exact, scored, C.TOP_K)
     # candidate leg joins both texts; the fallback leg picks its ref
     # text off the bounded broadcast instead of re-joining r
     joined = cand.join(rest.select(*_PROBE, "text"), _PROBE).join(
@@ -452,7 +445,7 @@ def match_pages(
         .repartition(*_PROBE)
         .filter(F.col("sim") >= partial_threshold)
     )
-    return _rank_topk(exact, scored, top_k)
+    return _rank_topk(exact, scored, C.TOP_K)
 
 
 def _rank_best(

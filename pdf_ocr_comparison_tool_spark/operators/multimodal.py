@@ -54,9 +54,9 @@ DECODE_SCHEMA = (
 )
 
 
-def media_manifest(extracted: DataFrame, spans_col: str = "spans") -> DataFrame:
+def media_manifest(extracted: DataFrame) -> DataFrame:
     """Extraction output → one row per media span with fetch metadata."""
-    media = F.filter(F.col(spans_col), lambda s: s["kind"] == "media")
+    media = F.filter(F.col("spans"), lambda s: s["kind"] == "media")
     rows = extracted.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.explode(media).alias("s"),
@@ -280,7 +280,7 @@ def _thumb_values(payload: bytes, t: int) -> tuple[str, list[int]]:
     )
 
 
-def thumbnail_media(with_payload: DataFrame, t: int = THUMB_GRID) -> DataFrame:
+def thumbnail_media(with_payload: DataFrame) -> DataFrame:
     """mapInPandas thumbnail stage — the RESIZE step of the multimodal
     pipeline, REAL for the codec-free formats (BMP pixel grid, WAV
     waveform envelope): one integer per grid cell, comma-joined so the
@@ -294,10 +294,10 @@ def thumbnail_media(with_payload: DataFrame, t: int = THUMB_GRID) -> DataFrame:
                 continue
             fmts, sigs, means = [], [], []
             for payload in pdf["payload"]:
-                fmt, vals = _thumb_values(payload, t)
+                fmt, vals = _thumb_values(payload, THUMB_GRID)
                 fmts.append(fmt)
                 sigs.append(",".join(str(v) for v in vals))
-                means.append(float(sum(vals)) / (t * t))
+                means.append(float(sum(vals)) / (THUMB_GRID * THUMB_GRID))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,

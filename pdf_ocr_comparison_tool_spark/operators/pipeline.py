@@ -50,44 +50,38 @@ SPLIT_VALID = 950  # buckets [900, 950) → valid; rest → test
 
 
 def data_split(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    passthrough: tuple[str, ...] = ("source",),
+    docs: DataFrame, passthrough: tuple[str, ...] = ("source",)
 ) -> DataFrame:
     """Deterministic train/valid/test assignment — the standard
     content-free holdout split of a training pipeline: bucket = first
-    8 md5 hex chars of the id, mod SPLIT_BUCKETS. Pure function of the
+    8 md5 hex chars of doc_id, mod SPLIT_BUCKETS. Pure function of the
     id — stable across engines, runs, partitionings and corpus growth
     (a doc never migrates between splits when new data arrives), unlike
     ``df.randomSplit`` whose assignment depends on partition layout.
     Narrow (no shuffle) at any scale. ``passthrough`` names extra
     columns to carry (default the documents table's ``source``; pass
     ``()`` for frames that don't have it)."""
-    b = hash_bucket(F.col(id_col), SPLIT_BUCKETS)
+    b = hash_bucket(F.col("doc_id"), SPLIT_BUCKETS)
     split = (
         F.when(b < SPLIT_TRAIN, F.lit("train"))
         .when(b < SPLIT_VALID, F.lit("valid"))
         .otherwise(F.lit("test"))
     )
     return docs.select(
-        id_col,
+        "doc_id",
         *passthrough,
         b.cast("long").alias("bucket"),
         split.alias("split"),
     )
 
 
-def split_leakage(
-    docs: DataFrame,
-    n: int | None = None,
-    threshold: float | None = None,
-) -> DataFrame:
+def split_leakage(docs: DataFrame) -> DataFrame:
     """Train/held-out LEAKAGE AUDIT — decontamination run across one's
     own split boundary (the check GPT-3 appendix C / The Pile report
     for their dev/test sets): per TRAIN-split document, how many
     test-split documents share word n-grams with it and the maximum
     fraction of any test doc's distinct n-grams it contains;
-    ``contaminated`` at ≥ ``threshold``. Splits are the deterministic
+    ``contaminated`` at ≥ ``dedup.DECON_FRAC``. Splits are the deterministic
     :func:`data_split` assignment (pure function of doc_id), so the
     audit is reproducible without materializing the split.
 
@@ -99,8 +93,6 @@ def split_leakage(
     self-pair filter is needed."""
     from .dedup import DECON_FRAC, DECON_NGRAM, _ngrams_col, tokens_col
 
-    n = DECON_NGRAM if n is None else n
-    threshold = DECON_FRAC if threshold is None else threshold
     b = hash_bucket(F.col("doc_id"), SPLIT_BUCKETS)
     toks = tokens_col(F.col("text"))
     gh = F.md5(F.col("gram"))
@@ -108,7 +100,9 @@ def split_leakage(
     def dgrams(src: DataFrame) -> DataFrame:
         return src.select(
             "doc_id",
-            F.explode(F.array_distinct(_ngrams_col(toks, n))).alias("gram"),
+            F.explode(
+                F.array_distinct(_ngrams_col(toks, DECON_NGRAM))
+            ).alias("gram"),
         ).select("doc_id", gh.alias("h"))
 
     train = docs.filter(b < SPLIT_TRAIN)
@@ -135,7 +129,7 @@ def split_leakage(
         "doc_id",
         F.coalesce("n_eval_docs_hit", F.lit(0)).cast("long").alias("n_eval_docs_hit"),
         F.coalesce("max_overlap_frac", F.lit(0.0)).alias("max_overlap_frac"),
-        (F.coalesce("max_overlap_frac", F.lit(0.0)) >= threshold).alias(
+        (F.coalesce("max_overlap_frac", F.lit(0.0)) >= DECON_FRAC).alias(
             "contaminated"
         ),
     )
@@ -154,31 +148,31 @@ SOURCE_CAP = 20
 _CAP_SALTS = 16
 
 
-def source_cap_sample(docs: DataFrame, cap: int = SOURCE_CAP) -> DataFrame:
+def source_cap_sample(docs: DataFrame) -> DataFrame:
     """Per-source document cap — the per-domain downsampling step of a
-    training mixture (keep at most ``cap`` docs per source): rank docs
-    within each source by (md5(doc_id), doc_id) — a deterministic
+    training mixture (keep at most ``SOURCE_CAP`` docs per source): rank
+    docs within each source by (md5(doc_id), doc_id) — a deterministic
     uniform shuffle, stable across runs and corpus growth for the docs
-    already present — and keep rank ≤ cap.
+    already present — and keep rank ≤ SOURCE_CAP.
 
     Scale shape: two-phase salted ranking, same pattern as the blocking
     cap in matching.match_pages — a single per-source window would sort
     a billion-doc source on one reducer. Phase 1 ranks within (source,
-    salt) cells (16-way spread), keeping ≤ cap per cell; phase 2 ranks
-    the ≤ 16·cap survivors per source. Any global top-cap row is
-    top-cap within its cell, so the result is identical."""
+    salt) cells (16-way spread), keeping ≤ SOURCE_CAP per cell; phase 2
+    ranks the ≤ 16·SOURCE_CAP survivors per source. Any global top-cap
+    row is top-cap within its cell, so the result is identical."""
     h = F.md5(F.col("doc_id").cast("string"))
     salt = F.pmod(F.crc32(F.col("doc_id").cast("string")), F.lit(_CAP_SALTS))
     w1 = Window.partitionBy("source", salt).orderBy(h.asc(), F.col("doc_id").asc())
     phase1 = (
         docs.select("doc_id", "source")
         .withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= cap)
+        .filter(F.col("rn1") <= SOURCE_CAP)
     )
     w2 = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         phase1.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= cap)
+        .filter(F.col("rk") <= SOURCE_CAP)
         .select("doc_id", "source", F.col("rk").cast("long").alias("rk"))
     )
 
@@ -261,11 +255,11 @@ TOKEN_BUDGET = 1_000_000  # training-run token budget
 EPOCH_CAP = 4  # data-constrained repeat ceiling (Muennighoff et al. '23)
 
 
-def epochs_per_source(docs: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
+def epochs_per_source(docs: DataFrame) -> DataFrame:
     """Token-budget planner — the step between :func:`mixture_weights`
     and a training run's dataloader config: per source its unique
     whitespace-token mass, the √-temperature share of the run's token
-    ``budget``, and the implied REPEAT EPOCHS (allocation ÷ unique
+    ``TOKEN_BUDGET``, and the implied REPEAT EPOCHS (allocation ÷ unique
     tokens). Sources whose implied epochs exceed ``EPOCH_CAP`` are
     flagged and their effective allocation capped — the
     data-constrained-scaling rule of thumb (repeating data beyond ~4
@@ -302,7 +296,7 @@ def epochs_per_source(docs: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
     )
     toks_d = F.col("src_tokens").cast("double")
     share = F.sqrt(toks_d) / F.col("sum_sqrt")
-    alloc = share * F.lit(float(budget))
+    alloc = share * F.lit(float(TOKEN_BUDGET))
     epochs = alloc / toks_d
     cap_d = F.lit(float(EPOCH_CAP))
     return per.crossJoin(F.broadcast(tot)).select(
@@ -321,11 +315,11 @@ SAMPLE_TARGET = 300
 _SAMPLE_RES = 1_000_000  # hash resolution for the keep threshold
 
 
-def mixture_sample(docs: DataFrame, target_total: int = SAMPLE_TARGET) -> DataFrame:
+def mixture_sample(docs: DataFrame) -> DataFrame:
     """Materialize the α=0.5 temperature mixture as an actual sampled
     corpus — the step between :func:`mixture_weights` and a training
     run: per source, a deterministic keep-probability
-    ``p_s = min(1, share_s · target_total / n_s)`` where ``share_s ∝
+    ``p_s = min(1, share_s · SAMPLE_TARGET / n_s)`` where ``share_s ∝
     √(corpus share)`` (the same 1/√p up-weighting, normalized), applied
     as a pure hash-threshold test ``md5_bucket(doc_id) < p_s·RES``.
 
@@ -353,7 +347,7 @@ def mixture_sample(docs: DataFrame, target_total: int = SAMPLE_TARGET) -> DataFr
         F.lit(1.0),
         (
             F.sqrt(F.col("n_src").cast("double")) / F.col("sum_sqrt")
-            * F.lit(float(target_total))
+            * F.lit(float(SAMPLE_TARGET))
             / F.col("n_src").cast("double")
         ),
     )
@@ -379,23 +373,23 @@ def mixture_sample(docs: DataFrame, target_total: int = SAMPLE_TARGET) -> DataFr
 CHUNK_TOKENS = 64
 
 
-def doc_chunks(docs: DataFrame, chunk: int = CHUNK_TOKENS) -> DataFrame:
+def doc_chunks(docs: DataFrame) -> DataFrame:
     """Fixed-size token-window chunking — the long-document splitting
     step (context prep / RAG indexing): cut each doc's token stream
-    every ``chunk`` tokens, emit (doc_id, chunk_idx, n_tokens,
+    every ``CHUNK_TOKENS`` tokens, emit (doc_id, chunk_idx, n_tokens,
     chunk_text).
 
     Shape: posexplode tokens → groupBy (doc, chunk_idx) → ordered
     reassembly of the ≤chunk-token group. The group key carries doc_id,
     so a hot document cannot concentrate on one reducer beyond its own
-    chunk count, and the per-group arrays are bounded by ``chunk`` —
+    chunk count, and the per-group arrays are bounded by ``CHUNK_TOKENS`` —
     safe at any corpus scale. (A per-doc HOF-slice formulation would
     re-evaluate the tokenizer once per chunk — the lambda-body
     re-evaluation rule — and is why this is relational.)"""
     toks = dedup.tokens_col(F.col("text"))
     pos = docs.select(
         "doc_id", F.posexplode(toks).alias("pos", "tok")
-    ).withColumn("chunk_idx", (F.col("pos") / chunk).cast("long"))
+    ).withColumn("chunk_idx", (F.col("pos") / CHUNK_TOKENS).cast("long"))
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "tok"))), lambda s: s["tok"]
     )
@@ -408,10 +402,11 @@ def doc_chunks(docs: DataFrame, chunk: int = CHUNK_TOKENS) -> DataFrame:
 CHUNK_STRIDE_DEN = 2  # overlap stride = CHUNK_TOKENS / 2 (50% overlap)
 
 
-def doc_chunks_overlap(docs: DataFrame, chunk: int = CHUNK_TOKENS) -> DataFrame:
+def doc_chunks_overlap(docs: DataFrame) -> DataFrame:
     """SLIDING-window chunking (RAG indexing shape): chunks of ``chunk``
-    tokens every ``chunk // CHUNK_STRIDE_DEN`` tokens, so consecutive
-    chunks overlap 50% and no query phrase straddles a hard boundary.
+    = ``CHUNK_TOKENS`` tokens every ``chunk // CHUNK_STRIDE_DEN`` tokens,
+    so consecutive chunks overlap 50% and no query phrase straddles a
+    hard boundary.
 
     Ownership is enumerated, never derived by division on a negative
     numerator: token at ``pos`` belongs to chunks ``pos DIV stride - j``
@@ -420,6 +415,7 @@ def doc_chunks_overlap(docs: DataFrame, chunk: int = CHUNK_TOKENS) -> DataFrame:
     truncating DIV and DuckDB's flooring ``//`` agree (they DIVERGE on
     negatives — the cross-engine trap this shape avoids). Same bounded
     groupBy scale story as :func:`doc_chunks`, K× the rows (K = 2)."""
+    chunk = CHUNK_TOKENS
     stride = chunk // CHUNK_STRIDE_DEN
     k = (chunk + stride - 1) // stride
     toks = dedup.tokens_col(F.col("text"))
@@ -488,12 +484,13 @@ def pack_tape_hash(id_col) -> "F.Column":
     ).cast("long")
 
 
-def pack_shift(n_docs: int, target: int = PACK_TARGET_BUCKET_DOCS) -> int:
+def pack_shift(n_docs: int) -> int:
     """Right-shift applied to the 48-bit tape hash so the expected
-    bucket occupancy is ≈ ``target`` docs: 2^(48-shift) buckets."""
+    bucket occupancy is ≈ ``PACK_TARGET_BUCKET_DOCS`` docs:
+    2^(48-shift) buckets."""
     import math
 
-    want_buckets = max(1, n_docs // target)
+    want_buckets = max(1, n_docs // PACK_TARGET_BUCKET_DOCS)
     bits = min(PACK_HASH_BITS, math.ceil(math.log2(want_buckets))) if want_buckets > 1 else 0
     return PACK_HASH_BITS - bits
 
@@ -558,16 +555,10 @@ def _bucketed_cumsum(
     )
 
 
-def seq_packing(
-    docs: DataFrame,
-    ctx: int = CTX_TOKENS,
-    target_bucket_docs: int = PACK_TARGET_BUCKET_DOCS,
-    cumsum_threshold: int = PACK_CUMSUM_THRESHOLD,
-    fanin_bits: int = PACK_FANIN_BITS,
-) -> DataFrame:
+def seq_packing(docs: DataFrame) -> DataFrame:
     """Concat-and-split sequence packing — the pretraining batch-prep
     step: lay all documents out on one token tape and cut it every
-    ``ctx`` tokens. Emits per doc its global token offset, the pack
+    ``CTX_TOKENS`` tokens. Emits per doc its global token offset, the pack
     (context window) its first token lands in, and the offset within
     that pack.
 
@@ -580,10 +571,10 @@ def seq_packing(
     The global running offset is a prefix sum. A naive
     ``SUM() OVER (ORDER BY ...)`` sorts the whole corpus on ONE
     reducer — the classic scale-killer — so: phase 1 cumsums within
-    hash-contiguous buckets sized to ≈``target_bucket_docs`` docs
+    hash-contiguous buckets sized to ≈``PACK_TARGET_BUCKET_DOCS`` docs
     (parallel partitioned windows), then the per-bucket totals go
     through :func:`_bucketed_cumsum`, which RECURSES until no
-    unpartitioned window sees more than ``cumsum_threshold`` rows —
+    unpartitioned window sees more than ``PACK_CUMSUM_THRESHOLD`` rows —
     at 10⁹+ docs the totals table is no longer a single-reducer
     window either. Values are identical to the single global window
     over the same tape order, which is what the DuckDB oracle
@@ -596,27 +587,17 @@ def seq_packing(
     )
     # scalar corpus count → bucket granularity (one count job; at real
     # scale this is parquet-metadata cheap and amortized per run)
-    return _pack_tape(
-        base, docs.count(), ctx,
-        target_bucket_docs, cumsum_threshold, fanin_bits,
-    )
+    return _pack_tape(base, docs.count())
 
 
-def _pack_tape(
-    base: DataFrame,
-    n_docs: int,
-    ctx: int,
-    target_bucket_docs: int = PACK_TARGET_BUCKET_DOCS,
-    cumsum_threshold: int = PACK_CUMSUM_THRESHOLD,
-    fanin_bits: int = PACK_FANIN_BITS,
-) -> DataFrame:
+def _pack_tape(base: DataFrame, n_docs: int) -> DataFrame:
     """Shared tape layout of :func:`seq_packing` /
     :func:`interleaved_packing`: two-phase distributed prefix sum of
     ``n_tokens`` over the tape order ``(h, doc_id)``. ``base`` must
     carry (doc_id, n_tokens, h) plus any passthrough columns, which
     survive into the output alongside tok_offset/pack_id/pack_offset."""
     passthrough = [c for c in base.columns if c not in ("h",)]
-    shift = pack_shift(n_docs, target_bucket_docs)
+    shift = pack_shift(n_docs)
     base = base.withColumn("bkt", F.shiftright("h", shift))
     w_in = (
         Window.partitionBy("bkt")
@@ -627,18 +608,17 @@ def _pack_tape(
         "off_in", F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0))
     )
     totals = base.groupBy("bkt").agg(F.sum("n_tokens").alias("bkt_tokens"))
-    offsets = _bucketed_cumsum(
-        totals, "bkt", "bkt_tokens", "bkt_off",
-        cumsum_threshold, fanin_bits,
-    ).select("bkt", "bkt_off")
+    offsets = _bucketed_cumsum(totals, "bkt", "bkt_tokens", "bkt_off").select(
+        "bkt", "bkt_off"
+    )
     g_off = F.col("off_in") + F.col("bkt_off")
     return (
         within.join(offsets, "bkt")
         .select(
             *passthrough,
             g_off.cast("long").alias("tok_offset"),
-            F.floor(g_off / ctx).cast("long").alias("pack_id"),
-            F.pmod(g_off, F.lit(ctx)).cast("long").alias("pack_offset"),
+            F.floor(g_off / CTX_TOKENS).cast("long").alias("pack_id"),
+            F.pmod(g_off, F.lit(CTX_TOKENS)).cast("long").alias("pack_offset"),
         )
     )
 
@@ -646,15 +626,11 @@ def _pack_tape(
 MEDIA_TOKENS = 256  # fixed vision-token budget charged per media span
 
 
-def interleaved_packing(
-    spans_docs: DataFrame,
-    ctx: int = CTX_TOKENS,
-    media_tokens: int = MEDIA_TOKENS,
-) -> DataFrame:
+def interleaved_packing(spans_docs: DataFrame) -> DataFrame:
     """Multimodal twin of :func:`seq_packing` over the INTERLEAVED
     spans IR — the batch-prep step of a text+media pretraining run
     (the north rule's payload): each document's tape cost is its
-    extracted text spans' token count plus a fixed ``media_tokens``
+    extracted text spans' token count plus a fixed ``MEDIA_TOKENS``
     budget per media span (the constant patch-token count a vision
     encoder contributes per image, as in Flamingo/LLaVA-style
     packing).
@@ -686,12 +662,12 @@ def interleaved_packing(
         "doc_id",
         "n_text_tokens",
         "n_media",
-        (F.col("n_text_tokens") + media_tokens * F.col("n_media"))
+        (F.col("n_text_tokens") + MEDIA_TOKENS * F.col("n_media"))
         .cast("long")
         .alias("n_tokens"),
         "h",
     )
-    return _pack_tape(base, spans_docs.count(), ctx)
+    return _pack_tape(base, spans_docs.count())
 
 
 def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -717,9 +693,7 @@ def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def corpus_upsert(
-    old: DataFrame, new: DataFrame, old_ver: int = 1, new_ver: int = 2
-) -> DataFrame:
+def corpus_upsert(old: DataFrame, new: DataFrame) -> DataFrame:
     """SCD-style corpus MERGE — the APPLY side of :func:`corpus_diff`
     (Iceberg ``MERGE INTO`` semantics as one full-outer id join):
     resolve two snapshots into the next table state with the lineage
@@ -728,7 +702,7 @@ def corpus_upsert(
     removed ids (retained so downstream deltas can propagate deletes),
     ``first_seen_ver`` (ingest history survives the merge) and
     ``last_changed_ver`` (bumped only when content actually changed —
-    the re-extraction trigger).
+    the re-extraction trigger). ``old`` is version 1, ``new`` version 2.
 
     Scale shape: inherits corpus_diff's — narrow (id, hash)
     projections, one full-outer join on the unique id, content never
@@ -739,12 +713,12 @@ def corpus_upsert(
         "doc_id",
         F.coalesce("new_hash", "old_hash").alias("text_hash"),
         (st == "removed").alias("is_tombstone"),
-        F.when(st == "added", F.lit(new_ver))
-        .otherwise(F.lit(old_ver))
+        F.when(st == "added", F.lit(2))
+        .otherwise(F.lit(1))
         .cast("long")
         .alias("first_seen_ver"),
-        F.when(st == "unchanged", F.lit(old_ver))
-        .otherwise(F.lit(new_ver))
+        F.when(st == "unchanged", F.lit(1))
+        .otherwise(F.lit(2))
         .cast("long")
         .alias("last_changed_ver"),
         "status",
@@ -802,19 +776,19 @@ def mixture_drift(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def pack_manifest(docs: DataFrame, ctx: int = CTX_TOKENS) -> DataFrame:
+def pack_manifest(docs: DataFrame) -> DataFrame:
     """The pack-level view of :func:`seq_packing` — what a dataloader
     actually indexes: per context-window pack, how many documents START
     in it, their combined token count, and whether those tokens alone
     already fill the window (docs spilling in from the previous pack
     are accounted to their starting pack, the standard manifest
     convention). One bounded groupBy over the packing output."""
-    sp = seq_packing(docs, ctx)
+    sp = seq_packing(docs)
     return sp.groupBy("pack_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("sum_tokens"),
         F.min("tok_offset").cast("long").alias("first_offset"),
-        (F.sum("n_tokens") >= ctx).alias("fills_window"),
+        (F.sum("n_tokens") >= CTX_TOKENS).alias("fills_window"),
     )
 
 
@@ -1000,15 +974,13 @@ def funnel_by_source(docs: DataFrame) -> DataFrame:
 CLUSTER_CAP = 25
 
 
-def cluster_cap_sample(
-    docs: DataFrame, embeddings: DataFrame, cap: int = CLUSTER_CAP
-) -> DataFrame:
+def cluster_cap_sample(docs: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Diversity-balanced sampling over EMBEDDING clusters — the
     semantic counterpart of :func:`source_cap_sample` (data-curation
     pipelines cap per topic cluster so dominant content types don't
     swamp the mixture): assign every doc to its nearest centroid (the
     IVF coarse quantizer — a trained k-means fit drops in the same way,
-    see similarity_search.ivf_assign), then keep at most ``cap`` docs
+    see similarity_search.ivf_assign), then keep at most ``CLUSTER_CAP`` docs
     per cluster by the deterministic (md5(id), id) shuffle rank.
 
     Scale shape: the assignment is a broadcast-centroid argmin (never
@@ -1028,12 +1000,12 @@ def cluster_cap_sample(
     )
     phase1 = (
         j.withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= cap)
+        .filter(F.col("rn1") <= CLUSTER_CAP)
     )
     w2 = Window.partitionBy("centroid_id").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         phase1.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= cap)
+        .filter(F.col("rk") <= CLUSTER_CAP)
         .select(
             "doc_id",
             F.col("centroid_id").cast("long").alias("centroid_id"),
@@ -1045,9 +1017,7 @@ def cluster_cap_sample(
 HIST_BUCKET_CHARS = 500
 
 
-def length_histogram(
-    docs: DataFrame, bucket_chars: int = HIST_BUCKET_CHARS
-) -> DataFrame:
+def length_histogram(docs: DataFrame) -> DataFrame:
     """Per-source document-length histogram — the dataset-card
     distribution shape (exact-percentile profiling doesn't distribute:
     an exact per-group percentile sorts the group on one reducer, and
@@ -1057,7 +1027,9 @@ def length_histogram(
     fraction."""
     from pyspark.sql import Window as W
 
-    b = (F.floor(F.col("n_chars") / bucket_chars) * bucket_chars).cast("long")
+    b = (
+        F.floor(F.col("n_chars") / HIST_BUCKET_CHARS) * HIST_BUCKET_CHARS
+    ).cast("long")
     g = docs.groupBy(F.col("source"), b.alias("bucket_lo")).agg(
         F.count("*").alias("n_docs")
     )
@@ -1077,9 +1049,7 @@ def length_histogram(
 ANNEAL_ALPHAS = (25, 50, 75, 100)  # temperature ladder, α in percent
 
 
-def mixture_schedule(
-    docs: DataFrame, target_total: int = SAMPLE_TARGET
-) -> DataFrame:
+def mixture_schedule(docs: DataFrame) -> DataFrame:
     """Temperature-ANNEALED mixture schedule (the multilingual /
     multi-source curriculum: early epochs flatten the distribution,
     late epochs approach natural frequency): per α checkpoint in
@@ -1117,7 +1087,7 @@ def mixture_schedule(
     share = F.col("p") / F.col("p_sum")
     rate = F.least(
         F.lit(1.0),
-        share * F.lit(float(target_total)) / F.col("n_src").cast("double"),
+        share * F.lit(float(SAMPLE_TARGET)) / F.col("n_src").cast("double"),
     )
     return rows.join(sums, "alpha_pct").select(
         "alpha_pct",

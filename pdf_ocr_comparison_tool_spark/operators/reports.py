@@ -63,8 +63,8 @@ def page_quality(pages: DataFrame) -> DataFrame:
     )
 
 
-def keyword_top(docs: DataFrame, n: int = 50) -> DataFrame:
-    """A8: global token frequency top-N with distinct-doc counts
+def keyword_top(docs: DataFrame) -> DataFrame:
+    """A8: global token frequency top-50 with distinct-doc counts
     (reference main.py:632-667; F7 short/digit token filter,
     ocr_engine.py:407)."""
     toks = docs.select(
@@ -79,16 +79,16 @@ def keyword_top(docs: DataFrame, n: int = 50) -> DataFrame:
     # rows. A row_number() window over an UNPARTITIONED orderBy would
     # instead funnel the entire web-scale vocabulary through one
     # reducer. rank is derived after the (tiny) limit.
-    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(n)
+    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(50)
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     return top.select(
         F.row_number().over(w).cast("long").alias("rank"), "token", "n", "n_docs"
     )
 
 
-def page_top_keywords(pages: DataFrame, k: int = 3) -> DataFrame:
-    """A3: top-k tokens per page (reference ocr_engine.py:392-412
-    most_common(10); k=3 here to keep fixtures small), deterministic
+def page_top_keywords(pages: DataFrame) -> DataFrame:
+    """A3: top-3 tokens per page (reference ocr_engine.py:392-412
+    most_common(10); 3 here to keep fixtures small), deterministic
     tiebreak (count desc, token asc)."""
     toks = pages.select(
         "doc_id", "role", "page_num",
@@ -102,7 +102,7 @@ def page_top_keywords(pages: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select(
             "doc_id", "role", "page_num",
             F.col("rank").cast("long").alias("rank"), "token", "n",
@@ -172,7 +172,7 @@ def lineitem_rollup(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def events_sessions(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
+def events_sessions(events: DataFrame) -> DataFrame:
     """Sessionization: gaps-and-islands on per-user event times (the W3
     lag+cumsum shape applied to the events table)."""
     epoch = ntz_epoch("ts")
@@ -182,7 +182,7 @@ def events_sessions(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFr
     )
     w = Window.partitionBy("user_id").orderBy("epoch", "event_id")
     brk = F.when(
-        (F.col("epoch") - F.lag("epoch").over(w)) <= gap_sec, F.lit(0)
+        (F.col("epoch") - F.lag("epoch").over(w)) <= SESSION_GAP_SEC, F.lit(0)
     ).otherwise(F.lit(1))
     sess = e.withColumn("brk", brk).withColumn(
         "session", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -195,12 +195,12 @@ def events_sessions(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFr
     ).withColumn("session", F.col("session").cast("long"))
 
 
-def events_topk(events: DataFrame, k: int = 3) -> DataFrame:
-    """W5: top-k events per user by value, deterministic tiebreak."""
+def events_topk(events: DataFrame) -> DataFrame:
+    """W5: top-3 events per user by value, deterministic tiebreak."""
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("user_id", F.col("rn").cast("long").alias("rn"), "event_id", "value")
     )
 
@@ -210,9 +210,7 @@ def events_topk(events: DataFrame, k: int = 3) -> DataFrame:
 FUNNEL_STAGES: tuple[str, ...] = ("view", "click", "purchase")
 
 
-def events_funnel(
-    events: DataFrame, stages: tuple[str, ...] = FUNNEL_STAGES
-) -> DataFrame:
+def events_funnel(events: DataFrame) -> DataFrame:
     """Strict-order conversion funnel: per user, the first time each
     stage completes strictly AFTER the previous stage's first
     completion (the standard product-analytics funnel over an event
@@ -232,7 +230,7 @@ def events_funnel(
     prev = None
     prev_t = None  # previous stage's (user_id, t_prev) aggregate
     tcols = []
-    for s in stages:
+    for s in FUNNEL_STAGES:
         se = e.filter(F.col("et") == s)
         if prev_t is not None:
             # join the previous stage's AGGREGATE (exactly the users
@@ -324,12 +322,7 @@ def _revenue_dec() -> "F.Column":
 
 
 def shipping_priority(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    segment: str = Q3_SEGMENT,
-    cutoff: int = Q3_CUTOFF_EPOCH,
-    k: int = Q3_TOPK,
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """TPC-H Q3-shaped shipping-priority query: revenue of not-yet-
     shipped lineitems of pre-cutoff orders from one market segment,
@@ -339,13 +332,13 @@ def shipping_priority(
     sort. Date predicates compare tz-independent epochs.
 
     Emits (rank, order_key, revenue, order_epoch, priority)."""
-    c = customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
+    c = customer.filter(F.col("c_mktsegment") == Q3_SEGMENT).select("c_custkey")
     o = (
         orders.withColumn("o_epoch", ntz_epoch("o_orderdate"))
-        .filter(F.col("o_epoch") < cutoff)
+        .filter(F.col("o_epoch") < Q3_CUTOFF_EPOCH)
         .select("o_orderkey", "o_custkey", "o_epoch", "o_orderpriority")
     )
-    li = lineitem.filter(ntz_epoch("l_shipdate") > cutoff).select(
+    li = lineitem.filter(ntz_epoch("l_shipdate") > Q3_CUTOFF_EPOCH).select(
         "l_orderkey", _revenue_dec().alias("rev")
     )
     oc = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
@@ -361,7 +354,7 @@ def shipping_priority(
     )
     top = agg.orderBy(
         F.desc("revenue"), F.asc("o_epoch"), F.asc("l_orderkey")
-    ).limit(k)
+    ).limit(Q3_TOPK)
     w = Window.orderBy(F.desc("revenue"), F.asc("o_epoch"), F.asc("l_orderkey"))
     return top.withColumn("rank", F.row_number().over(w)).select(
         F.col("rank").cast("long").alias("rank"),
@@ -374,14 +367,11 @@ def shipping_priority(
 
 
 Q14_PROMO_TYPE = "PROMO"
+Q14_FROM_EPOCH = 820_454_400  # 1996-01-01 UTC
+Q14_TO_EPOCH = 852_076_800    # 1997-01-01 UTC
 
 
-def promo_revenue(
-    lineitem: DataFrame,
-    part: DataFrame,
-    from_epoch: int = 820_454_400,   # 1996-01-01 UTC
-    to_epoch: int = 852_076_800,     # 1997-01-01 UTC
-) -> DataFrame:
+def promo_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q14-shaped promotion-effect query: the share of one ship-
     year's revenue carried by promo-type parts. The part dim
     broadcasts; revenue is the exact-decimal price·(1−discount)
@@ -389,8 +379,8 @@ def promo_revenue(
 
     Emits one row (promo_rev, total_rev, promo_share, n_items)."""
     li = lineitem.filter(
-        (ntz_epoch("l_shipdate") >= from_epoch)
-        & (ntz_epoch("l_shipdate") < to_epoch)
+        (ntz_epoch("l_shipdate") >= Q14_FROM_EPOCH)
+        & (ntz_epoch("l_shipdate") < Q14_TO_EPOCH)
     ).select("l_partkey", _revenue_dec().alias("rev"))
     p = part.select(
         "p_partkey", (F.col("p_type") == Q14_PROMO_TYPE).alias("is_promo")
@@ -418,7 +408,6 @@ def region_revenue(
     supplier: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    rname: str = Q5_REGION,
 ) -> DataFrame:
     """TPC-H Q5-shaped local-supplier revenue per nation: one region,
     one order-year, and the classic locality condition — the lineitem
@@ -431,7 +420,7 @@ def region_revenue(
     Emits (nation, revenue, n_items)."""
     n = (
         nation.join(
-            F.broadcast(region.filter(F.col("r_name") == rname)),
+            F.broadcast(region.filter(F.col("r_name") == Q5_REGION)),
             nation.n_regionkey == region.r_regionkey,
         )
         .select("n_nationkey", "n_name")
@@ -584,9 +573,7 @@ def event_transitions(events: DataFrame) -> DataFrame:
 PROPS_BAND_WIDTH = 10  # fixed-width banding of the $.k payload field
 
 
-def props_rollup(
-    events: DataFrame, band_width: int = PROPS_BAND_WIDTH
-) -> DataFrame:
+def props_rollup(events: DataFrame) -> DataFrame:
     """Semi-structured rollup: parse the raw JSON ``props`` payload,
     extract ``$.k``, band it fixed-width, aggregate per
     (event_type, k_band). The JSON path runs JVM-side
@@ -603,7 +590,7 @@ def props_rollup(
     e = events.select(
         "event_type",
         "user_id",
-        F.floor(k / band_width).cast("long").alias("k_band"),
+        F.floor(k / PROPS_BAND_WIDTH).cast("long").alias("k_band"),
         F.col("value").cast("decimal(28,6)").alias("value_dec"),
     )
     return e.groupBy("event_type", "k_band").agg(

@@ -30,6 +30,8 @@ from ..materialize import materialize
 
 EMB_DIM = 64
 LSH_BITS = 16
+ANN_N_QUERIES = 8  # bounded eval probe set of the ANN searches
+ANN_TOPK = 10
 
 
 def _dot(a, b) -> "F.Column":
@@ -40,7 +42,7 @@ def _dot(a, b) -> "F.Column":
 
 
 def ann_brute_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 10
+    embeddings: DataFrame, n_queries: int = ANN_N_QUERIES, k: int = ANN_TOPK
 ) -> DataFrame:
     """(vec_id, embedding) → (q_id, rank, c_id) for the first n_queries
     vectors against the whole table."""
@@ -73,11 +75,6 @@ def ann_brute_topk(
     )
 
 
-def _hyperplane_weight(i: int, j: int) -> int:
-    """Deterministic integer lattice weight in [-3, 3]."""
-    return ((i * 31 + j * 17) % 7) - 3
-
-
 def lsh_bucket(embeddings: DataFrame, bits: int = LSH_BITS) -> DataFrame:
     """(vec_id, embedding) → (vec_id, bucket) with a ``bits``-bit
     random-hyperplane signature."""
@@ -104,13 +101,11 @@ def lsh_bucket(embeddings: DataFrame, bits: int = LSH_BITS) -> DataFrame:
 
 
 LSH_SEARCH_BITS = 8  # search variant: coarser buckets → usable recall
+LSH_MAX_BUCKET = 256  # hot-bucket guard of the embedding-LSH self-joins
 
 
 def lsh_search(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 10,
-    bits: int = LSH_SEARCH_BITS,
+    embeddings: DataFrame, n_queries: int = ANN_N_QUERIES, k: int = ANN_TOPK
 ) -> DataFrame:
     """End-to-end LSH ANN search: probe bucket → bucket equi-join →
     exact-cosine rerank → top-k. THE scale path: candidate generation
@@ -120,7 +115,7 @@ def lsh_search(
     Emits (q_id, rank, c_id, sim); queries whose bucket holds fewer
     than k neighbors emit fewer rows (approximate by design — recall
     vs the brute-force baseline is pinned in tests)."""
-    b = lsh_bucket(embeddings, bits)
+    b = lsh_bucket(embeddings, LSH_SEARCH_BITS)
     norms = embeddings.select(
         "vec_id", "embedding", _dot("embedding", "embedding").alias("nsq")
     )
@@ -222,8 +217,8 @@ def ivf_assign(
 
 def ivf_search(
     embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 10,
+    n_queries: int = ANN_N_QUERIES,
+    k: int = ANN_TOPK,
     n_centroids: int = IVF_N_CENTROIDS,
     nprobe: int = IVF_NPROBE,
     centroids: DataFrame | None = None,
@@ -315,11 +310,10 @@ def _recall_against(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 
 def ann_recall(
     embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 10,
+    n_queries: int = ANN_N_QUERIES,
+    k: int = ANN_TOPK,
     n_centroids: int = IVF_N_CENTROIDS,
     nprobe: int = IVF_NPROBE,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Recall@k of the IVF search against the brute-force ground truth
     — the eval metric an ANN deployment is actually judged by.
@@ -328,23 +322,18 @@ def ann_recall(
     baseline (n_queries eval probes, never the corpus); the approx side
     is the production inverted-list equi-join path."""
     truth = ann_brute_topk(embeddings, n_queries, k).select("q_id", "c_id")
-    approx = ivf_search(
-        embeddings, n_queries, k, n_centroids, nprobe, centroids=centroids
-    ).select("q_id", "c_id")
+    approx = ivf_search(embeddings, n_queries, k, n_centroids, nprobe).select(
+        "q_id", "c_id"
+    )
     return _recall_against(truth, approx, k)
 
 
 TRUNC_DIM = 16  # Matryoshka truncation eval: keep the first 16 of 64
 
 
-def mrl_truncation_recall(
-    embeddings: DataFrame,
-    trunc_dim: int = TRUNC_DIM,
-    n_queries: int = 8,
-    k: int = 10,
-) -> DataFrame:
+def mrl_truncation_recall(embeddings: DataFrame) -> DataFrame:
     """Matryoshka (MRL) truncation eval: recall@k of cosine top-k over
-    the FIRST ``trunc_dim`` dimensions against the full-dimension
+    the FIRST ``TRUNC_DIM`` dimensions against the full-dimension
     ground truth — the measurement behind serving embeddings at a
     fraction of their stored width (truncate + renormalize ≡ cosine on
     the prefix). Both sides are the explicitly bounded brute baseline;
@@ -353,31 +342,26 @@ def mrl_truncation_recall(
     Gaussian embeddings carry no Matryoshka structure, so measured
     recall sits near the k/N random baseline of ~0.02 -- the harness
     proves the metric; an MRL-trained corpus supplies the signal.)"""
-    truth = ann_brute_topk(embeddings, n_queries, k).select("q_id", "c_id")
+    truth = ann_brute_topk(embeddings).select("q_id", "c_id")
     trunc = embeddings.select(
-        "vec_id", F.slice("embedding", 1, trunc_dim).alias("embedding")
+        "vec_id", F.slice("embedding", 1, TRUNC_DIM).alias("embedding")
     )
-    approx = ann_brute_topk(trunc, n_queries, k).select("q_id", "c_id")
-    return _recall_against(truth, approx, k)
+    approx = ann_brute_topk(trunc).select("q_id", "c_id")
+    return _recall_against(truth, approx, ANN_TOPK)
 
 
-def lsh_near_dups(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-) -> DataFrame:
+def lsh_near_dups(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs THE SCALE WAY: bucket
     self-join on the random-hyperplane signature + exact-cosine verify
     of in-bucket candidates only — never an all-pairs cross join (the
     `embedding_near_dups` brute baseline is explicitly bounded).
-    Buckets larger than ``max_bucket`` are dropped (hot-bucket guard,
+    Buckets larger than ``LSH_MAX_BUCKET`` are dropped (hot-bucket guard,
     same pattern as the MinHash-LSH dedup) so the b·(b−1)/2 in-bucket
     blowup is bounded; random hyperplanes keep buckets balanced, so at
     10¹² rows the guard only fires on degenerate signatures (e.g. the
-    all-zeros vector)."""
-    b = lsh_bucket(embeddings, bits)
-    small = b.groupBy("bucket").count().filter(F.col("count") <= max_bucket)
+    all-zeros vector). Pairs verify at cosine >= 0.35."""
+    b = lsh_bucket(embeddings, LSH_SEARCH_BITS)
+    small = b.groupBy("bucket").count().filter(F.col("count") <= LSH_MAX_BUCKET)
     bs = b.join(small.select("bucket"), "bucket")
     norms = embeddings.select(
         "vec_id", "embedding", _dot("embedding", "embedding").alias("nsq")
@@ -395,7 +379,7 @@ def lsh_near_dups(
         x.join(y, "bucket")
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= 0.35)
     )
 
 
@@ -433,13 +417,7 @@ def _knn_pairs(
     )
 
 
-def knn_join(
-    embeddings: DataFrame,
-    k: int = KNN_K,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
+def knn_join(embeddings: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """All-corpus approximate kNN SELF-JOIN — every vector gets its
     top-k cosine neighbors (not just a probe set): the shape semantic
     dedup / clustering / hard-negative mining runs over the whole
@@ -452,27 +430,22 @@ def knn_join(
     multi-consumer caller (the ``--job embed`` CLI) inject an
     already-materialized _knn_pairs frame."""
     if pairs is None:
-        pairs = _knn_pairs(embeddings, bits, max_bucket)
+        pairs = _knn_pairs(embeddings, LSH_SEARCH_BITS, LSH_MAX_BUCKET)
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("vec_id", F.col("rank").cast("long").alias("rank"), "nbr_id", "sim")
     )
 
 
 def hard_negatives(
-    embeddings: DataFrame,
-    k: int = HARDNEG_K,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-    max_sim: float = HARDNEG_MAX_SIM,
-    pairs: DataFrame | None = None,
+    embeddings: DataFrame, pairs: DataFrame | None = None
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (DPR / SimCSE
-    style, public): per anchor, the top-k most-similar in-bucket
-    neighbors whose label DIFFERS from the anchor's. Neighbors at or
-    above ``max_sim`` are excluded as probable false negatives
+    style, public): per anchor, the top-``HARDNEG_K`` most-similar
+    in-bucket neighbors whose label DIFFERS from the anchor's. Neighbors
+    at or above ``HARDNEG_MAX_SIM`` are excluded as probable false negatives
     (mislabeled near-duplicates) — the standard guard in public
     hard-negative pipelines. The label filter runs BEFORE the top-k
     window, so the output is the best-k among negatives, not the
@@ -485,7 +458,7 @@ def hard_negatives(
     (vec_id, label, neg_rank, neg_id, neg_label, sim). ``pairs=`` is
     the shared-build hook (a materialized _knn_pairs frame)."""
     if pairs is None:
-        pairs = _knn_pairs(embeddings, bits, max_bucket)
+        pairs = _knn_pairs(embeddings, LSH_SEARCH_BITS, LSH_MAX_BUCKET)
     own = embeddings.select("vec_id", "label")
     nbr = embeddings.select(
         F.col("vec_id").alias("nbr_id"), F.col("label").alias("neg_label")
@@ -495,13 +468,13 @@ def hard_negatives(
         .join(nbr, "nbr_id")
         .filter(
             (F.col("neg_label") != F.col("label"))
-            & (F.col("sim") < F.lit(max_sim))
+            & (F.col("sim") < F.lit(HARDNEG_MAX_SIM))
         )
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
     return (
         neg.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
+        .filter(F.col("neg_rank") <= HARDNEG_K)
         .select(
             "vec_id", "label",
             F.col("neg_rank").cast("long").alias("neg_rank"),
@@ -516,12 +489,7 @@ PAGERANK_DAMP = 0.85    # spec constant, NOT derived as 1-reset (float)
 
 
 def pagerank_centrality(
-    embeddings: DataFrame,
-    iters: int = PAGERANK_ITERS,
-    k: int = KNN_K,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-    knn: DataFrame | None = None,
+    embeddings: DataFrame, knn: DataFrame | None = None
 ) -> DataFrame:
     """PageRank-style centrality over the approximate-kNN semantic
     graph, with GraphX/Pregel semantics (public): r0 = 1.0,
@@ -545,7 +513,7 @@ def pagerank_centrality(
     injects an already-materialized knn_join frame (the ``--job
     embed`` CLI); the edge checkpoint is then skipped since the
     caller's already cuts the LSH subtree."""
-    base = knn if knn is not None else knn_join(embeddings, k, bits, max_bucket)
+    base = knn if knn is not None else knn_join(embeddings)
     edges = base.select(
         F.col("vec_id").alias("src"), F.col("nbr_id").alias("dst")
     )
@@ -563,7 +531,7 @@ def pagerank_centrality(
         .distinct()
     )
     ranks = nodes.select("node", F.lit(1.0).alias("r"))
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         c = (
             edges.join(ranks, F.col("src") == F.col("node"))
             .join(out, "src")
@@ -649,11 +617,7 @@ def dedup_signal_agreement(
 
 
 def triangle_count(
-    embeddings: DataFrame,
-    k: int = KNN_K,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-    knn: DataFrame | None = None,
+    embeddings: DataFrame, knn: DataFrame | None = None
 ) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over the
     undirected kNN semantic graph — the cohesion signal that separates
@@ -670,7 +634,7 @@ def triangle_count(
     ``knn=`` injects a materialized knn_join frame (the embed CLI);
     the edge list is still checkpointed — it is re-referenced five
     times inside this one plan."""
-    e = knn if knn is not None else knn_join(embeddings, k, bits, max_bucket)
+    e = knn if knn is not None else knn_join(embeddings)
     und = materialize(
         e.select(
             F.least("vec_id", "nbr_id").alias("a"),
@@ -740,11 +704,7 @@ def embedding_near_dups(
 KMEANS_ITERS = 2
 
 
-def kmeans_fit(
-    embeddings: DataFrame,
-    k: int = IVF_N_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-) -> DataFrame:
+def kmeans_fit(embeddings: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """Bounded-iteration distributed Lloyd — the quantizer TRAINING step
     the IVF/PQ stand-ins model as 'offline': at 100 TB a training-data
     pipeline fits its coarse quantizer on its own corpus, and the fit is
@@ -754,7 +714,7 @@ def kmeans_fit(
 
     Deterministic + cross-engine exact by construction:
 
-    * init — the first ``k`` vectors (the same deterministic seed the
+    * init — the first ``IVF_N_CENTROIDS`` vectors (the same deterministic seed the
       stand-in used), elements cast to double;
     * assign — squared-L2 argmin via the order-fixed left fold
       (:func:`_sqdist`), ties to the smaller centroid_id: the existing
@@ -776,7 +736,7 @@ def kmeans_fit(
     rows = embeddings.select(
         F.lit(0).alias("grp"), "vec_id", dcast.alias("v")
     )
-    return _kmeans_core(rows, k, iters).drop("grp")
+    return _kmeans_core(rows, IVF_N_CENTROIDS, iters).drop("grp")
 
 
 def _kmeans_core(rows: DataFrame, k: int, iters: int) -> DataFrame:
@@ -832,10 +792,10 @@ def _kmeans_core(rows: DataFrame, k: int, iters: int) -> DataFrame:
     return cents
 
 
-def kmeans_centroid_rows(embeddings: DataFrame, k: int = IVF_N_CENTROIDS) -> DataFrame:
+def kmeans_centroid_rows(embeddings: DataFrame) -> DataFrame:
     """Fitted centroids flattened to oracle-comparable rows
     (centroid_id, pos, val)."""
-    return kmeans_fit(embeddings, k).select(
+    return kmeans_fit(embeddings).select(
         "centroid_id", F.posexplode("cv").alias("pos", "val")
     ).select("centroid_id", F.col("pos").cast("long").alias("pos"), "val")
 
@@ -879,13 +839,11 @@ def pq_codebook(embeddings: DataFrame) -> DataFrame:
     ).select("sub_id", "code_id", "code_vec")
 
 
-def pq_fit_codebook(
-    embeddings: DataFrame, k: int = PQ_K, iters: int = KMEANS_ITERS
-) -> DataFrame:
+def pq_fit_codebook(embeddings: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """Per-subspace PQ codebook TRAINING: every subspace fits its own
-    ``k`` codewords via the grouped Lloyd core (grp = sub_id) — all M
+    ``PQ_K`` codewords via the grouped Lloyd core (grp = sub_id) — all M
     subspaces train in the same distributed jobs. Init = the m-th
-    subvectors of the first ``k`` vectors, i.e. exactly the
+    subvectors of the first ``PQ_K`` vectors, i.e. exactly the
     :func:`pq_codebook` stand-in, so ``iters=0`` reproduces it and
     Lloyd descent guarantees the fitted codebook's quantization error
     is ≤ the stand-in's (asserted in tests). Returns (sub_id, code_id,
@@ -898,17 +856,17 @@ def pq_fit_codebook(
         "vec_id",
         F.transform("sv", lambda x: x.cast("double")).alias("v"),
     )
-    return _kmeans_core(rows, k, iters).select(
+    return _kmeans_core(rows, PQ_K, iters).select(
         F.col("grp").alias("sub_id"),
         F.col("centroid_id").alias("code_id"),
         F.col("cv").alias("code_vec"),
     )
 
 
-def pq_fit_rows(embeddings: DataFrame, k: int = PQ_K) -> DataFrame:
+def pq_fit_rows(embeddings: DataFrame) -> DataFrame:
     """Fitted PQ codebook flattened to oracle-comparable rows
     (sub_id, code_id, pos, val)."""
-    return pq_fit_codebook(embeddings, k).select(
+    return pq_fit_codebook(embeddings).select(
         "sub_id",
         "code_id",
         F.posexplode("code_vec").alias("pos", "val"),
@@ -946,12 +904,7 @@ def pq_encode(embeddings: DataFrame, codebook: DataFrame | None = None) -> DataF
     )
 
 
-def pq_search(
-    embeddings: DataFrame,
-    n_queries: int = PQ_N_QUERIES,
-    k: int = PQ_TOPK,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
+def pq_search(embeddings: DataFrame, codebook: DataFrame | None = None) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search: per query, a lookup table of
     partial squared distances to every codebook entry (M·K doubles,
     broadcast); a candidate's approximate distance is the sum of its M
@@ -965,7 +918,7 @@ def pq_search(
     engines and partitionings. Emits (q_id, rank, c_id, adc_dist)."""
     cb = pq_codebook(embeddings) if codebook is None else codebook
     enc = pq_encode(embeddings, codebook=cb).select("vec_id", "sub_id", "code_id")
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+    q = embeddings.filter(F.col("vec_id") < PQ_N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.posexplode(_subvecs(F.col("embedding"))).alias("sub_id", "qsv"),
     )
@@ -988,14 +941,12 @@ def pq_search(
     return (
         dists.filter(F.col("_m") == PQ_M)
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_TOPK)
         .select("q_id", F.col("rank").cast("long").alias("rank"), "c_id", "adc_dist")
     )
 
 
-def brute_l2_topk(
-    embeddings: DataFrame, n_queries: int = PQ_N_QUERIES, k: int = PQ_TOPK
-) -> DataFrame:
+def brute_l2_topk(embeddings: DataFrame) -> DataFrame:
     """Exact squared-L2 top-k — the ground truth for the PQ/ADC path
     (which ranks by approximate squared L2, not cosine). Bounded to the
     eval probe set like ann_brute_topk; distances use the order-fixed
@@ -1003,7 +954,7 @@ def brute_l2_topk(
     norms = embeddings.select(
         "vec_id", "embedding", _dot("embedding", "embedding").alias("nsq")
     )
-    q = norms.filter(F.col("vec_id") < n_queries).select(
+    q = norms.filter(F.col("vec_id") < PQ_N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
         F.col("nsq").alias("q_nsq"),
@@ -1026,25 +977,18 @@ def brute_l2_topk(
     w = Window.partitionBy("q_id").orderBy(F.asc("l2"), F.asc("c_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_TOPK)
         .select("q_id", F.col("rank").cast("long").alias("rank"), "c_id")
     )
 
 
-def pq_recall(
-    embeddings: DataFrame,
-    n_queries: int = PQ_N_QUERIES,
-    k: int = PQ_TOPK,
-    codebook: DataFrame | None = None,
-) -> DataFrame:
+def pq_recall(embeddings: DataFrame) -> DataFrame:
     """Recall@k of the PQ/ADC search against the exact-L2 ground truth
     — quantization loss measured the way a deployment reports it. Same
     bounded-eval shape as :func:`ann_recall`."""
-    truth = brute_l2_topk(embeddings, n_queries, k).select("q_id", "c_id")
-    approx = pq_search(embeddings, n_queries, k, codebook=codebook).select(
-        "q_id", "c_id"
-    )
-    return _recall_against(truth, approx, k)
+    truth = brute_l2_topk(embeddings).select("q_id", "c_id")
+    approx = pq_search(embeddings).select("q_id", "c_id")
+    return _recall_against(truth, approx, PQ_TOPK)
 
 
 # ------------------------------------------------------- semantic dedup
@@ -1052,18 +996,12 @@ SEMDEDUP_THRESHOLD = 0.35  # cosine edge threshold (shared with oracle)
 SEMDEDUP_MAX_CELL = 4096  # hot-cell pair-gen guard (shared with oracle)
 
 
-def semdedup(
-    embeddings: DataFrame,
-    threshold: float = SEMDEDUP_THRESHOLD,
-    n_centroids: int = IVF_N_CENTROIDS,
-    centroids: DataFrame | None = None,
-    max_cell: int = SEMDEDUP_MAX_CELL,
-) -> DataFrame:
+def semdedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, public): the
     corpus is coarse-clustered by the k-means quantizer, candidate
     pairs form ONLY within a cell (a centroid_id equi-join — never
     all-pairs, and data-adaptive where the LSH route is random), edges
-    are exact cosine >= threshold, components come from the shared CC
+    are exact cosine >= SEMDEDUP_THRESHOLD, components come from the shared CC
     operator, and within each dup cluster the KEPT member is the one
     FARTHEST from its centroid (the paper's low-centroid-similarity
     keep policy, which preserves the cluster's most atypical example;
@@ -1071,7 +1009,7 @@ def semdedup(
     any dup cluster: (vec_id, centroid_id, cluster_id, dist, keep).
 
     Scale shape: at 10^12 vectors the quantizer is trained with k large
-    enough that cells stay bounded (k ~ n/10k); ``max_cell`` drops
+    enough that cells stay bounded (k ~ n/10k); ``SEMDEDUP_MAX_CELL`` drops
     oversized cells from PAIR GEN only, so a degenerate centroid can't
     detonate the in-cell self-join. The assignment frame is
     materialized because four branches read it (cell sizes, both pair
@@ -1079,11 +1017,11 @@ def semdedup(
     (A/B 5.0 → 4.0 s)."""
     from .dedup import connected_components
 
-    assign = materialize(ivf_assign(embeddings, n_centroids, centroids))
+    assign = materialize(ivf_assign(embeddings))
     ok = (
         assign.groupBy("centroid_id")
         .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= max_cell)
+        .filter(F.col("_n") <= SEMDEDUP_MAX_CELL)
         .select("centroid_id")
     )
     asg = assign.join(ok, "centroid_id").select("vec_id", "centroid_id")
@@ -1106,7 +1044,7 @@ def semdedup(
         x.join(y, "centroid_id")
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SEMDEDUP_THRESHOLD)
     )
     memb = (
         connected_components(pairs.select("a", "b"))
@@ -1130,11 +1068,7 @@ def semdedup(
 
 
 def knn_label_noise(
-    embeddings: DataFrame,
-    k: int = KNN_K,
-    bits: int = LSH_SEARCH_BITS,
-    max_bucket: int = 256,
-    knn: DataFrame | None = None,
+    embeddings: DataFrame, knn: DataFrame | None = None
 ) -> DataFrame:
     """Confident-learning-style label-noise detection (Northcutt et
     al., public): each labeled vector's k approximate nearest
@@ -1150,9 +1084,9 @@ def knn_label_noise(
     (hot-bucket guarded, never all-pairs); everything after is
     map-side-combinable groupBys on (vec_id, label) + equi-joins
     against the narrow (vec_id, label) projection."""
-    nn = (
-        knn if knn is not None else knn_join(embeddings, k, bits, max_bucket)
-    ).select("vec_id", "nbr_id")
+    nn = (knn if knn is not None else knn_join(embeddings)).select(
+        "vec_id", "nbr_id"
+    )
     own = embeddings.select("vec_id", "label")
     nbr = embeddings.select(
         F.col("vec_id").alias("nbr_id"), F.col("label").alias("nbr_label")

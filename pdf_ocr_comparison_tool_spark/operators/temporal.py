@@ -106,13 +106,9 @@ def asof_join(
     )
 
 
-def last_touch_attribution(
-    events: DataFrame,
-    probe_type: str = ASOF_PROBE_TYPE,
-    touch_type: str = ASOF_TOUCH_TYPE,
-) -> DataFrame:
-    """Last-touch attribution over the event log: each ``probe_type``
-    event (purchase) attributed to the most recent ``touch_type`` event
+def last_touch_attribution(events: DataFrame) -> DataFrame:
+    """Last-touch attribution over the event log: each ``ASOF_PROBE_TYPE``
+    event (purchase) attributed to the most recent ``ASOF_TOUCH_TYPE`` event
     (click) by the same user at or before it — the canonical as-of-join
     consumer. Touches are pre-reduced to one row per (user, second)
     keeping the max event_id (epoch is second-granular, so concurrent
@@ -130,7 +126,7 @@ def last_touch_attribution(
         "value",
     )
     touches = (
-        e.filter(F.col("event_type") == touch_type)
+        e.filter(F.col("event_type") == ASOF_TOUCH_TYPE)
         .groupBy("user_id", "epoch")
         .agg(
             F.max("event_id").alias("click_id"),
@@ -144,7 +140,7 @@ def last_touch_attribution(
             "click_value",
         )
     )
-    probes = e.filter(F.col("event_type") == probe_type).select(
+    probes = e.filter(F.col("event_type") == ASOF_PROBE_TYPE).select(
         "user_id", "epoch", "event_id"
     )
     out = asof_join(probes, touches, key="user_id", ts="epoch", tiebreak=("event_id",))

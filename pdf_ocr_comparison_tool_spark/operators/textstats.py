@@ -250,13 +250,15 @@ def repetition_exprs(text) -> dict:
     }
 
 
+NGRAM_N = 3
 NGRAM_TOP = 100
 
 
-def ngram_counts(docs: DataFrame, n: int = 3, top: int = NGRAM_TOP) -> DataFrame:
-    """Corpus-wide word n-gram count table top-``top`` — the artifact a
-    KenLM-style LM quality filter (CCNet / Gopher pipelines) trains
-    from: per n-gram its total occurrence count and distinct-doc count.
+def ngram_counts(docs: DataFrame) -> DataFrame:
+    """Corpus-wide word ``NGRAM_N``-gram count table top-``NGRAM_TOP``
+    — the artifact a KenLM-style LM quality filter (CCNet / Gopher
+    pipelines) trains from: per n-gram its total occurrence count and
+    distinct-doc count.
 
     Shape: positional n-grams via the shared shifted-zip builder
     (narrow), exploded to rows, groupBy(gram) with map-side combine —
@@ -270,13 +272,13 @@ def ngram_counts(docs: DataFrame, n: int = 3, top: int = NGRAM_TOP) -> DataFrame
 
     grams = docs.select(
         "doc_id",
-        F.explode(_ngrams_col(tokens_col(F.col("text")), n)).alias("gram"),
+        F.explode(_ngrams_col(tokens_col(F.col("text")), NGRAM_N)).alias("gram"),
     )
     counts = grams.groupBy("gram").agg(
         F.count("*").alias("n_occ"),
         F.countDistinct("doc_id").alias("n_docs"),
     )
-    t = counts.orderBy(F.desc("n_occ"), F.asc("gram")).limit(top)
+    t = counts.orderBy(F.desc("n_occ"), F.asc("gram")).limit(NGRAM_TOP)
     w = Window.orderBy(F.desc("n_occ"), F.asc("gram"))
     return t.select(
         F.row_number().over(w).cast("long").alias("rank"),
@@ -290,10 +292,10 @@ HASH_EMBED_DIM = 16  # fixed vector width (power of 2: sign bits are
 #                      the bits ABOVE the bucket bits — independent)
 
 
-def hash_embed(docs: DataFrame, dim: int = HASH_EMBED_DIM) -> DataFrame:
+def hash_embed(docs: DataFrame) -> DataFrame:
     """Feature-hashing vectorizer (the "hashing trick", Weinberger et
     al. ICML'09, public): every token occurrence hashes into one of
-    ``dim`` buckets with a ±1 sign bit; per-document signed bucket
+    ``HASH_EMBED_DIM`` buckets with a ±1 sign bit; per-document signed bucket
     sums are L2-normalized. A fixed-width, vocabulary-free document
     embedding built entirely from relational ops — the cheap-embedding
     path for clustering/dedup when no model embedding exists. Output
@@ -301,7 +303,7 @@ def hash_embed(docs: DataFrame, dim: int = HASH_EMBED_DIM) -> DataFrame:
     dropped, so norm > 0 on every emitted row by construction.
 
     Scale shape: explode tokens → groupBy (doc, dim) signed count
-    (map-side combinable; fan-in per doc ≤ dim) → per-doc norm groupBy
+    (map-side combinable; fan-in per doc ≤ HASH_EMBED_DIM) → per-doc norm groupBy
     + equi-join back. Bucket sums are exact BIGINTs; norm/weight are
     the same double ops on both engine sides (sqrt + one division) so
     values cross the oracle boundary bit-equal."""
@@ -313,8 +315,8 @@ def hash_embed(docs: DataFrame, dim: int = HASH_EMBED_DIM) -> DataFrame:
     h = t.select("doc_id", pack_tape_hash(F.col("tok")).alias("h"))
     rows = h.select(
         "doc_id",
-        (F.col("h") % dim).cast("long").alias("dim"),
-        F.when((F.expr(f"h DIV {dim}") % 2) == 0, F.lit(1))
+        (F.col("h") % HASH_EMBED_DIM).cast("long").alias("dim"),
+        F.when((F.expr(f"h DIV {HASH_EMBED_DIM}") % 2) == 0, F.lit(1))
         .otherwise(F.lit(-1))
         .alias("sign"),
     )
@@ -352,9 +354,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
 VOCAB_COVERAGE_SIZES: tuple[int, ...] = (16, 64, 256)
 
 
-def token_coverage(
-    docs: DataFrame, sizes: tuple[int, ...] | None = None
-) -> DataFrame:
+def token_coverage(docs: DataFrame) -> DataFrame:
     """Vocabulary coverage curve: for each candidate vocabulary size N,
     the fraction of all corpus token OCCURRENCES covered by the N most
     frequent tokens (ties broken token-asc) — the tokenizer-sizing
@@ -366,7 +366,7 @@ def token_coverage(
     candidates), so the only window runs over ≤ kmax rows. Coverage is
     a theta-join of the tiny sizes dim against the tiny ranked frame;
     the int/int division is the sole float op (bit-exact)."""
-    sizes = tuple(sorted(VOCAB_COVERAGE_SIZES if sizes is None else sizes))
+    sizes = tuple(sorted(VOCAB_COVERAGE_SIZES))
     kmax = sizes[-1]
     toks = docs.select(F.explode(tokens_col(F.col("text"))).alias("token"))
     freqs = toks.groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
@@ -432,7 +432,7 @@ SPECTRUM_N = 3  # word n-gram order (unigrams are degenerate on the
                 # postings)
 
 
-def gram_spectrum(docs: DataFrame, n: int = SPECTRUM_N) -> DataFrame:
+def gram_spectrum(docs: DataFrame) -> DataFrame:
     """Zipf frequency-of-frequency spectrum over word n-grams: bucket
     gram frequencies by power of two (bucket = bit-length(count) - 1
     via the portable ``length(bin(c))`` trick — no log crosses the
@@ -445,7 +445,7 @@ def gram_spectrum(docs: DataFrame, n: int = SPECTRUM_N) -> DataFrame:
 
     toks = tokens_col(F.col("text"))
     counts = (
-        docs.select(F.explode(_ngrams_col(toks, n)).alias("gram"))
+        docs.select(F.explode(_ngrams_col(toks, SPECTRUM_N)).alias("gram"))
         .groupBy("gram")
         .agg(F.count("*").alias("c"))
     )
@@ -556,47 +556,42 @@ def quality_score(docs: DataFrame, model: DataFrame) -> DataFrame:
     )
 
 
-def quality_model_exprs(
-    text,
-    weights: list[tuple[str, int]] | None = None,
-    bias_milli: int | None = None,
-    keep_min: float | None = None,
-) -> dict:
+def quality_model_exprs(text) -> dict:
     """The linear scorer as NARROW column expressions (literal weight
     map + one fold) — the streaming twin's form of
     :func:`quality_score`: a stream can't explode-join itself, but the
     model dim is a broadcast-sized constant, so the lookup folds into
     the projection. Identical operands to the batch operator (integer
     occurrence sum, one int/int division), so labels agree exactly."""
-    weights = QUALITY_MODEL_WEIGHTS if weights is None else weights
-    bias = QUALITY_MODEL_BIAS_MILLI if bias_milli is None else bias_milli
-    kmin = QUALITY_SCORE_KEEP_MIN if keep_min is None else keep_min
     toks = tokens_col(text)
     wmap = F.create_map(
-        *[F.lit(v) for tok, w in weights for v in (tok, w)]
+        *[F.lit(v) for tok, w in QUALITY_MODEL_WEIGHTS for v in (tok, w)]
     )
     w_sum = F.aggregate(
         toks,
         F.lit(0).cast("long"),
         lambda acc, x: acc + F.coalesce(wmap[x], F.lit(0)).cast("long"),
     )
-    avg = (F.lit(bias) + w_sum).cast("double") / F.greatest(
+    avg = (F.lit(QUALITY_MODEL_BIAS_MILLI) + w_sum).cast("double") / F.greatest(
         F.size(toks), F.lit(1)
     ).cast("double")
-    return {"avg_score_milli": avg, "model_drop": avg < F.lit(float(kmin))}
+    return {
+        "avg_score_milli": avg,
+        "model_drop": avg < F.lit(float(QUALITY_SCORE_KEEP_MIN)),
+    }
 
 
 TFIDF_TOP = 5
 
 
-def tfidf_keywords(docs: DataFrame, top: int = TFIDF_TOP) -> DataFrame:
+def tfidf_keywords(docs: DataFrame) -> DataFrame:
     """Per-document TF-IDF keyword extraction — the corpus-weighted
     upgrade of the reference's per-page TF keywords (A3): token score =
     tf · N/df with the RATIONAL idf N/df (not ln(N/df): libm log is not
     correctly-rounded, so its last ulp may differ across engines; the
     rational form is one division of identical integers — bit-exact —
     and the per-document ranking is the deliverable, not the scale of
-    the score). Top ``top`` tokens per doc, ties broken token-asc.
+    the score). Top ``TFIDF_TOP`` tokens per doc, ties broken token-asc.
 
     Scale shape: one explode + two map-side-combinable groupBys (tf per
     (doc, token), df per token) + an equi-join + a per-doc top-k window
@@ -628,7 +623,7 @@ def tfidf_keywords(docs: DataFrame, top: int = TFIDF_TOP) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top)
+        .filter(F.col("rank") <= TFIDF_TOP)
         .select("doc_id", F.col("rank").cast("long").alias("rank"),
                 "token", "tf", "df", "tfidf")
     )
@@ -1106,8 +1101,7 @@ COLLOC_MIN_COUNT = 5
 COLLOC_TOP = 100
 
 
-def collocations(docs: DataFrame, min_count: int = COLLOC_MIN_COUNT,
-                 top: int = COLLOC_TOP) -> DataFrame:
+def collocations(docs: DataFrame) -> DataFrame:
     """Collocation mining: the top adjacent token pairs by PMI-style
     LIFT  p(x,y) / (p(x)·p(y))  with a minimum pair count — the
     phrase/multi-word-expression extraction step of an NLP corpus
@@ -1138,7 +1132,7 @@ def collocations(docs: DataFrame, min_count: int = COLLOC_MIN_COUNT,
         / F.col("c_cur").cast("double")
     ) * F.col("n_big").cast("double")
     return (
-        big.filter(F.col("c_big") >= min_count)
+        big.filter(F.col("c_big") >= COLLOC_MIN_COUNT)
         .join(
             uni.select(F.col("tok").alias("prev"), F.col("c_uni").alias("c_prev")),
             "prev",
@@ -1157,13 +1151,14 @@ def collocations(docs: DataFrame, min_count: int = COLLOC_MIN_COUNT,
             lift.alias("lift"),
         )
         .orderBy(F.desc("lift"), F.asc("prev"), F.asc("cur"))
-        .limit(top)
+        .limit(COLLOC_TOP)
     )
 
 
 # inverted-index spec — shared with oracles.inverted_index_sql
 INDEX_DF_MIN = 2
 INDEX_DF_CAP = 64
+INDEX_NGRAM = 3  # postings are word trigrams
 
 
 def _gram_doc_rows(docs: DataFrame, n: int) -> DataFrame:
@@ -1179,11 +1174,10 @@ def _gram_doc_rows(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
-def inverted_index(docs: DataFrame, df_min: int = INDEX_DF_MIN,
-                   df_cap: int = INDEX_DF_CAP, n: int = 3) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """PHRASE-index build (the search-engine / plagiarism-lookup
-    primitive): per word ``n``-gram in the mid-document-frequency band
-    ``df_min <= df <= df_cap``, the sorted posting list of documents
+    primitive): per word ``INDEX_NGRAM``-gram in the mid-document-frequency
+    band ``INDEX_DF_MIN <= df <= INDEX_DF_CAP``, the sorted posting list of documents
     containing it. Head phrases (df > cap) are excluded by spec: their
     postings are unbounded per-group state — a production index shards
     them, a corpus-analytics index (rare-but-shared phrases, the
@@ -1192,11 +1186,13 @@ def inverted_index(docs: DataFrame, df_min: int = INDEX_DF_MIN,
 
     Scale shape: per-doc-distinct (gram, doc) rows, ONE map-side-
     combinable df count, the band filter BEFORE the collect (so
-    per-group arrays are bounded by df_cap at any corpus size), sorted
-    join-back-free assembly."""
-    td = _gram_doc_rows(docs, n)
+    per-group arrays are bounded by INDEX_DF_CAP at any corpus size),
+    sorted join-back-free assembly."""
+    td = _gram_doc_rows(docs, INDEX_NGRAM)
     dfc = td.groupBy("token").agg(F.count("*").alias("df"))
-    keep = dfc.filter((F.col("df") >= df_min) & (F.col("df") <= df_cap))
+    keep = dfc.filter(
+        (F.col("df") >= INDEX_DF_MIN) & (F.col("df") <= INDEX_DF_CAP)
+    )
     postings = F.array_join(
         F.transform(
             F.array_sort(F.collect_list("doc_id")), lambda x: x.cast("string")
@@ -1217,31 +1213,28 @@ INDEX_QUERY_GRAMS = 8   # query set size (top-df banded phrases)
 INDEX_SEARCH_TOPK = 20  # result list length
 
 
-def index_search(
-    docs: DataFrame,
-    q: int = INDEX_QUERY_GRAMS,
-    topk: int = INDEX_SEARCH_TOPK,
-    df_min: int = INDEX_DF_MIN,
-    df_cap: int = INDEX_DF_CAP,
-    n: int = 3,
-) -> DataFrame:
+def index_search(docs: DataFrame) -> DataFrame:
     """Phrase retrieval over the inverted index: a fixed query set (the
-    ``q`` highest-df banded phrases, ties → gram asc — the corpus's
-    most widely shared discriminative phrases) is matched against the
+    ``INDEX_QUERY_GRAMS`` highest-df banded phrases, ties → gram asc —
+    the corpus's most widely shared discriminative phrases) is matched against the
     per-doc-distinct gram rows; each hit document scores the sum of
     rational idf = N/df over its matched phrases (the tfidf_keywords
     no-ln rule), folded in gram order for cross-engine exactness;
-    result = top-k docs by (score desc, doc_id asc) with hit counts.
+    result = top-``INDEX_SEARCH_TOPK`` docs by (score desc, doc_id asc)
+    with hit counts.
 
     Scale shape: the query set is TakeOrdered (no global sort); the
-    retrieval is one equi-join of the q-row broadcast query dim
-    against the gram rows; the candidate set is bounded by q·df_cap
+    retrieval is one equi-join of the broadcast query dim against the
+    gram rows; the candidate set is bounded by
+    INDEX_QUERY_GRAMS·INDEX_DF_CAP
     (≤512 rows at spec) so the final ranking window is bounded by
     SPEC, not by corpus size; N rides a 1-row broadcast."""
-    td = _gram_doc_rows(docs, n)
+    td = _gram_doc_rows(docs, INDEX_NGRAM)
     dfc = td.groupBy("token").agg(F.count("*").alias("df"))
-    band = dfc.filter((F.col("df") >= df_min) & (F.col("df") <= df_cap))
-    queries = band.orderBy(F.desc("df"), F.asc("token")).limit(q)
+    band = dfc.filter(
+        (F.col("df") >= INDEX_DF_MIN) & (F.col("df") <= INDEX_DF_CAP)
+    )
+    queries = band.orderBy(F.desc("df"), F.asc("token")).limit(INDEX_QUERY_GRAMS)
     tot = docs.agg(F.count("*").alias("n_total"))
     hits = (
         td.join(queries, "token")
@@ -1268,7 +1261,7 @@ def index_search(
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= INDEX_SEARCH_TOPK)
         .select(
             F.col("rank").cast("long").alias("rank"),
             "doc_id",
@@ -1337,14 +1330,7 @@ BM25_K1 = 1.2   # TF saturation (Robertson's standard default)
 BM25_B = 0.75   # length-normalization strength
 
 
-def bm25_search(
-    docs: DataFrame,
-    q: int = INDEX_QUERY_GRAMS,
-    topk: int = INDEX_SEARCH_TOPK,
-    df_min: int = INDEX_DF_MIN,
-    df_cap: int = INDEX_DF_CAP,
-    n: int = 3,
-) -> DataFrame:
+def bm25_search(docs: DataFrame) -> DataFrame:
     """BM25 retrieval (Robertson & Spärck Jones, public) over the same
     banded-phrase query set as index_search, adding the two things raw
     idf lacks: TF saturation (k1) and document-length normalization
@@ -1356,24 +1342,26 @@ def bm25_search(
     the per-doc sum folds in gram order (bit-exact).
 
     Scale shape: (doc, gram) TF counts and per-doc lengths are
-    map-side-combinable groupBys; the query dim (q rows) and the
-    (N, Σdl) totals (1 row) broadcast; candidates stay bounded by
-    q·df_cap BY SPEC, so the ranking window never scales with the
-    corpus."""
+    map-side-combinable groupBys; the query dim (INDEX_QUERY_GRAMS rows)
+    and the (N, Σdl) totals (1 row) broadcast; candidates stay bounded
+    by INDEX_QUERY_GRAMS·INDEX_DF_CAP BY SPEC, so the ranking window
+    never scales with the corpus."""
     from .dedup import _ngrams_col
 
     k1p1 = BM25_K1 + 1.0
     one_minus_b = 1.0 - BM25_B
     toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     grams = toks.select(
-        "doc_id", F.explode(_ngrams_col(F.col("toks"), n)).alias("token")
+        "doc_id", F.explode(_ngrams_col(F.col("toks"), INDEX_NGRAM)).alias("token")
     )
     tf = grams.groupBy("doc_id", "token").agg(
         F.count("*").cast("long").alias("tf")
     )
     dfc = tf.groupBy("token").agg(F.count("*").alias("df"))
-    band = dfc.filter((F.col("df") >= df_min) & (F.col("df") <= df_cap))
-    queries = band.orderBy(F.desc("df"), F.asc("token")).limit(q)
+    band = dfc.filter(
+        (F.col("df") >= INDEX_DF_MIN) & (F.col("df") <= INDEX_DF_CAP)
+    )
+    queries = band.orderBy(F.desc("df"), F.asc("token")).limit(INDEX_QUERY_GRAMS)
     dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
     tot = dl.agg(
         F.count("*").cast("long").alias("n_total"),
@@ -1411,7 +1399,7 @@ def bm25_search(
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= INDEX_SEARCH_TOPK)
         .select(
             F.col("rank").cast("long").alias("rank"),
             "doc_id",

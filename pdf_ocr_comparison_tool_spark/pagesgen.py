@@ -137,20 +137,3 @@ def _arr_concat(parts: list[str], d: str) -> str:
     for p in parts[1:]:
         out = f"list_concat({out}, {p})"
     return out
-
-
-def features_exprs(text_col: str, d: str) -> dict[str, str]:
-    """T1-T4 as sorted, '|'-joined strings (array output is awkward for
-    cross-engine value hashing)."""
-
-    def multi(pats: list[str]) -> str:
-        arr = _arr_concat([G.extract_all(text_col, p, d) for p in pats], d)
-        return G.array_join(_arr_sort(_arr_distinct(arr, d), d), "'|'", d)
-
-    ws_stripped = G.replace_all(text_col, r"[ \t\n\x0B\f\r]+", "", d)
-    return {
-        "text_hash": f"md5(lower({ws_stripped}))",
-        "dates_s": multi(G.DATE_RES),
-        "amounts_s": multi(G.AMOUNT_RES),
-        "numbers_s": multi(G.NUMBER_RES),
-    }

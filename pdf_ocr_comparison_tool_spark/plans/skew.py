@@ -7,7 +7,7 @@ partitions receive several heavy docs. Remedies:
 
 * :func:`salted_repartition` — heavy docs (``size(spans)`` above a
   threshold) get a per-doc salt derived from content so they spread
-  across ``salt_n`` partitions; light docs keep salt 0. Because every
+  across ``SALT_N`` partitions; light docs keep salt 0. Because every
   operator in the extraction path is **array-local** (no per-doc
   grouping needed post-extraction), splitting a doc's placement never
   affects results.
@@ -29,17 +29,15 @@ SALT_N = 16
 def salted_repartition(
     docs: DataFrame,
     n_partitions: int,
-    spans_col: str = "spans",
     heavy_threshold: int = HEAVY_SPAN_THRESHOLD,
-    salt_n: int = SALT_N,
 ) -> DataFrame:
     salt = F.when(
-        F.size(spans_col) > heavy_threshold,
+        F.size("spans") > heavy_threshold,
         F.pmod(
             F.conv(
                 F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8), 16, 10
             ).cast("long"),
-            F.lit(salt_n),
+            F.lit(SALT_N),
         ),
     ).otherwise(F.lit(0))
     return (
@@ -49,29 +47,19 @@ def salted_repartition(
     )
 
 
-def span_size_quantiles(docs: DataFrame, spans_col: str = "spans"):
-    """Diagnostic: span-count distribution for tuning the threshold."""
-    return docs.select(F.size(spans_col).alias("n")).agg(
-        F.expr("percentile_approx(n, array(0.5, 0.9, 0.99, 0.999))").alias("q"),
-        F.max("n").alias("max_n"),
-    )
-
-
 SKEW_TOP = 20
 
 
-def key_skew_report(
-    df: DataFrame, key: str, top: int = SKEW_TOP
-) -> DataFrame:
+def key_skew_report(df: DataFrame, key: str) -> DataFrame:
     """Hot-key diagnostic — the report that decides whether a join/agg
-    key needs salting: the ``top`` heaviest values of ``key`` with
+    key needs salting: the ``SKEW_TOP`` heaviest values of ``key`` with
     their row counts, share of all rows (int/int), and times-over-mean
     ratio (cnt·n_keys / n_total — exact BIGINT products, one IEEE
     division). Rank ties break by key value.
 
     Scale shape: one map-side-combinable groupBy(key) → a TakeOrdered
     top-N (never a global sort) + a 1-row totals broadcast; the rank
-    window's input is the ≤top rows themselves."""
+    window's input is the ≤SKEW_TOP rows themselves."""
     from pyspark.sql import Window
 
     per = df.groupBy(F.col(key).cast("string").alias("key_value")).agg(
@@ -81,7 +69,7 @@ def key_skew_report(
         F.sum("n").cast("long").alias("n_total"),
         F.count("*").cast("long").alias("n_keys"),
     )
-    heavy = per.orderBy(F.desc("n"), F.asc("key_value")).limit(top)
+    heavy = per.orderBy(F.desc("n"), F.asc("key_value")).limit(SKEW_TOP)
     w = Window.orderBy(F.desc("n"), F.asc("key_value"))
     return (
         heavy.crossJoin(F.broadcast(tot))

@@ -2306,7 +2306,11 @@ _QUERY_ORDER = [
     "events_sessions",
     "ann_lsh_bucket",
     "ann_ivf_assign",
-    "ann_pq_encode",
+    # match_pages lost its top_k/broadcast_refs parameters (the
+    # windowed top-k path now reads TOP_K itself): that path's direct
+    # surface re-verifies (ann_pq_encode, untouched, rotated to the
+    # tail for it)
+    "match_topk",
     # touched this round (CC loop + relational-argmax rewrites — their
     # r4 rows reflect pre-rewrite code, so they MUST re-verify;
     # emb_dup_clusters' CC path re-proves via dedup_clusters and rides
@@ -2407,7 +2411,7 @@ _QUERY_ORDER = [
     "source_rollup",
     "name_conflict_seq",
     "page_features",
-    "match_topk",
+    "ann_pq_encode",
     "match_summary",
     "dedup_exact_pages",
     "dedup_minhash_lsh",

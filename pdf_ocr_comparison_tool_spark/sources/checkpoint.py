@@ -370,16 +370,13 @@ COMPACT_TARGET_SPANS = 600  # rows per compacted output file (spec
 #                             constant shared with the oracle)
 
 
-def compaction_plan(
-    parts: DataFrame,
-    size_col: str = "n_spans",
-    target: int = COMPACT_TARGET_SPANS,
-) -> DataFrame:
+def compaction_plan(parts: DataFrame) -> DataFrame:
     """Small-file compaction planner — the table-maintenance pass every
     long-lived checkpointed table needs (Iceberg ``rewriteDataFiles``
     bin-pack semantics, public): committed parts are packed IN PART
-    ORDER into output groups of ~``target`` rows each, group id =
-    exclusive-prefix-sum DIV target. Pure integer arithmetic, so the
+    ORDER into output groups of ~``COMPACT_TARGET_SPANS`` rows each
+    (counted in the ``n_spans`` column), group id = exclusive-prefix-sum
+    DIV COMPACT_TARGET_SPANS. Pure integer arithmetic, so the
     plan is deterministic across runs and engines.
 
     Scale note: the input is the parts MANIFEST (one row per data
@@ -392,14 +389,16 @@ def compaction_plan(
 
     p = parts.select(
         F.col("part").cast("long").alias("part"),
-        F.col(size_col).cast("long").alias("n"),
+        F.col("n_spans").cast("long").alias("n"),
     )
     w = Window.orderBy("part").rowsBetween(
         Window.unboundedPreceding, -1
     )
     cum = F.coalesce(F.sum("n").over(w), F.lit(0)).cast("long")
     binned = p.withColumn("_cum", cum).select(
-        "part", "n", F.expr(f"_cum DIV {target}").cast("long").alias("bin_id")
+        "part",
+        "n",
+        F.expr(f"_cum DIV {COMPACT_TARGET_SPANS}").cast("long").alias("bin_id"),
     )
     stats = binned.groupBy("bin_id").agg(
         F.count("*").cast("long").alias("bin_parts"),

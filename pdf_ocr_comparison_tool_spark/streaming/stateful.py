@@ -343,11 +343,7 @@ def _asof_update(
     )
 
 
-def streaming_last_touch(
-    events_stream: DataFrame,
-    probe_type: str = "purchase",
-    touch_type: str = "click",
-) -> DataFrame:
+def streaming_last_touch(events_stream: DataFrame) -> DataFrame:
     """Streaming twin of temporal.last_touch_attribution — per-user
     last-touch attribution as events ARRIVE (the ad-tech streaming
     standard): the state store carries each user's latest touch
@@ -358,14 +354,15 @@ def streaming_last_touch(
     reorder buffer, a semantics change the batch operator has no
     analogue for)."""
     from ..operators.reports import ntz_epoch
+    from ..operators.temporal import ASOF_PROBE_TYPE, ASOF_TOUCH_TYPE
 
     prepared = events_stream.filter(
-        F.col("event_type").isin(probe_type, touch_type)
+        F.col("event_type").isin(ASOF_PROBE_TYPE, ASOF_TOUCH_TYPE)
     ).select(
         "user_id",
         "event_id",
         ntz_epoch("ts").cast("long").alias("epoch"),
-        (F.col("event_type") == probe_type).alias("is_probe"),
+        (F.col("event_type") == ASOF_PROBE_TYPE).alias("is_probe"),
         F.col("value").cast("double").alias("value"),
     )
     return prepared.groupBy("user_id").applyInPandasWithState(

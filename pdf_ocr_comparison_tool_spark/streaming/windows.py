@@ -29,12 +29,12 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def windowed_rollup(events: DataFrame, window: str = "5 minutes") -> DataFrame:
+def windowed_rollup(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window per-type rollup — the streaming form
     of A5/A9; decimal sums keep totals order-exact."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", window), "event_type")
+        .groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
@@ -49,12 +49,12 @@ def windowed_rollup(events: DataFrame, window: str = "5 minutes") -> DataFrame:
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_windows(events: DataFrame) -> DataFrame:
     """Streaming sessionization via session_window — the unbounded twin
     of reports.events_sessions."""
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("session_window.start").alias("s_start"),

@@ -279,16 +279,14 @@ _NOISE = [
 ]
 
 
-def fixture_docs_pandas(
-    n_docs: int = 200, seed: int = 42, skew_frac: float = 0.01
-) -> pd.DataFrame:
+def fixture_docs_pandas(n_docs: int = 200, seed: int = 42) -> pd.DataFrame:
     """Adversarial documents fixture per FIXTURES.md §1 (seeded)."""
     rng = np.random.default_rng(seed)
     rows = []
     median_spans = 8
     for i in range(n_docs):
         doc_id = f"doc_{i:06d}"
-        if i < max(1, int(n_docs * skew_frac)):
+        if i < max(1, int(n_docs * 0.01)):
             n = median_spans * 100  # media-heavy skew doc
             media_p = 0.8
         elif i % 37 == 0:
@@ -338,8 +336,3 @@ FIXTURE_SCHEMA = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
     ]
 )
-
-
-def fixture_docs_df(spark: SparkSession, n_docs: int = 200, seed: int = 42) -> DataFrame:
-    pdf = fixture_docs_pandas(n_docs=n_docs, seed=seed)
-    return spark.createDataFrame(pdf, schema=FIXTURE_SCHEMA)

@@ -106,3 +106,82 @@ def test_one_materialization_mechanism():
     assert checkpoints == ["materialize.py"]
     assert caches == [os.path.join("operators", "matching.py")] * 2
     assert names == []
+
+
+# the oracle side: SQL generators, not operators
+_ORACLE_SIDE = {"oracles.py", "sqlgen.py", "pagesgen.py", "htmlgen.py"}
+
+
+def _caller_trees():
+    """Every file that calls into the package: the package itself, the
+    tests, perfbench and the root scripts."""
+    root = os.path.dirname(PKG)
+    for d in (PKG, os.path.join(root, "tests"), os.path.join(root, "perfbench")):
+        for dirpath, _, names in os.walk(d):
+            for n in names:
+                if n.endswith(".py"):
+                    yield os.path.join(dirpath, n)
+    for n in ("bench.py", "bench_extra.py", "__spark_entry__.py"):
+        if os.path.exists(os.path.join(root, n)):
+            yield os.path.join(root, n)
+
+
+def test_every_defaulted_parameter_is_passed():
+    """Source guard: each defaulted parameter of a module-level package
+    function is passed by some call, so a spec constant is read from
+    its module constant in the body instead of hiding behind a knob no
+    caller turns (the oracle reads the same constant). Calls resolve by
+    function name; an argument that only forwards the caller's own
+    unset parameter does not count, iterated to a fixed point."""
+    trees = {}
+    for path in _caller_trees():
+        with open(path, encoding="utf-8") as fh:
+            trees[path] = ast.parse(fh.read())
+    defaulted = {}  # name -> [(param, positional index or None)]
+    for path, tree in trees.items():
+        rel = os.path.relpath(path, PKG)
+        if rel.startswith("..") or rel in _ORACLE_SIDE:
+            continue
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef):
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+                params += [
+                    (p.arg, None)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ]
+                if params:
+                    defaulted[fn.name] = params
+    calls = []  # (enclosing module-level function, callee, call node)
+    for tree in trees.values():
+        for top in tree.body:
+            encl = top.name if isinstance(top, ast.FunctionDef) else None
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = getattr(f, "id", None) or getattr(f, "attr", None)
+                    if name in defaulted:
+                        calls.append((encl, name, node))
+    unset = {(n, p) for n, ps in defaulted.items() for p, _ in ps}
+    while True:
+        passed = set()
+        for encl, name, call in calls:
+            kw = {k.arg: k.value for k in call.keywords}
+            spread = None in kw or any(
+                isinstance(x, ast.Starred) for x in call.args
+            )
+            for p, i in defaulted[name]:
+                arg = kw.get(p)
+                if arg is None and i is not None and i < len(call.args):
+                    arg = call.args[i]
+                forwarded = isinstance(arg, ast.Name) and (encl, arg.id) in unset
+                if spread or (arg is not None and not forwarded):
+                    passed.add((name, p))
+        still = unset - passed
+        if still == unset:
+            break
+        unset = still
+    assert sorted(unset) == []
