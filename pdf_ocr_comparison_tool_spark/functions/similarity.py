@@ -3,7 +3,9 @@
 The reference dispatches cosine / jaccard / levenshtein
 (content_matcher.py:251-269, default cosine per config.yaml:154):
 
-* **levenshtein** — stays 100% native (`F.levenshtein`, §matching);
+* **levenshtein** — runs in the JVM, never in Python: the bit-parallel
+  kernel (`kernels.levenshtein`, compiled in-session by Spark's Janino)
+  returns exactly the built-in `levenshtein` (§matching);
 * **jaccard** — token-set ∩/∪, also native (`array_intersect` /
   `array_union` over pre-tokenized arrays);
 * **cosine** — TF-vector dot product over tokens. Token frequency
@@ -23,7 +25,7 @@ import re
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -91,13 +93,16 @@ def jaccard_native(tok1: Column, tok2: Column) -> Column:
     )
 
 
-def similarity(t1: Column, t2: Column, algorithm: str = "cosine") -> Column:
+def similarity(
+    spark: SparkSession, t1: Column, t2: Column, algorithm: str = "cosine"
+) -> Column:
     """T12 dispatch (unknown algorithm → cosine, matching the
-    reference's fallback)."""
+    reference's fallback). ``spark`` is the session whose plan reads the
+    column: the levenshtein branch registers its kernel there."""
     from ..operators.matching import _sim_expr
 
     if algorithm == "levenshtein":
-        return _sim_expr(t1, t2)
+        return _sim_expr(spark, t1, t2)
     if algorithm == "jaccard":
         return jaccard_native(
             F.array_distinct(tokenize_udf(t1)), F.array_distinct(tokenize_udf(t2))

@@ -9,7 +9,8 @@ composed DataFrame DAG instead of Python dict indexes:
   J4  bounded nested-loop fallback (first 100 reference pages, by
       (doc_id, page_num) — the reference's "first 100" is its index
       order; we fix a deterministic order) for probes with no candidate
-  J5  fuzzy theta-join: native levenshtein similarity ≥ partial threshold
+  J5  fuzzy theta-join: levenshtein similarity ≥ partial threshold, the
+      distance computed by the bit-parallel JVM kernel (kernels.py)
   J6  top-k per probe (k=5), deterministic tiebreak (sim desc, doc, page)
   J7  best-match left-outer: every voucher page emits exactly one row,
       status banding per T13 (content_matcher.py:345-351), no match →
@@ -23,7 +24,8 @@ Scale notes (100 TB thinking):
 * the fuzzy compare runs ONLY on blocked candidate pairs + the bounded
   fallback — never an unblocked cross join (reference O2/O3 preserved);
 * levenshtein inputs are truncated to 1000 chars (reference O4) which
-  bounds per-pair cost.
+  bounds per-pair cost: at most 16 64-bit words per text code point in
+  the bit-parallel kernel (kernels.py), which runs in the task thread.
 """
 
 from __future__ import annotations
@@ -32,15 +34,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config as C
+from .. import kernels
 from .features import normalize_amount
 
 _PROBE = ["doc_id", "page_num"]
 
 
-def _sim_expr(t1, t2) -> "F.Column":
+def _sim_expr(spark, t1, t2) -> "F.Column":
     """Levenshtein similarity with the reference's truncation + empty
     guards (content_matcher.py:120-161): both empty → 1.0, one empty →
-    0.0, else 1 − dist/max_len over 1000-char prefixes."""
+    0.0, else 1 − dist/max_len over 1000-char prefixes.
+
+    The distance is the bit-parallel kernel (:func:`kernels.levenshtein`,
+    registered on ``spark``, the session whose plan reads the column):
+    exactly the built-in ``levenshtein``, at one 64-bit word per 64 code
+    points of the shorter text instead of one DP cell per pair of code
+    points."""
     a = F.substring(t1, 1, C.LEVENSHTEIN_MAX_CHARS)
     b = F.substring(t2, 1, C.LEVENSHTEIN_MAX_CHARS)
     return (
@@ -48,7 +57,7 @@ def _sim_expr(t1, t2) -> "F.Column":
         .when((F.length(a) == 0) | (F.length(b) == 0), F.lit(0.0))
         .otherwise(
             F.lit(1.0)
-            - F.levenshtein(a, b).cast("double")
+            - kernels.levenshtein(spark, a, b).cast("double")
             / F.greatest(F.length(a), F.length(b)).cast("double")
         )
     )
@@ -377,7 +386,7 @@ def match_pages(
     # J5 — fuzzy similarity on candidate ∪ fallback pairs. Exact length
     # prefilter: lev(a,b) ≥ |len(a)−len(b)|, so sim can only reach the
     # threshold when the length gap is within (1−θ)·maxlen — drop the
-    # rest before the O(n·m) DP. Semantically a no-op (those pairs fail
+    # rest before the distance kernel. Semantically a no-op (those pairs fail
     # the θ filter anyway), so the oracle needs no change.
     # no distinct needed: cand is already distinct and fallback probes
     # are anti-joined out of cand, so the two legs are disjoint (the
@@ -399,7 +408,7 @@ def match_pages(
         scored = pair_scorer(pairs, rest, r).filter(
             F.col("sim") >= partial_threshold
         )
-        return _rank_topk(exact, scored, C.TOP_K)
+        return _rank_topk(exact, scored)
     # candidate leg joins both texts; the fallback leg picks its ref
     # text off the bounded broadcast instead of re-joining r
     joined = cand.join(rest.select(*_PROBE, "text"), _PROBE).join(
@@ -422,8 +431,9 @@ def match_pages(
             <= (1.0 - partial_threshold) * F.greatest(la, lb)
         )
         joined = joined.filter(len_ok)
-        sim_fn = _sim_expr
-    sim = sim_fn(F.col("text"), F.col("t_text"))
+        sim = _sim_expr(joined.sparkSession, F.col("text"), F.col("t_text"))
+    else:
+        sim = sim_fn(F.col("text"), F.col("t_text"))
     if best_only:
         # no sim filter exists below the argmax aggregation, so nothing
         # can push the similarity CASE into a join condition — the
@@ -445,7 +455,7 @@ def match_pages(
         .repartition(*_PROBE)
         .filter(F.col("sim") >= partial_threshold)
     )
-    return _rank_topk(exact, scored, C.TOP_K)
+    return _rank_topk(exact, scored)
 
 
 def _rank_best(
@@ -479,15 +489,15 @@ def _rank_best(
     ).filter(F.col("sim") >= partial_threshold)
 
 
-def _rank_topk(exact: DataFrame, scored: DataFrame, top_k: int) -> DataFrame:
-    """J6 — union exact hits with fuzzy scores, top-k per probe."""
+def _rank_topk(exact: DataFrame, scored: DataFrame) -> DataFrame:
+    """J6 — union exact hits with fuzzy scores, top-``TOP_K`` per probe."""
     all_matches = exact.unionByName(scored)
     w = Window.partitionBy(*_PROBE).orderBy(
         F.desc("sim"), F.asc("t_doc"), F.asc("t_page")
     )
     return (
         all_matches.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+        .filter(F.col("rn") <= C.TOP_K)
     )
 
 

@@ -388,15 +388,13 @@ HARDNEG_K = 3
 HARDNEG_MAX_SIM = 0.95
 
 
-def _knn_pairs(
-    embeddings: DataFrame, bits: int, max_bucket: int
-) -> DataFrame:
+def _knn_pairs(embeddings: DataFrame) -> DataFrame:
     """Directed candidate pairs (vec_id, nbr_id, sim) from the LSH
     bucket self-join — the shared front end of knn_join /
     hard_negatives. Equi-join on bucket, hot-bucket guarded; never
     all-pairs."""
-    b = lsh_bucket(embeddings, bits)
-    small = b.groupBy("bucket").count().filter(F.col("count") <= max_bucket)
+    b = lsh_bucket(embeddings, LSH_SEARCH_BITS)
+    small = b.groupBy("bucket").count().filter(F.col("count") <= LSH_MAX_BUCKET)
     bs = b.join(small.select("bucket"), "bucket")
     norms = embeddings.select(
         "vec_id", "embedding", _dot("embedding", "embedding").alias("nsq")
@@ -430,7 +428,7 @@ def knn_join(embeddings: DataFrame, pairs: DataFrame | None = None) -> DataFrame
     multi-consumer caller (the ``--job embed`` CLI) inject an
     already-materialized _knn_pairs frame."""
     if pairs is None:
-        pairs = _knn_pairs(embeddings, LSH_SEARCH_BITS, LSH_MAX_BUCKET)
+        pairs = _knn_pairs(embeddings)
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
@@ -458,7 +456,7 @@ def hard_negatives(
     (vec_id, label, neg_rank, neg_id, neg_label, sim). ``pairs=`` is
     the shared-build hook (a materialized _knn_pairs frame)."""
     if pairs is None:
-        pairs = _knn_pairs(embeddings, LSH_SEARCH_BITS, LSH_MAX_BUCKET)
+        pairs = _knn_pairs(embeddings)
     own = embeddings.select("vec_id", "label")
     nbr = embeddings.select(
         F.col("vec_id").alias("nbr_id"), F.col("label").alias("neg_label")

@@ -1161,14 +1161,14 @@ INDEX_DF_CAP = 64
 INDEX_NGRAM = 3  # postings are word trigrams
 
 
-def _gram_doc_rows(docs: DataFrame, n: int) -> DataFrame:
-    """Per-doc-distinct (token=word-n-gram, doc_id) rows — the shared
-    front end of inverted_index / index_search."""
+def _gram_doc_rows(docs: DataFrame) -> DataFrame:
+    """Per-doc-distinct (token=word-``INDEX_NGRAM``-gram, doc_id) rows —
+    the shared front end of inverted_index / index_search."""
     from .dedup import _ngrams_col
 
     return docs.select(
         F.explode(
-            F.array_distinct(_ngrams_col(tokens_col(F.col("text")), n))
+            F.array_distinct(_ngrams_col(tokens_col(F.col("text")), INDEX_NGRAM))
         ).alias("token"),
         "doc_id",
     )
@@ -1188,7 +1188,7 @@ def inverted_index(docs: DataFrame) -> DataFrame:
     combinable df count, the band filter BEFORE the collect (so
     per-group arrays are bounded by INDEX_DF_CAP at any corpus size),
     sorted join-back-free assembly."""
-    td = _gram_doc_rows(docs, INDEX_NGRAM)
+    td = _gram_doc_rows(docs)
     dfc = td.groupBy("token").agg(F.count("*").alias("df"))
     keep = dfc.filter(
         (F.col("df") >= INDEX_DF_MIN) & (F.col("df") <= INDEX_DF_CAP)
@@ -1229,7 +1229,7 @@ def index_search(docs: DataFrame) -> DataFrame:
     INDEX_QUERY_GRAMS·INDEX_DF_CAP
     (≤512 rows at spec) so the final ranking window is bounded by
     SPEC, not by corpus size; N rides a 1-row broadcast."""
-    td = _gram_doc_rows(docs, INDEX_NGRAM)
+    td = _gram_doc_rows(docs)
     dfc = td.groupBy("token").agg(F.count("*").alias("df"))
     band = dfc.filter(
         (F.col("df") >= INDEX_DF_MIN) & (F.col("df") <= INDEX_DF_CAP)

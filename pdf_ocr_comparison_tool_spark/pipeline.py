@@ -281,9 +281,7 @@ def _run_job(spark, args, run_id: str) -> dict:
         emb = synth.load_table(spark, args.input, "embeddings").repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
-        pairs = materialize(
-            ss._knn_pairs(emb, ss.LSH_SEARCH_BITS, ss.LSH_MAX_BUCKET)
-        )
+        pairs = materialize(ss._knn_pairs(emb))
         knn = materialize(ss.knn_join(emb, pairs=pairs))
         knn.write.mode("overwrite").parquet(f"{args.output}/knn")
         ss.hard_negatives(emb, pairs=pairs).write.mode("overwrite").parquet(

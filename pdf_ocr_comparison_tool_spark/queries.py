@@ -1163,8 +1163,8 @@ def q_engine_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_similarity_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T12 dispatch (content_matcher.py:251-269): the rn<=2 ranked
     candidate pairs scored through EVERY branch of
-    functions.similarity.similarity(t1, t2, algorithm) — levenshtein,
-    jaccard, cosine, and an unknown algorithm name exercising the
+    functions.similarity.similarity(spark, t1, t2, algorithm) —
+    levenshtein, jaccard, cosine, and an unknown algorithm name exercising the
     reference's else→cosine fallback — over CJK-folded page text, so
     the levenshtein branch stays byte/char-agnostic cross-engine (its
     internal fold is idempotent on folded input)."""
@@ -1191,10 +1191,10 @@ def q_similarity_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(rt, ["t_doc", "t_page"])
         .select(
             "doc_id", "page_num", "t_doc", "t_page",
-            S.similarity(a, b, "levenshtein").alias("sim_levenshtein"),
-            S.similarity(a, b, "jaccard").alias("sim_jaccard"),
-            S.similarity(a, b, "cosine").alias("sim_cosine"),
-            S.similarity(a, b, "no_such_algorithm").alias("sim_default"),
+            S.similarity(spark, a, b, "levenshtein").alias("sim_levenshtein"),
+            S.similarity(spark, a, b, "jaccard").alias("sim_jaccard"),
+            S.similarity(spark, a, b, "cosine").alias("sim_cosine"),
+            S.similarity(spark, a, b, "no_such_algorithm").alias("sim_default"),
         )
     )
 
@@ -2273,8 +2273,6 @@ _QUERY_ORDER = [
     "quality_score",
     "checkpoint_parts",
     "incremental_dedup",
-    "events_funnel",
-    "events_retention",
     # newest fifth-session operators (never driver-verified; swapped in
     # for six twin rows whose sibling implementations hold fresh rows —
     # see the displaced block below)
@@ -2298,12 +2296,10 @@ _QUERY_ORDER = [
     "length_quantiles",
     # rotated back in (r3-green tail of round 4)
     "engine_cascade_stats",
-    "events_session_window",
     "engine_cascade",
     "type_islands",
     "match_best_jaccard",
     "page_top_keywords",
-    "events_sessions",
     "ann_lsh_bucket",
     "ann_ivf_assign",
     # match_pages lost its top_k/broadcast_refs parameters (the
@@ -2332,6 +2328,16 @@ _QUERY_ORDER = [
     "classify_pages",
     "project_detect",
     "doc_majority_type",
+    # J5 now scores with the bit-parallel levenshtein kernel
+    # (kernels.py): the four levenshtein consumers that sat in the tail
+    # re-verify (match_best, match_topk, similarity_dispatch and
+    # match_two_band already sit above; events_funnel, events_retention,
+    # events_session_window and events_sessions, untouched, rotated to
+    # the tail for them)
+    "match_cosine_pairs",
+    "match_summary_wide",
+    "match_merged",
+    "match_summary",
     # ---- displaced from the head for the twelve never-driver-verified
     # queries above (six governance rows + media_captions,
     # filter_funnel, epochs_per_source, shard_assign, funnel_by_source,
@@ -2354,8 +2360,6 @@ _QUERY_ORDER = [
     "ann_lsh_search",
     "ann_ivf_search",
     "lineitem_rollup",
-    "match_cosine_pairs",
-    "match_summary_wide",
     "dedup_exact",
     "emb_near_dups",
     # ---- tail: displaced to make room for the three newest
@@ -2386,7 +2390,6 @@ _QUERY_ORDER = [
     "line_dedup",
     "span_stats",
     "media_manifest",
-    "match_merged",
     "doc_processing_stats",
     "pack_manifest",
     "data_split",
@@ -2412,7 +2415,6 @@ _QUERY_ORDER = [
     "name_conflict_seq",
     "page_features",
     "ann_pq_encode",
-    "match_summary",
     "dedup_exact_pages",
     "dedup_minhash_lsh",
     "dedup_winnow_pairs",
@@ -2500,6 +2502,11 @@ _QUERY_ORDER = [
     "timeline",
     "page_quality",
     "keyword_top",
+    # rotated out of the head for the four J5-kernel consumers
+    "events_funnel",
+    "events_retention",
+    "events_session_window",
+    "events_sessions",
 ]
 
 

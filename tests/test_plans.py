@@ -72,7 +72,11 @@ def test_exact_join_broadcasts_via_aqe_without_hint(spark):
 
     v, r = _featured_roles(spark, SF_DIR)
     ranked = matching.match_pages(v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP)
-    ranked.count()  # execute so AQE finalizes the plan
+    # execute ranked's OWN plan so AQE finalizes it: count() and a noop
+    # write each plan and run a new query around ranked, which leaves
+    # this one unexecuted (isFinalPlan=false) unless a cached subtree
+    # happens to carry a final plan of its own
+    ranked.collect()
     final = ranked._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
     # anchor on the J1 join itself (its condition references text_hash):

@@ -694,7 +694,7 @@ def test_index_search_matches_python_scoring(spark):
     from tests.conftest import SF_DIR_001
 
     docs = synth.load_table(spark, SF_DIR_001, "documents")
-    td = [(r["token"], r["doc_id"]) for r in T._gram_doc_rows(docs, 3).collect()]
+    td = [(r["token"], r["doc_id"]) for r in T._gram_doc_rows(docs).collect()]
     n_total = docs.count()
     df: dict[str, int] = {}
     for tok, _ in td:
@@ -1220,7 +1220,7 @@ def test_hard_negatives_invariants(spark):
     emb = synth.load_table(spark, SF_DIR_001, "embeddings")
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
     cand: dict[int, list[tuple[float, int]]] = {}
-    for r in ss._knn_pairs(emb, ss.LSH_SEARCH_BITS, 256).collect():
+    for r in ss._knn_pairs(emb).collect():
         if (
             labels[r["nbr_id"]] != labels[r["vec_id"]]
             and r["sim"] < ss.HARDNEG_MAX_SIM

@@ -37,7 +37,9 @@ def test_cosine_udf_matches_python(spark):
 def test_jaccard_native_matches_python(spark):
     df = spark.createDataFrame(PAIRS, "t1 string, t2 string")
     got = df.select(
-        "t1", "t2", S.similarity(F.col("t1"), F.col("t2"), "jaccard").alias("sim")
+        "t1",
+        "t2",
+        S.similarity(spark, F.col("t1"), F.col("t2"), "jaccard").alias("sim"),
     ).collect()
     for r in got:
         assert math.isclose(
@@ -48,7 +50,7 @@ def test_jaccard_native_matches_python(spark):
 def test_dispatch_levenshtein(spark):
     df = spark.createDataFrame([("kitten", "sitting")], "t1 string, t2 string")
     r = df.select(
-        S.similarity(F.col("t1"), F.col("t2"), "levenshtein").alias("sim")
+        S.similarity(spark, F.col("t1"), F.col("t2"), "levenshtein").alias("sim")
     ).collect()[0]
     assert math.isclose(r["sim"], 1 - 3 / 7, rel_tol=1e-12)
 
@@ -254,7 +256,7 @@ def test_embed_suite_injection_matches_standalone(spark):
     from tests.conftest import SF_DIR_001
 
     emb = synth.load_table(spark, SF_DIR_001, "embeddings")
-    pairs = SS._knn_pairs(emb, SS.LSH_SEARCH_BITS, 256).cache()
+    pairs = SS._knn_pairs(emb).cache()
     knn = SS.knn_join(emb, pairs=pairs).cache()
     try:
         def key(df):
