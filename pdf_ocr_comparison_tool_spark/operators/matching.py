@@ -68,8 +68,10 @@ REF_PER_KEY_CAP = 50
 
 def jaccard_sim_expr(t1, t2) -> "F.Column":
     """T10 token-set jaccard, natively (tokens = lowercase alnum runs of
-    the CJK-folded text; deterministic both engines)."""
+    the CJK-folded text; deterministic both engines), scored by the one
+    jaccard formula, :func:`functions.similarity.jaccard_native`."""
     from .. import sqlgen as G
+    from ..functions.similarity import jaccard_native
 
     def toks(t):
         folded = F.lower(F.translate(t, G.CJK_FOLD_SRC, G.CJK_FOLD_DST))
@@ -77,15 +79,7 @@ def jaccard_sim_expr(t1, t2) -> "F.Column":
             F.filter(F.split(folded, r"[^a-z0-9@#$%&*]+"), lambda x: x != "")
         )
 
-    a, b = toks(t1), toks(t2)
-    return (
-        F.when((F.size(a) == 0) & (F.size(b) == 0), F.lit(1.0))
-        .when((F.size(a) == 0) | (F.size(b) == 0), F.lit(0.0))
-        .otherwise(
-            F.size(F.array_intersect(a, b)).cast("double")
-            / F.size(F.array_union(a, b)).cast("double")
-        )
-    )
+    return jaccard_native(toks(t1), toks(t2))
 
 
 def cosine_sim_expr(t1, t2) -> "F.Column":
@@ -191,7 +185,7 @@ def cosine_scorer(vt: DataFrame, rt: DataFrame):
         F.sum(F.col("cnt_r") * F.col("cnt_r")).alias("r_nsq")
     )
 
-    def scorer(pairs: DataFrame, vouchers: DataFrame, refs: DataFrame) -> DataFrame:
+    def scorer(pairs: DataFrame) -> DataFrame:
         dots = (
             pairs.join(vt, _PROBE)
             .join(rt, ["t_doc", "t_page", "tok"])
@@ -216,37 +210,27 @@ def match_pages(
     refs: DataFrame,
     partial_threshold: float = C.PARTIAL_THRESHOLD,
     fallback_cap: int = C.FALLBACK_CAP,
-    ref_per_key_cap: int | None = None,
+    ref_per_key_cap: int = REF_PER_KEY_CAP,
     sim_fn=None,
     pair_scorer=None,
-    best_only: bool = False,
 ) -> DataFrame:
     """vouchers/refs: (doc_id, page_num, text, text_hash, dates, amounts).
 
     Returns ranked candidate matches: probe keys + t_doc, t_page, sim,
-    rn (1..TOP_K).
+    rn (1..TOP_K), the top-k window's rows. Best-match consumers take
+    rn = 1 through :func:`best_matches`.
 
-    Scoring contract: either ``pair_scorer(pairs, vouchers', refs')`` —
-    a relational scorer mapping the pair set to (probe, t_doc, t_page,
-    sim) rows (the cosine path) — or ``sim_fn`` over the (text, t_text)
-    column pair (default: levenshtein with its exact length prefilter).
+    Scoring contract: either ``pair_scorer(pairs)`` — a relational
+    scorer mapping the (probe, t_doc, t_page) pair set to (probe, t_doc,
+    t_page, sim) rows (the cosine path) — or ``sim_fn`` over the (text,
+    t_text) column pair (default: levenshtein with its exact length
+    prefilter).
 
-    ``ref_per_key_cap``: None (default) = the reference's EXACT
-    semantics — every index page sharing a blocking key is scored
-    (content_matcher.py:291-304). Pass :data:`REF_PER_KEY_CAP` (the
-    documented scale knob, used by the oracled queries) to bound each
-    blocking key's reference bucket and survive web-scale hot keys.
-
-    ``best_only``: True emits ONLY each probe's rn=1 row (same schema,
-    rn ≡ 1) via a map-side-combinable max_by argmax instead of the
-    top-k row_number window — identical winner and tie-break
-    ((sim desc, t_doc asc, t_page asc); the ordering struct is unique
-    per candidate row, so ties cannot occur), and because no
-    sim-filter exists below the aggregation the θ filter moves AFTER
-    the argmax (equivalent: the argmax row clears θ iff any row does),
-    which also removes the anti-pushdown repartition barrier the
-    windowed path needs. Use for every best-match consumer; keep False
-    when downstream reads rn > 1 (match_topk, rn≤2 pair probes).
+    Every call caps each blocking key's reference bucket at its
+    ``ref_per_key_cap`` (:data:`REF_PER_KEY_CAP`) smallest (t_doc,
+    t_page) pages, so a web-scale hot key cannot blow up the candidate
+    set; a bucket beyond the cap may exclude the true best match
+    (COVERAGE.md deviation #1). The oracles apply the same cap.
     """
     v = vouchers.select(
         "doc_id", "page_num", "text", "text_hash", "dates", "amounts"
@@ -288,11 +272,9 @@ def match_pages(
     # bucket|; cap each blocking key's reference bucket at
     # ref_per_key_cap in deterministic (t_doc, t_page) order — the same
     # bounded-scan idea as the reference's 100-page fallback cap
-    # (content_matcher.py:306), applied per key. The DEFAULT (None) is
-    # the reference's exact semantics — ALL index pages sharing a key
-    # are scored (content_matcher.py:291-304); callers opt into the cap
-    # (REF_PER_KEY_CAP, used by the oracled queries) as the documented
-    # scale knob, accepting that a hot bucket beyond the cap may
+    # (content_matcher.py:306), applied per key. Every call applies it:
+    # unlike the reference, which scores ALL index pages sharing a key
+    # (content_matcher.py:291-304), a hot bucket beyond the cap may
     # exclude the true best match (COVERAGE.md deviation #1).
     #
     # Shape: two-phase salted top-k, NOT a row_number window — a window
@@ -304,8 +286,6 @@ def match_pages(
     _N_SALT = 16
 
     def _cap(df: DataFrame) -> DataFrame:
-        if ref_per_key_cap is None:
-            return df
         pair = F.struct(F.col("t_doc"), F.col("t_page"))
         salt = F.pmod(F.hash("t_doc", "t_page"), F.lit(_N_SALT))
         cell = (
@@ -402,10 +382,7 @@ def match_pages(
                 "pair_scorer path requires partial_threshold > 0 "
                 "(zero-similarity pairs are omitted, not scored)"
             )
-        pairs = cand.unionByName(fallback)
-        if best_only:
-            return _rank_best(exact, pair_scorer(pairs, rest, r), partial_threshold)
-        scored = pair_scorer(pairs, rest, r).filter(
+        scored = pair_scorer(cand.unionByName(fallback)).filter(
             F.col("sim") >= partial_threshold
         )
         return _rank_topk(exact, scored)
@@ -434,15 +411,6 @@ def match_pages(
         sim = _sim_expr(joined.sparkSession, F.col("text"), F.col("t_text"))
     else:
         sim = sim_fn(F.col("text"), F.col("t_text"))
-    if best_only:
-        # no sim filter exists below the argmax aggregation, so nothing
-        # can push the similarity CASE into a join condition — the
-        # aggregation boundary replaces the repartition barrier below
-        return _rank_best(
-            exact,
-            joined.select(*_PROBE, "t_doc", "t_page", sim.alias("sim")),
-            partial_threshold,
-        )
     # The repartition between the sim projection and the θ filter is a
     # deliberate barrier: without it Catalyst collapses filter+project
     # and pushes the similarity CASE into the hash-join condition,
@@ -456,37 +424,6 @@ def match_pages(
         .filter(F.col("sim") >= partial_threshold)
     )
     return _rank_topk(exact, scored)
-
-
-def _rank_best(
-    exact: DataFrame, raw: DataFrame, partial_threshold: float
-) -> DataFrame:
-    """Best match per probe without a window: max_by over the ordering
-    struct (sim, −t_doc, −t_page) — lexicographically identical to the
-    top-k window's (sim desc, t_doc asc, t_page asc) first row, unique
-    per candidate so no tie exists — then the θ filter on the winner
-    (the winner clears θ iff any row does, so filtering after the
-    argmax is equivalent to pre-filtering the candidates). The
-    aggregation is map-side combinable: a hot probe's candidates
-    reduce per map partition instead of sorting on one reducer."""
-    allrows = exact.unionByName(raw)
-    ordk = F.struct(
-        F.col("sim").alias("s"),
-        (-F.col("t_doc")).alias("nd"),
-        (-F.col("t_page")).alias("np"),
-    )
-    m = allrows.groupBy(*_PROBE).agg(
-        F.max_by(
-            F.struct(F.col("t_doc"), F.col("t_page"), F.col("sim")), ordk
-        ).alias("m")
-    )
-    return m.select(
-        *_PROBE,
-        F.col("m.t_doc").alias("t_doc"),
-        F.col("m.t_page").alias("t_page"),
-        F.col("m.sim").alias("sim"),
-        F.lit(1).alias("rn"),
-    ).filter(F.col("sim") >= partial_threshold)
 
 
 def _rank_topk(exact: DataFrame, scored: DataFrame) -> DataFrame:
@@ -515,52 +452,38 @@ def with_matched_keywords(
 ) -> DataFrame:
     """Emit the reference's ``matched_keywords`` output column
     (content_matcher.py:353-356: intersection of the two pages' keyword
-    sets; empty for 未找到): joins the per-page ``kw`` arrays back onto
-    the best rows and intersects. Adds ``matched_kw_arr`` (sorted array,
-    consumed by the merge union) and ``matched_kw`` ('|'-joined string,
-    the report column).
-
-    When ``best`` already carries a ``v_kw`` column (the
-    ``best_matches(..., carry_kw=True)`` path), the voucher-side join
-    is skipped — one broadcast join fewer in every match query."""
+    sets; empty for 未找到): joins both pages' ``kw`` arrays back onto
+    the :func:`best_matches` rows and intersects. Adds
+    ``matched_kw_arr`` (sorted array, consumed by the merge union) and
+    ``matched_kw`` ('|'-joined string, the report column)."""
+    vk = vouchers.select(*_PROBE, F.col("kw").alias("v_kw"))
     rk = refs.select(
         F.col("doc_id").alias("t_doc"),
         F.col("page_num").alias("t_page"),
         F.col("kw").alias("r_kw"),
     )
-    if "v_kw" in best.columns:
-        b = best
-    else:
-        b = best.join(
-            vouchers.select(*_PROBE, F.col("kw").alias("v_kw")), _PROBE, "left"
-        )
     arr = F.when(
         F.col("t_doc").isNull(), F.array().cast("array<string>")
     ).otherwise(F.array_sort(F.array_intersect("v_kw", "r_kw")))
     return (
-        b.join(rk, ["t_doc", "t_page"], "left")
+        best.join(vk, _PROBE, "left")
+        .join(rk, ["t_doc", "t_page"], "left")
         .withColumn("matched_kw_arr", arr)
         .withColumn("matched_kw", F.array_join("matched_kw_arr", "|"))
         .drop("v_kw", "r_kw")
     )
 
 
-def best_matches(
-    vouchers: DataFrame, ranked: DataFrame, carry_kw: bool = False
-) -> DataFrame:
-    """J7 — exactly one output row per voucher page; unmatched pages get
-    (未找到, sim 0.0) per content_matcher.py:320-351.
-
-    ``carry_kw=True`` rides the voucher ``kw`` array through the
-    left join as ``v_kw`` (dropped again by ``with_matched_keywords``),
-    saving that function's voucher-side join — the voucher frame is
-    read here anyway."""
+def best_matches(vouchers: DataFrame, ranked: DataFrame) -> DataFrame:
+    """J7 — exactly one output row per voucher page: the rn = 1 row of
+    :func:`match_pages`' top-k window, left-joined onto the voucher
+    pages; unmatched pages get (未找到, sim 0.0) per
+    content_matcher.py:320-351."""
     best = ranked.filter(F.col("rn") == 1).select(
         *_PROBE, "t_doc", "t_page", "sim"
     )
-    carry = [F.col("kw").alias("v_kw")] if carry_kw else []
     return (
-        vouchers.select(*_PROBE, *carry)
+        vouchers.select(*_PROBE)
         .join(best, _PROBE, "left")
         .select(
             *_PROBE,
@@ -570,6 +493,5 @@ def best_matches(
             F.when(F.col("t_doc").isNull(), F.lit(C.STATUS_NOT_FOUND))
             .otherwise(status_band(F.col("sim")))
             .alias("status"),
-            *([F.col("v_kw")] if carry_kw else []),
         )
     )

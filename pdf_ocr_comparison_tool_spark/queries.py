@@ -232,10 +232,9 @@ def _featured_from_pages(spark: SparkSession, pages: DataFrame):
     closes (or is garbage-collected, unscoped): see materialize.py."""
     # the driver parquet is a single file → one input partition; the
     # per-page feature projections below (regex features, keyword
-    # top-N, TF maps for cosine) are the heavy narrow work, so spread
-    # the rows across the executors BEFORE projecting (at real scale
-    # the scan already has thousands of splits and this is a no-op
-    # round-robin)
+    # top-N) are the heavy narrow work, so spread the rows across the
+    # executors BEFORE projecting (at real scale the scan already has
+    # thousands of splits and this is a no-op round-robin)
     pages = pages.repartition(spark.sparkContext.defaultParallelism)
     f = features.add_features(pages).withColumn(
         "amounts",
@@ -282,10 +281,7 @@ def q_match_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1-J7 staged similarity join, best match per voucher page, with
     the matched-keywords intersection column (content_matcher.py:353-356)."""
     v, r = _featured_roles(spark, sf_dir)
-    ranked = matching.match_pages(
-        v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True
-    )
-    best = matching.best_matches(v, ranked, carry_kw=True)
+    best = matching.best_matches(v, matching.match_pages(v, r))
     return matching.with_matched_keywords(best, v, r).drop("matched_kw_arr")
 
 
@@ -298,10 +294,9 @@ def q_match_best_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm (token-set ∩/∪) — the engine-comparison surface."""
     v, r = _featured_roles(spark, sf_dir)
     ranked = matching.match_pages(
-        v, r, sim_fn=matching.jaccard_sim_expr, partial_threshold=0.3,
-        ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True,
+        v, r, sim_fn=matching.jaccard_sim_expr, partial_threshold=0.3
     )
-    best = matching.best_matches(v, ranked, carry_kw=True)
+    best = matching.best_matches(v, ranked)
     return matching.with_matched_keywords(best, v, r).drop("matched_kw_arr")
 
 
@@ -339,12 +334,9 @@ def q_match_best_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranked = matching.match_pages(
-        v,
-        r,
-        pair_scorer=matching.cosine_scorer(vt, rt),
-        ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True,
+        v, r, pair_scorer=matching.cosine_scorer(vt, rt)
     )
-    best = matching.best_matches(v, ranked, carry_kw=True)
+    best = matching.best_matches(v, ranked)
     return matching.with_matched_keywords(best, v, r).drop("matched_kw_arr")
 
 
@@ -353,7 +345,7 @@ def q_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 as an oracled output: the full top-5 candidate list per
     voucher page (content_matcher.py:315-318)."""
     v, r = _featured_roles(spark, sf_dir)
-    ranked = matching.match_pages(v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP)
+    ranked = matching.match_pages(v, r)
     return ranked.select(
         "doc_id", "page_num",
         F.col("rn").cast("long").alias("rn"),
@@ -367,13 +359,7 @@ def q_match_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-island matched-keyword union (content_matcher.py:493-497)."""
     v, r = _featured_roles(spark, sf_dir)
     best = matching.with_matched_keywords(
-        matching.best_matches(
-            v,
-            matching.match_pages(
-                v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True
-            ),
-            carry_kw=True,
-        ), v, r
+        matching.best_matches(v, matching.match_pages(v, r)), v, r
     )
     return merge.merge_page_matches(best, keywords=True).withColumn(
         "island", F.col("island").cast("long")
@@ -407,12 +393,7 @@ def match_summary_from_best(best: DataFrame) -> DataFrame:
 def q_match_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 match status rollup with match rate."""
     v, r = _featured_roles(spark, sf_dir)
-    best = matching.best_matches(
-        v,
-        matching.match_pages(
-            v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True
-        ),
-    )
+    best = matching.best_matches(v, matching.match_pages(v, r))
     return match_summary_from_best(best)
 
 
@@ -421,12 +402,7 @@ def q_match_summary_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 as the reference's one-row summary dict
     (content_matcher.py:385-407): per-status totals + match_rate."""
     v, r = _featured_roles(spark, sf_dir)
-    best = matching.best_matches(
-        v,
-        matching.match_pages(
-            v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True
-        ),
-    )
+    best = matching.best_matches(v, matching.match_pages(v, r))
     is_ = lambda s: F.count(F.when(F.col("status") == s, 1))  # noqa: E731
     return best.agg(
         F.count("*").alias("total_pages"),
@@ -1165,25 +1141,22 @@ def q_similarity_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs scored through EVERY branch of
     functions.similarity.similarity(spark, t1, t2, algorithm) —
     levenshtein, jaccard, cosine, and an unknown algorithm name exercising the
-    reference's else→cosine fallback — over CJK-folded page text, so
-    the levenshtein branch stays byte/char-agnostic cross-engine (its
-    internal fold is idempotent on folded input)."""
+    reference's else→cosine fallback — over the CJK-folded page text
+    the featured roles already hold, so the levenshtein branch stays
+    byte/char-agnostic cross-engine (its internal fold is idempotent on
+    folded input)."""
     from .functions import similarity as S
 
     v, r = _featured_roles(spark, sf_dir)
-    ranked = matching.match_pages(v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP)
+    ranked = matching.match_pages(v, r)
     pairs = ranked.filter(F.col("rn") <= 2).select(
         "doc_id", "page_num", "t_doc", "t_page"
     )
-    pages = synth.pages_df(spark, sf_dir)
-    folded = F.translate("text", G.CJK_FOLD_SRC, G.CJK_FOLD_DST)
-    vt = pages.filter(F.col("role") == "voucher").select(
-        "doc_id", "page_num", folded.alias("v_text")
-    )
-    rt = pages.filter(F.col("role") == "reference").select(
+    vt = v.select("doc_id", "page_num", F.col("text").alias("v_text"))
+    rt = r.select(
         F.col("doc_id").alias("t_doc"),
         F.col("page_num").alias("t_page"),
-        folded.alias("r_text"),
+        F.col("text").alias("r_text"),
     )
     a, b = F.col("v_text"), F.col("r_text")
     return (
@@ -1205,10 +1178,7 @@ def q_match_two_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     (run_ocr.py:258,270): strictly-above-0.75 → 匹配, else 部分匹配;
     pages with no surviving candidate → 未匹配."""
     v, r = _featured_roles(spark, sf_dir)
-    ranked = matching.match_pages(
-        v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP, best_only=True
-    )
-    best = matching.best_matches(v, ranked)
+    best = matching.best_matches(v, matching.match_pages(v, r))
     band2 = (
         F.when(F.col("status") == C.STATUS_NOT_FOUND, F.lit(C.STATUS_TB_NONE))
         .when(F.col("sim") > C.TWO_BAND_THRESHOLD, F.lit(C.STATUS_TB_MATCH))
@@ -1279,7 +1249,7 @@ def q_match_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import similarity as S
 
     v, r = _featured_roles(spark, sf_dir)
-    ranked = matching.match_pages(v, r, ref_per_key_cap=matching.REF_PER_KEY_CAP)
+    ranked = matching.match_pages(v, r)
     pairs = ranked.filter(F.col("rn") <= 2).select("doc_id", "page_num", "t_doc", "t_page")
     pages = synth.pages_df(spark, sf_dir)
     vt = pages.filter(F.col("role") == "voucher").select(

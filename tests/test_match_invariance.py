@@ -71,6 +71,44 @@ def test_null_key_array_keeps_other_blocking_keys(spark):
     assert {(x["t_doc"], x["t_page"]) for x in got} == {(11, 1)}
 
 
+def test_ref_per_key_cap_binds(spark):
+    """One voucher shares a single date key with REF_PER_KEY_CAP + 10
+    reference pages, and its textually best page has the largest
+    (t_doc, t_page): the cap keeps the REF_PER_KEY_CAP smallest pairs,
+    so that page is never returned (COVERAGE.md deviation #1) and the
+    best match is the best among the capped pairs."""
+    cap = matching.REF_PER_KEY_CAP
+    text = "invoice acme corp total due 1250 march"
+    schema = (
+        "doc_id long, page_num int, text string, text_hash string, "
+        "dates array<string>, amounts array<string>"
+    )
+    v = spark.createDataFrame([(1, 1, text, "v1", ["2020-01-01"], [])], schema)
+    refs = [
+        (100 + i, 1, f"{text} {'z' * (2 + i * 7 % 11)}", f"r{i}", ["2020-01-01"], [])
+        for i in range(cap + 9)
+    ]
+    top = (100 + cap + 9, 1, text + "!", "top", ["2020-01-01"], [])
+    r = spark.createDataFrame(refs + [top], schema)
+
+    def sim(t):
+        # every reference text is the voucher text plus a suffix, so
+        # the edit distance is the suffix length
+        return 1.0 - (len(t) - len(text)) / len(t)
+
+    # the excluded page really is the textual best of the whole bucket
+    assert all(sim(top[2]) > sim(x[2]) for x in refs)
+    ranked = matching.match_pages(v, r)
+    got = {(x["t_doc"], x["t_page"]) for x in ranked.collect()}
+    assert (top[0], top[1]) not in got
+    capped = sorted(refs, key=lambda x: (x[0], x[1]))[:cap]
+    want = min(capped, key=lambda x: (-sim(x[2]), x[0], x[1]))
+    best = matching.best_matches(v, ranked).collect()
+    assert [(b["t_doc"], b["t_page"], b["sim"]) for b in best] == [
+        (want[0], want[1], sim(want[2]))
+    ]
+
+
 def test_warm_match_query_compiles_nothing(spark):
     """The codegen cache holds a whole match query's generated classes:
     once warm, a run of the query compiles no class (with Spark's
