@@ -6,43 +6,26 @@ T6/T7 (marker + debug-pattern strip; deepseek_ocr2_engine.py:300-318) and
 F1/F2 (empty/noise line filters; ocr_engine.py:226-228,
 deepseek_ocr2_engine.py:320-341).
 
-Everything here is built-in higher-order column expressions — per-row
-work happens inside whole-stage codegen on the JVM, there is **no
-shuffle and no Python** in this stage. That is the property that makes
-the pipeline embarrassingly parallel at 100 TB: each document's spans
-array is transformed in place within its partition; partition count and
-placement never affect the emitted sequence because the sort key
-``(offset, kind, media_ref, text)`` is a total order per document.
+The per-document work is one JVM kernel, ``extract_spans`` (see
+:mod:`..kernels` and ``ExtractSpans.java``): one call per row, in the
+task thread, with **no shuffle and no Python** in this stage. Built-in
+higher-order functions express the same steps, but Spark evaluates their
+lambdas interpreted (no whole-stage codegen), which made them the hot
+path of every checkpointed job; that chain stays in
+``tests/test_kernels.py`` as the kernel's parity reference. The stage is
+embarrassingly parallel: each document's spans array is rewritten in
+place within its partition; partition count and placement never affect
+the emitted sequence because the sort key ``(offset, kind, media_ref,
+text)`` is a total order per document.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import kernels
 from .. import sqlgen as G
-
-_JRX_MARKER = G.MARKER_RE
-_JRX_BBOX = G.BBOX_RE
-_JRX_DEBUG = G.DEBUG_RE
-
-
-def normalize_text(col: Column) -> Column:
-    """Normalize one span text: strip ``<|...|>`` markers and
-    ``[[x,y,x,y]]`` bbox literals, drop debug/short lines, trim, rejoin.
-    """
-    stripped = F.regexp_replace(
-        F.regexp_replace(col, _JRX_MARKER, ""), _JRX_BBOX, ""
-    )
-    lines = F.split(stripped, "\n")
-    kept = F.filter(
-        lines,
-        lambda ln: (F.length(F.trim(ln)) >= 2)
-        & ~F.lower(F.trim(ln)).rlike(_JRX_DEBUG),
-    )
-    # NB: must be a one-arg lambda — F.transform also offers the element
-    # index, and trim(col, trimStr) would interpret it as trim characters.
-    return F.array_join(F.transform(kept, lambda ln: F.trim(ln)), "\n")
 
 
 def extract_ordered_spans(docs: DataFrame) -> DataFrame:
@@ -50,37 +33,19 @@ def extract_ordered_spans(docs: DataFrame) -> DataFrame:
     (doc_id, spans<kind,text,media_ref,order>) — the byte-equality
     contract of the north rule.
 
-    Steps (all narrow, array-local):
-      1. normalize each text span (media spans keep ``text=''``);
+    Per document (narrow, array-local), in the kernel:
+      1. normalize each text span (media spans keep ``text=''``):
+         strip ``<|...|>`` markers and ``[[x,y,x,y]]`` bbox literals,
+         drop debug/short lines, trim, rejoin;
       2. drop text spans whose normalized text is empty;
-      3. total-order sort by ``(offset, kind, media_ref, text)`` —
-         the struct-field order *is* the sort key, so a plain
-         ``array_sort`` suffices and is partition-invariant;
+      3. total-order sort by ``(offset, kind, media_ref, text)``, so the
+         result is partition-invariant;
       4. reindex ``order = 0..n-1``.
     """
-    normed = F.transform(
-        F.col("spans"),
-        lambda s: F.struct(
-            s["offset"].alias("offset"),
-            s["kind"].alias("kind"),
-            F.coalesce(s["media_ref"], F.lit("")).alias("media_ref"),
-            F.when(s["kind"] == "media", F.lit(""))
-            .otherwise(normalize_text(F.coalesce(s["text"], F.lit(""))))
-            .alias("text"),
-        ),
+    spans = kernels.extract_spans(
+        docs.sparkSession, F.col("spans"), docs.schema["spans"].dataType
     )
-    kept = F.filter(normed, lambda s: (s["kind"] == "media") | (s["text"] != ""))
-    ordered = F.array_sort(kept)
-    final = F.transform(
-        ordered,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.alias("order"),
-        ),
-    )
-    return docs.withColumn("spans", final)
+    return docs.withColumn("spans", spans)
 
 
 def parse_grounded(df: DataFrame) -> DataFrame:
@@ -202,9 +167,9 @@ def pandas_oracle(docs_pdf):
     """
     import re
 
-    marker = re.compile(_JRX_MARKER)
-    bbox = re.compile(_JRX_BBOX)
-    debug = re.compile(_JRX_DEBUG)
+    marker = re.compile(G.MARKER_RE)
+    bbox = re.compile(G.BBOX_RE)
+    debug = re.compile(G.DEBUG_RE)
 
     def norm(t: str) -> str:
         t = bbox.sub("", marker.sub("", t or ""))

@@ -2226,21 +2226,25 @@ _QUERY_ORDER = [
     # whose last official green was round 3 (rotation policy: every
     # query's driver row must be <=1 round old), then the queries whose
     # shared code was touched this round + the flagship core ---
+    # the extraction core became one JVM kernel (kernels.extract_spans):
+    # its consumers re-verify (media_captions, media_phash,
+    # interleaved_packing, checkpoint_parts and compaction_plan already
+    # sit in the head; ten untouched rows rotated to the tail for them)
+    "extract_spans",
+    "extract_fulltext",
+    "span_stats",
+    "span_dedup",
+    "media_manifest",
+    "doc_outline",
+    "interleave_stats",
+    "doc_processing_stats",
+    "source_rollup",
+    "media_decode",
     # new this round
     "bpe_encode",
-    "lm_score",
     "interleaved_packing",
     "similarity_dispatch",
-    "substring_dup",
-    "engine_passthrough",
-    "redact_pages",
-    "cluster_cap_sample",
-    "tfidf_keywords",
-    "length_histogram",
-    "dedup_containment",
-    "gopher_quality",
     "match_two_band",
-    "quality_score",
     "checkpoint_parts",
     "incremental_dedup",
     # newest fifth-session operators (never driver-verified; swapped in
@@ -2341,7 +2345,6 @@ _QUERY_ORDER = [
     # driver's entry() smoke on extract_spans) ----
     "corpus_filter",
     "seq_packing",
-    "extract_fulltext",
     # ---- stable rows verified green in round 4 (extract_spans
     # additionally re-proves every round via the driver's entry()
     # smoke; extract_grounded displaced to the tail-top by bpe_encode —
@@ -2354,13 +2357,8 @@ _QUERY_ORDER = [
     "extract_grounded",
     "bpe_merges",
     "decontaminate",
-    "extract_spans",
-    "media_decode",
     "emb_dup_clusters",
     "line_dedup",
-    "span_stats",
-    "media_manifest",
-    "doc_processing_stats",
     "pack_manifest",
     "data_split",
     "split_summary",
@@ -2381,7 +2379,6 @@ _QUERY_ORDER = [
     "ann_pq_search_fit",
     "emb_knn_join",
     "events_window",
-    "source_rollup",
     "name_conflict_seq",
     "page_features",
     "ann_pq_encode",
@@ -2401,7 +2398,6 @@ _QUERY_ORDER = [
     "gram_novelty",
     "token_coverage",
     "doc_line_trim",
-    "span_dedup",
     "dedup_keep_best",
     "ann_recall",
     "minhash_calibration",
@@ -2433,10 +2429,8 @@ _QUERY_ORDER = [
     "pii_stats",
     "quality_agreement",
     "bm25_search",
-    "interleave_stats",
     "skew_report",
     "zorder_keys",
-    "doc_outline",
     "rate_outliers",
     "active_users",
     "vocab_growth",
@@ -2477,6 +2471,17 @@ _QUERY_ORDER = [
     "events_retention",
     "events_session_window",
     "events_sessions",
+    # rotated out of the head for the ten extraction-kernel consumers
+    "lm_score",
+    "substring_dup",
+    "engine_passthrough",
+    "redact_pages",
+    "cluster_cap_sample",
+    "tfidf_keywords",
+    "length_histogram",
+    "dedup_containment",
+    "gopher_quality",
+    "quality_score",
 ]
 
 

@@ -124,6 +124,10 @@ def get_spark(
         # 100-entry LRU cache never hits on that cyclic pattern, so every
         # warm run would recompile them all
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # a checkpoint's part=* directories are n_parts, metadata scale:
+        # above the default threshold of 32 paths, reading a 64-part
+        # commit back started a 64-task job just to list them
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -113,6 +113,41 @@ def _jobs_in_group(spark, group, fn):
     return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_commit_read_back_runs_no_listing_job(spark):
+    """Reading a fresh 64-part commit's stats back lists its part=*
+    directories on the driver: no 64-task listing job runs, and the
+    commit runs one job fewer than under Spark's default discovery
+    threshold (32 paths)."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    docs = synth.spans_df(spark, SF_DIR)
+    tracker = spark.sparkContext.statusTracker()
+
+    def commit(group):
+        with tempfile.TemporaryDirectory() as out:
+            done, jobs = _jobs_in_group(
+                spark, group,
+                lambda: cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=64),
+            )
+        assert done == 64
+        ids = tracker.getJobIdsForGroup(group)
+        tasks = [
+            tracker.getStageInfo(st).numTasks
+            for j in ids for st in tracker.getJobInfo(j).stageIds
+        ]
+        return jobs, tasks
+
+    jobs, tasks = commit("ckpt-read-back")
+    assert 64 not in tasks, tasks
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        jobs_listed, tasks_listed = commit("ckpt-read-back-listed")
+    finally:
+        spark.conf.set(key, threshold)
+    assert 64 in tasks_listed, tasks_listed
+    assert jobs == jobs_listed - 1, (jobs, jobs_listed)
+
+
 def test_noop_resume_never_reads_input(spark):
     """A resume of a fully committed directory reads only the manifest:
     given a poisoned input (evaluating it raises) it returns 0 and runs

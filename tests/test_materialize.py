@@ -121,7 +121,7 @@ def _caller_trees():
             for n in names:
                 if n.endswith(".py"):
                     yield os.path.join(dirpath, n)
-    for n in ("bench.py", "bench_extra.py", "__spark_entry__.py"):
+    for n in ("bench.py", "__spark_entry__.py"):
         if os.path.exists(os.path.join(root, n)):
             yield os.path.join(root, n)
 
